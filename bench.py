@@ -1384,7 +1384,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     queries = get_all_queries()
 
-    from top_produce_etl_spark.operators.dedup import unpersist_all
+    from top_produce_etl_spark.operators._cache import unpersist_all
 
     spread: dict[str, list[float]] = {}
     cpu_med: dict[str, float] = {}

@@ -20,6 +20,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 
+from top_produce_etl_spark.operators._cache import unpersist_all
 from top_produce_etl_spark.queries import (
     get_all_oracles,
     get_all_queries,
@@ -103,8 +104,6 @@ def main():
     for name in targets:
         if name not in oracles:
             n = queries[name](spark, sf_dir).count()
-            from top_produce_etl_spark.operators.dedup import unpersist_all
-
             unpersist_all()
             note = rows_only_covered.get(name)
             if note is None:
@@ -121,8 +120,6 @@ def main():
             # release per-query persisted frames (dedup/decontam
             # shingle tables) so the 120+-query battery doesn't
             # accumulate cached partitions
-            from top_produce_etl_spark.operators.dedup import unpersist_all
-
             unpersist_all()
         print(f"{name:35s} {'PASS' if ok else 'FAIL'} {msg}")
         failures += 0 if ok else 1

@@ -6,7 +6,6 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from top_produce_etl_spark.operators._cache import unpersist_all
 from top_produce_etl_spark.operators.classifier import (
     score_quasi_logreg,
     train_quasi_logreg,
@@ -37,7 +36,6 @@ def test_training_separates_separable_data(spark, toy):
         .filter(F.col("pred") == F.col("y"))
         .count()
     )
-    unpersist_all()
     assert acc == 40  # linearly separable -> perfect train accuracy
 
 
@@ -52,7 +50,6 @@ def test_training_partitioning_invariance(spark, toy):
         toy.repartition(17), "doc_id", "text", "y",
         n_buckets=16, iters=5, lr=(1, 10),
     ).collect()
-    unpersist_all()
     assert sorted(map(tuple, w1)) == sorted(map(tuple, w17))
 
 
@@ -63,7 +60,6 @@ def test_scores_bounded_and_monotone(spark, toy):
     rows = score_quasi_logreg(
         toy, model, "doc_id", "text", n_buckets=16
     ).collect()
-    unpersist_all()
     assert all(0 <= r["score_micro"] <= 1_000_000 for r in rows)
     assert all(
         r["pred"] == (1 if r["score_micro"] >= 500_000 else 0)
@@ -103,7 +99,6 @@ def test_xxhash64_production_path(spark, toy):
         toy.repartition(9), "doc_id", "text", "y",
         n_buckets=16, iters=4, lr=(1, 10), hash_mode="xxhash64",
     ).collect()
-    unpersist_all()
     assert acc == 40
     assert sorted(map(tuple, w1)) == sorted(map(tuple, w9))
 
@@ -149,7 +144,6 @@ def test_yaml_quality_classifier_filter_matches_direct(spark, toy):
             "left_semi",
         ).collect()
     )
-    unpersist_all()
     key = lambda r: r["doc_id"]  # noqa: E731
     assert sorted(kept, key=key) == sorted(direct, key=key)
     assert len(kept) == 20 and all(r["y"] == 1 for r in kept)
@@ -183,7 +177,6 @@ def test_training_oracle_bit_exact_with_empty_tokens(spark):
             ).collect(),
         )
     )
-    unpersist_all()
     con = duckdb.connect()
     con.execute(
         "CREATE TABLE documents AS SELECT * FROM (VALUES "

@@ -842,7 +842,6 @@ def test_builder_persists_boundary_before_multi_scan_ops(spark, sf_dir):
         {"documents": docs},
     ).count()
     assert len(_cache._PERSISTED) == before + 1  # boundary persisted
-    unpersist_all()
 
 
 def test_yaml_rrf_fuse_shares_hybrid_oracle(spark, sf_dir):
@@ -949,7 +948,8 @@ def test_pipeline_session_releases_boundary_persists(spark, sf_dir):
     """pipeline_session (r9, round-8 advisor): a library caller who
     composes multi-scan ops inside the context manager leaks nothing
     — boundary persists registered during the block are released on
-    exit, including on error."""
+    exit, including on error, and never a frame an outer scope
+    registered."""
     from top_produce_etl_spark.operators import _cache
     from top_produce_etl_spark.plans.builder import pipeline_session
 
@@ -978,6 +978,22 @@ def test_pipeline_session_releases_boundary_persists(spark, sf_dir):
             build_pipeline(spark, spec, {"documents": docs}).count()
             raise ValueError("caller error")
     assert len(_cache._PERSISTED) == before
+
+    # nested scopes: an inner scope releases only its own frames, so
+    # a frame the outer caller persisted survives the inner exit
+    inner_spec = {**spec, "ops": [{"op": "filter", "expr": "n_chars > 1"},
+                                  *spec["ops"][1:]]}
+    with pipeline_session():
+        outer = build_pipeline(spark, spec, {"documents": docs})
+        held = _cache._PERSISTED[-1]
+        with pipeline_session():
+            build_pipeline(spark, inner_spec, {"documents": docs}).count()
+            assert len(_cache._PERSISTED) == before + 2
+        assert _cache._PERSISTED[-1] is held
+        assert held.storageLevel.useDisk  # still in Spark's cache
+        assert outer.count() > 0
+    assert len(_cache._PERSISTED) == before
+    assert not held.storageLevel.useDisk
 
 
 def test_yaml_normalize_dedup_matches_direct(spark, sf_dir):
@@ -1248,7 +1264,6 @@ def test_yaml_preference_curation_matches_handwritten(spark):
             synthesize_preference_pairs(orders), iters=3
         ).collect())
     )
-    unpersist_all()
     assert solo == battery
 
 
@@ -1312,7 +1327,6 @@ def test_yaml_frozen_surprisal_bucket(spark, tmp_path):
         r["doc_id"]: r["ppl_bucket"]
         for r in build_pipeline(spark, spec2, {"docs": corpus}).collect()
     }
-    unpersist_all()
     assert len(grown) == 120
     # append-stability: every reference row keeps its bucket
     assert all(grown[i] == b for i, b in first.items())
@@ -1385,5 +1399,4 @@ def test_yaml_crawl_chain_from_raw_html(spark):
         "left_semi",
     )
     hand_ids = {r["doc_id"] for r in kept.collect()}
-    unpersist_all()
     assert got_ids == hand_ids

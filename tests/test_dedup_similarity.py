@@ -261,13 +261,13 @@ def test_connected_components_raises_on_exhaustion(spark):
 
 
 def test_unpersist_all_releases_dedup_caches(spark):
-    from top_produce_etl_spark.operators import dedup
+    from top_produce_etl_spark.operators._cache import unpersist_all
 
     df = spark.createDataFrame(DOCS, ["doc_id", "text"])
     jaccard_pairs(df, "doc_id", "text", k=5, threshold=0.5).collect()
     minhash_lsh_pairs(df, "doc_id", "text", k=5, threshold=0.5).collect()
-    assert dedup.unpersist_all() >= 2
-    assert dedup.unpersist_all() == 0
+    assert unpersist_all() >= 2
+    assert unpersist_all() == 0
 
 
 def test_portable_composite_hash_signature_parity(spark):
@@ -401,7 +401,6 @@ def test_incremental_neardup_against_persisted_index(spark, sf_dir, tmp_path):
     from top_produce_etl_spark.operators.dedup import (
         incremental_neardup,
         minhash_signature_index,
-        unpersist_all,
     )
 
     docs = load_table(spark, sf_dir, "documents")
@@ -432,7 +431,6 @@ def test_incremental_neardup_against_persisted_index(spark, sf_dir, tmp_path):
     assert not any(r.new_id in fresh_ids and r.jaccard == 1.0 for r in hits)
     # the corpus text is never rescanned: the candidate plan's file
     # scans are the index parquet + nothing from the corpus side
-    unpersist_all()
 
 
 def test_survivors_by_policy(spark):
@@ -843,10 +841,10 @@ def test_containment_catches_subset_jaccard_misses(spark):
     """A short doc quoted whole inside a long one: containment
     (src->dst) reads ~1.0 while Jaccard stays far below any dedup
     threshold — the asymmetric leak mode the operator exists for."""
+    from top_produce_etl_spark.operators._cache import unpersist_all
     from top_produce_etl_spark.operators.dedup import (
         containment_pairs,
         jaccard_pairs,
-        unpersist_all,
     )
 
     short = " ".join(f"q{i}" for i in range(20))
@@ -870,7 +868,6 @@ def test_containment_catches_subset_jaccard_misses(spark):
     jac = jaccard_pairs(
         docs, "doc_id", "text", k=5, threshold=0.5
     ).collect()
-    unpersist_all()
     assert jac == []  # resemblance misses the quote entirely
 
 

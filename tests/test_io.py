@@ -805,6 +805,7 @@ def test_read_quarantine_splits_good_and_bad(spark, tmp_path):
     )
 
     from top_produce_etl_spark.io.sources import read_quarantine
+    from top_produce_etl_spark.operators._cache import pipeline_session
 
     p = tmp_path / "dirty.jsonl"
     p.write_text(
@@ -819,22 +820,22 @@ def test_read_quarantine_splits_good_and_bad(spark, tmp_path):
             StructField("name", StringType()),
         ]
     )
-    good, bad, unpersist = read_quarantine(spark, str(p), schema)
-    assert good.columns == ["id", "name"]
-    assert {r["id"] for r in good.collect()} == {1, 2}
-    rows = bad.collect()
-    bad_lines = [r["_corrupt_record"] for r in rows]
-    assert len(bad_lines) == 2
-    assert "{broken json line" in bad_lines  # raw text preserved
-    # PERMISSIVE salvage: the type-clash row keeps its good field
-    salvaged = {r["name"] for r in rows}
-    assert "type clash" in salvaged
-    # replay contract: every input line is in exactly one leg
-    assert good.count() + bad.count() == 4
-    # release the pinned parse; legs that reference real columns
+    with pipeline_session():
+        good, bad = read_quarantine(spark, str(p), schema)
+        assert good.columns == ["id", "name"]
+        assert {r["id"] for r in good.collect()} == {1, 2}
+        rows = bad.collect()
+        bad_lines = [r["_corrupt_record"] for r in rows]
+        assert len(bad_lines) == 2
+        assert "{broken json line" in bad_lines  # raw text preserved
+        # PERMISSIVE salvage: the type-clash row keeps its good field
+        salvaged = {r["name"] for r in rows}
+        assert "type clash" in salvaged
+        # replay contract: every input line is in exactly one leg
+        assert good.count() + bad.count() == 4
+    # the scope released the pinned parse; legs that reference real columns
     # stay queryable by recompute (corrupt-only prunes — e.g. a bare
     # count() — need the cache, which is exactly why it existed)
-    unpersist()
     assert {r["id"] for r in good.collect()} == {1, 2}
 
 

@@ -45,3 +45,15 @@ def test_kcenter_empty_pool_raises_diagnosable(spark):
     with pytest.raises(ValueError, match="empty candidate pool"):
         k_center_select(df, "id", "embedding", k=2,
                         sample_mod=10_000_019)
+
+
+def test_kcenter_releases_each_superseded_round(spark, sf_dir):
+    """The greedy loop releases each round's persisted state once the
+    next round has materialized: only the candidate pool and the last
+    round's state stay registered for the caller's scope to release."""
+    from top_produce_etl_spark.operators import _cache
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    before = len(_cache._PERSISTED)
+    assert len(k_center_select(emb, "vec_id", "embedding", k=5).collect()) == 5
+    assert len(_cache._PERSISTED) - before <= 2

@@ -48,7 +48,6 @@ def test_training_bit_exact_vs_oracle(spark, corpus):
     model = sorted(
         map(tuple, train_langid(corpus, iters=2, n_buckets=32).collect())
     )
-    unpersist_all()
     con = duckdb.connect()
     con.execute("CREATE TABLE base AS SELECT range AS doc_id FROM range(80)")
     con.execute(
@@ -71,7 +70,6 @@ def test_training_partitioning_invariance(spark, corpus):
         corpus.repartition(1), iters=2, n_buckets=32).collect()))
     w13 = sorted(map(tuple, train_langid(
         corpus.repartition(13), iters=2, n_buckets=32).collect()))
-    unpersist_all()
     assert w1 == w13
 
 
@@ -96,7 +94,6 @@ def test_heldout_generalization(spark):
     )
     n = joined.count()
     good = joined.where(F.col("pred_lang") == F.col("lang_true")).count()
-    unpersist_all()
     assert n == 200 and good >= 0.9 * n
 
 
@@ -140,7 +137,6 @@ def test_xxhash64_production_path(spark, corpus):
                       F.col("lang").alias("lang_true")), "id"
     )
     good = joined.where(F.col("pred_lang") == F.col("lang_true")).count()
-    unpersist_all()
     assert good == 80
 
 
@@ -182,3 +178,14 @@ def test_expr_scorer_matches_aggregate_scorer(spark, corpus):
     )
     assert not re.search(r"\(\d+\) Exchange\b", p), p
     assert "Join" not in p, p
+
+
+def test_confusion_plan_reads_trainer_features_from_cache(spark, sf_dir):
+    """langid_confusion scores from the trainer's persisted per-doc
+    feature arrays; the query must leave them cached for its caller,
+    or the returned lazy plan silently recomputes the features."""
+    from top_produce_etl_spark.queries.langid_q import langid_confusion
+
+    out = langid_confusion(spark, sf_dir)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert re.search(r"InMemoryRelation \[id#\d+L, fx#\d+", plan), plan

@@ -339,7 +339,6 @@ def test_classifier_scoring_single_model_join(spark, sf_dir):
     """Inference = one BROADCAST model join + one per-doc agg — the
     corpus never shuffles against the model."""
     from top_produce_etl_spark.io.sources import load_table
-    from top_produce_etl_spark.operators._cache import unpersist_all
     from top_produce_etl_spark.operators.classifier import (
         score_quasi_logreg,
         train_quasi_logreg,
@@ -353,7 +352,6 @@ def test_classifier_scoring_single_model_join(spark, sf_dir):
         docs, "doc_id", "text", "y", n_buckets=8, iters=1
     )
     p = plan(score_quasi_logreg(docs, model, "doc_id", "text", 8))
-    unpersist_all()
     assert "BroadcastHashJoin" in p, p
     assert "SortMergeJoin" not in p, p
 
@@ -372,9 +370,6 @@ def test_ccnet_buckets_single_tf_scan_shape(spark, sf_dir):
     p = out._sc._jvm.PythonSQLUtils.explainString(
         out._jdf.queryExecution(), "formatted"
     )
-    from top_produce_etl_spark.operators._cache import unpersist_all
-
-    unpersist_all()
     assert "BatchEvalPython" not in p, p
     assert "ntile" in p and "mean_info_micro" in p, p
     # the window's sort keys are the integer score + id, not text
@@ -386,7 +381,6 @@ def test_bt_ratings_no_cartesian(spark):
     """Bradley-Terry iterations: hash joins against the distributed
     ratings only — no cartesian, no broadcast nested loop, no
     row-Python anywhere in the final plan."""
-    from top_produce_etl_spark.operators._cache import unpersist_all
     from top_produce_etl_spark.operators.preferences import bt_ratings
 
     pairs = spark.createDataFrame(
@@ -398,7 +392,6 @@ def test_bt_ratings_no_cartesian(spark):
     p = out._sc._jvm.PythonSQLUtils.explainString(
         out._jdf.queryExecution(), "formatted"
     )
-    unpersist_all()
     assert "CartesianProduct" not in p, p
     assert "BroadcastNestedLoopJoin" not in p, p
     assert "BatchEvalPython" not in p, p

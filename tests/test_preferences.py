@@ -23,7 +23,6 @@ def _rate(spark, rows, iters=3):
         r["item"]: r
         for r in bt_ratings(_pairs(spark, rows), iters=iters).collect()
     }
-    unpersist_all()
     return out
 
 
@@ -62,14 +61,12 @@ def test_partitioning_invariance(spark):
         map(tuple, bt_ratings(
             _pairs(spark, rows).repartition(17)).collect())
     )
-    unpersist_all()
     assert a == b
 
 
 def test_oracle_bit_exact(spark):
     rows = [(2, 1), (1, 0), (2, 0), (0, 2), (1, 2), (2, 1), (1, 0)]
     got = sorted(map(tuple, bt_ratings(_pairs(spark, rows)).collect()))
-    unpersist_all()
     vals = ", ".join(f"({w}, {l})" for w, l in rows)
     sql = bt_ratings_oracle_sql(
         f"SELECT * FROM (VALUES {vals}) t(winner, loser)"

@@ -7,7 +7,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from top_produce_etl_spark.io.sources import load_table
-from top_produce_etl_spark.operators._cache import unpersist_all
 from top_produce_etl_spark.operators.dedup import (
     jaccard_pairs,
     prefix_filter_jaccard_pairs,
@@ -28,7 +27,6 @@ def test_prefix_join_equals_full_join(spark, sf_dir):
             docs, "doc_id", "text", k=5, threshold=(1, 2)
         ).collect()
     }
-    unpersist_all()
     assert pref == full and len(pref) > 0
 
 
@@ -51,7 +49,6 @@ def test_prefix_join_skew_immunity(spark):
     out = prefix_filter_jaccard_pairs(
         docs, "doc_id", "text", k=5, threshold=(1, 3)
     ).collect()
-    unpersist_all()
     pairs = {(r["a_id"], r["b_id"]) for r in out}
     assert (0, 1) in pairs
     # the 58 boilerplate-only docs share ~4 of ~10 shingles pairwise

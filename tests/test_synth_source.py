@@ -95,10 +95,7 @@ def test_minhash_scale_probe_finds_all_planted_pairs(spark):
     band, so recall on them is structural, not probabilistic), and
     the operator must hold throughput at corpus sizes the fixtures
     never reach."""
-    from top_produce_etl_spark.operators.dedup import (
-        minhash_lsh_pairs,
-        unpersist_all,
-    )
+    from top_produce_etl_spark.operators.dedup import minhash_lsh_pairs
 
     df = _read(
         spark, rows=20_000, partitions=32, tokens=54, dup_every=100
@@ -109,6 +106,5 @@ def test_minhash_scale_probe_finds_all_planted_pairs(spark):
             df, "doc_id", "text", k=5, threshold=0.5
         ).collect()
     }
-    unpersist_all()
     planted = {(i, i + 1) for i in range(0, 20_000, 100)}
     assert planted <= pairs

@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from top_produce_etl_spark.operators._cache import persist_tracked
+
 # Canonical fixture tables (TESTDATA.md).
 TABLES = (
     "region",
@@ -402,7 +404,7 @@ def read_quarantine(
     fmt: str = "json",
     corrupt_col: str = "_corrupt_record",
     options: dict | None = None,
-) -> tuple[DataFrame, DataFrame, "Callable[[], None]"]:
+) -> tuple[DataFrame, DataFrame]:
     """Dirty-ingest pattern for semi-structured sources: PERMISSIVE
     parse with corrupt-record capture, split into (good, quarantine).
 
@@ -413,15 +415,14 @@ def read_quarantine(
     fix (same reasoning as the sink's idempotent-append design:
     never drop data you can't re-derive).
 
-    Returns ``(good, bad, unpersist)``: ``good`` has exactly
-    ``schema``'s columns; ``bad`` keeps the FULL row — whatever
-    fields PERMISSIVE salvaged (nulls where parsing failed) plus the
-    verbatim raw line in ``corrupt_col``; ``unpersist`` releases the
-    pinned parse — call it once both legs are materialized, or every
-    looped/repeated ingest accumulates a full cached copy of the
-    landing zone for the session's lifetime. The parsed frame is
-    CACHED before the
-    split (MEMORY_AND_DISK, spilling as needed): Spark refuses any
+    Returns ``(good, bad)``: ``good`` has exactly ``schema``'s
+    columns; ``bad`` keeps the FULL row — whatever fields PERMISSIVE
+    salvaged (nulls where parsing failed) plus the verbatim raw line
+    in ``corrupt_col``. The parsed frame is persisted before the
+    split through ``operators._cache`` (MEMORY_AND_DISK, spilling as
+    needed); materialize both legs inside ``pipeline_session()``, or
+    every looped/repeated ingest accumulates a full cached copy of
+    the landing zone for the session's lifetime. Spark refuses any
     query whose pruned SOURCE schema is only the corrupt column
     (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN), and both
     the bad leg's filter and a caller's ``bad.count()`` prune to
@@ -453,13 +454,9 @@ def read_quarantine(
     )
     for k, v in (options or {}).items():
         reader = reader.option(k, v)
-    df = reader.format(fmt).load(path).cache()
+    df = persist_tracked(reader.format(fmt).load(path))
     good = df.where(F.col(corrupt_col).isNull()).select(
         *[F.col(f) for f in schema.fieldNames()]
     )
     bad = df.where(F.col(corrupt_col).isNotNull())
-
-    def unpersist() -> None:
-        df.unpersist()
-
-    return good, bad, unpersist
+    return good, bad

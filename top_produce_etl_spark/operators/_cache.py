@@ -1,4 +1,5 @@
-"""Shared persisted-DataFrame registry for multi-consumer plans.
+"""The one owner of cache lifetime: persisted-DataFrame registry and
+the caller's release scope.
 
 Iterative operators (dedup signature tables, PageRank/LPA edge
 relations, MMR candidate pools) reference the same base relation
@@ -7,16 +8,32 @@ lineage re-executes that base PER ROUND and per downstream branch —
 an O(rounds) recompute that bench exposed directly (MMR 13 s → ~2 s
 once its pool stopped being rebuilt five times).
 
-The registry keeps the house contract from operators/dedup.py (its
-original home): operators persist what they'll re-read, callers
-release everything with ONE :func:`unpersist_all` after
-materializing the result — caches exist only to share work across
-the consumers of one plan, never across queries. MEMORY_AND_DISK:
-these relations are model/pool/edge-aggregate sized; if one ever
-outgrows memory it spills instead of evicting mid-job.
+The contract has two sides:
+
+- Package code (operators, queries, builder, streaming jobs) only
+  PERSISTS, through :func:`persist_tracked`. It never releases a
+  frame it returns a plan over: the returned DataFrame is lazy, and
+  releasing before the caller's action makes Spark silently
+  recompute every persisted relation. The one exception is
+  :func:`release` of a frame no returned plan reads any more (the
+  previous round of an iterative loop).
+- The CALLER that materializes the result releases, by running the
+  action inside :func:`pipeline_session` (or, for a harness that
+  owns the whole process, with :func:`unpersist_all`).
+
+Caches exist only to share work across the consumers of one plan,
+never across queries. MEMORY_AND_DISK: these relations are
+model/pool/edge-aggregate sized; if one ever outgrows memory it
+spills instead of evicting mid-job.
+
+This module imports only pyspark, so any package module can import
+it at module level without a cycle.
 """
 
 from __future__ import annotations
+
+from contextlib import contextmanager
+from typing import Iterator
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
@@ -31,10 +48,48 @@ def persist_tracked(df: DataFrame) -> DataFrame:
     return df
 
 
-def unpersist_all() -> int:
-    """Release every tracked persist since the last call; returns
-    the number released. Call after materializing the output."""
-    n = len(_PERSISTED)
-    while _PERSISTED:
+def release(df: DataFrame) -> None:
+    """Unpersist one tracked frame and drop it from the registry."""
+    df.unpersist()
+    _PERSISTED[:] = [held for held in _PERSISTED if held is not df]
+
+
+def _release_from(mark: int) -> int:
+    n = len(_PERSISTED) - mark
+    while len(_PERSISTED) > mark:
         _PERSISTED.pop().unpersist()
     return n
+
+
+def unpersist_all() -> int:
+    """Release every tracked persist; returns the number released.
+    For harnesses that own the whole process — library callers use
+    :func:`pipeline_session`."""
+    return _release_from(0)
+
+
+@contextmanager
+def pipeline_session() -> Iterator[None]:
+    """Release scope for callers of the package's lazy plans: frames
+    persisted during the ``with`` block are released on exit, so a
+    library caller can't leak MEMORY_AND_DISK frames across calls.
+    Frames registered before entry are left alone, so an inner scope
+    never drops what an outer caller still needs. (Spark keys its
+    cache by plan: an inner frame with the SAME plan as an outer one
+    shares its cache entry, and releasing it drops that entry.)
+
+    Usage::
+
+        with pipeline_session():
+            out = build_pipeline(spark, spec, tables)
+            rows = out.collect()   # materialize INSIDE the scope
+
+    Materialize inside the block — the persists exist precisely to
+    share work across the plan's consumers; releasing them before the
+    action would silently re-derive every boundary.
+    """
+    mark = len(_PERSISTED)
+    try:
+        yield
+    finally:
+        _release_from(mark)

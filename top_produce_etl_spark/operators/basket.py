@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from top_produce_etl_spark.operators._cache import persist_tracked
+
 SCALE = 1_000_000
 
 
@@ -47,11 +49,8 @@ def pair_rules(
     # bi feeds FOUR consumers (items, the 1-row total, and both
     # self-join sides); unpersisted, Spark re-executes the
     # scan→project→distinct tower per consumer (no cross-subtree
-    # reuse — guide §2.4). Persisted via the house registry; callers
-    # release with unpersist_all after materializing (dedup.py
-    # contract).
-    from top_produce_etl_spark.operators._cache import persist_tracked
-
+    # reuse — guide §2.4). Persisted once; the caller's
+    # pipeline_session releases it (operators/_cache.py).
     bi = persist_tracked(
         df.select(
             F.col(basket_col).alias("b"), F.col(item_col).alias("i")

@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from top_produce_etl_spark.functions.text import tokens
+from top_produce_etl_spark.operators._cache import persist_tracked
 
 
 def word_vocab(df: DataFrame, text_col: str) -> DataFrame:
@@ -126,8 +127,6 @@ def bpe_train(
     in rounds 8-9); per-round deltas append to ``round_clock_times``.
     """
     import time as _time
-
-    from top_produce_etl_spark.operators._cache import persist_tracked
 
     vocab = persist_tracked(
         word_vocab(df, text_col).withColumn("sym", F.split("word", ""))

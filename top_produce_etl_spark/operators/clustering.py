@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from top_produce_etl_spark.operators._cache import persist_tracked, release
+
 
 def _cents_rel(spark, cents: list[tuple[int, list[float]]]) -> DataFrame:
     """The centroid model as a ONE-ROW relation
@@ -502,8 +504,6 @@ def k_center_select(
     sequence that IS the k-center coverage-radius curve (over the
     candidate pool when sampled).
     """
-    from top_produce_etl_spark.operators._cache import persist_tracked
-
     pts = df.select(F.col(id_col), F.col(vec_col))
     if sample_mod:
         from top_produce_etl_spark.functions.portable_hash import (
@@ -512,8 +512,8 @@ def k_center_select(
 
         keyed = f"concat('{sample_salt}', CAST({id_col} AS STRING))"
         pts = pts.where(composite_hash_col(keyed) % sample_mod == 0)
-    # the greedy loop re-reads the pool k times — persist it via the
-    # house registry (callers release with unpersist_all), fanned out
+    # the greedy loop re-reads the pool k times — persist it (the
+    # caller's pipeline_session releases it), fanned out
     # first: the per-round distance scan is pure map-side work and a
     # one-row-group fixture file scans as ONE task (guide §2.5);
     # distances are row-local against literal centers and each pick
@@ -571,7 +571,7 @@ def k_center_select(
             .collect()[0]
         )
         if prev is not None:
-            prev.unpersist()
+            release(prev)
         prev = state
         cvec = [round(float(x), 6) for x in cand[vec_col]]
         rows.append((r, cand[id_col], round(float(cand["__d"]), 6)))

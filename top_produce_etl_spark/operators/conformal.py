@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from top_produce_etl_spark.operators._cache import persist_tracked
 from top_produce_etl_spark.operators.splits import assign_split
 
 _FRACTIONS = {"train": 0.5, "cal": 0.25, "test": 0.25}
@@ -56,17 +57,14 @@ def conformal_intervals(
     n_cal, q_rank) — lo/hi NULL when the finite-sample rank exceeds
     n_cal (see module docstring).
 
-    Caching side effect: the salted-split relation is persisted via
-    the house registry (it feeds two consumers); callers must
-    release with ``operators._cache.unpersist_all()`` after
-    materializing the result — the dedup.py contract."""
+    Caching side effect: the salted-split relation is persisted (it
+    feeds two consumers); materialize the result inside
+    ``operators._cache.pipeline_session()``, which releases it."""
     fractions = fractions or _FRACTIONS
     # labeled feeds BOTH the train aggregate and the calibration
     # slice (single-file fixture scans are one task — guide §2.5/§6:
     # the split-hash CASE is the expensive map-side work here, and
     # unpersisted it is re-evaluated once per consumer tower).
-    from top_produce_etl_spark.operators._cache import persist_tracked
-
     labeled = persist_tracked(
         assign_split(df, key_col, fractions, salt).select(
             *group_cols,

@@ -33,14 +33,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# The persisted-DataFrame registry moved to operators/_cache.py when
-# the iterative graph/MMR operators started needing it too;
-# ``unpersist_all`` is re-exported here unchanged because bench and
-# the oracle harness call it under this module's name.
-from top_produce_etl_spark.operators._cache import (  # noqa: F401
-    persist_tracked as _persist,
-    unpersist_all,
-)
+from top_produce_etl_spark.operators._cache import persist_tracked
 
 
 def _drop_stop_shingles(sh: DataFrame, max_df: int) -> DataFrame:
@@ -121,7 +114,7 @@ def normalized_exact_dedup(
 
 
 def shingle_sets(
-    df: DataFrame, id_col: str, text_col: str, k: int, fan: bool = False
+    df: DataFrame, id_col: str, text_col: str, k: int
 ) -> DataFrame:
     """Per-doc shingle SET as one narrow row: (id, sset
     array<string>). ``array_distinct`` deduplicates within the row,
@@ -136,19 +129,6 @@ def shingle_sets(
     per doc (functions.text.shingles_of note; measured 2.8× here)."""
     from top_produce_etl_spark.functions.text import shingles_of, tokens
 
-    # fan=True parallelizes the shingling when the source scans as
-    # ONE task (one-row-group fixture files — guide §2.5); per-doc
-    # shingle sets are row-local so placement is output-invariant.
-    # Opt-in and currently unused by the shipped queries: fanning the
-    # exact inverted-index path measured WORSE (ngram_jaccard_pairs
-    # 1.0→1.4 s wall, 2.1→12.8 CPU-s) and the min-hash signature path
-    # read as noise across interleaved A/B runs (OPTIMIZATION_r11.md
-    # negative results), so every shipped consumer keeps the narrow
-    # scan; the seam stays for wider synthetic pools.
-    if fan:
-        from top_produce_etl_spark.io.sources import fan_out
-
-        df = fan_out(df)
     toked = df.select(F.col(id_col), tokens(text_col).alias("__toks"))
     return toked.select(
         F.col(id_col),
@@ -194,7 +174,7 @@ def jaccard_pairs(
     partitions for the self-join. With persist the join input stays
     round-robin-partitioned, so the shuffle spreads hot shingles'
     rows and AQE skew-join handling stays available."""
-    sh = _persist(
+    sh = persist_tracked(
         shingle_sets(df, id_col, text_col, k).select(
             F.col(id_col), F.explode("sset").alias("shingle")
         )
@@ -272,7 +252,7 @@ def prefix_filter_jaccard_pairs(
     num, den = threshold
     if not (0 < num <= den):
         raise ValueError(f"threshold {num}/{den} outside (0, 1]")
-    ssets = _persist(shingle_sets(df, id_col, text_col, k))
+    ssets = persist_tracked(shingle_sets(df, id_col, text_col, k))
     sh = ssets.select(F.col(id_col), F.explode("sset").alias("shingle"))
     dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
     w = Window.partitionBy(id_col).orderBy("__df", "shingle")
@@ -426,7 +406,9 @@ def minhash_lsh_pairs(
     :func:`jaccard_pairs` (a_id, b_id, jaccard); equality holds up
     to LSH recall (see module docstring).
     """
-    sig = _persist(minhash_signature_index(df, id_col, text_col, k, num_perm))
+    sig = persist_tracked(
+        minhash_signature_index(df, id_col, text_col, k, num_perm)
+    )
     buckets = band_buckets(sig, id_col, num_perm, rows_per_band)
     left = buckets.select(F.col(id_col).alias("a_id"), "band", "bucket")
     right = buckets.select(F.col(id_col).alias("b_id"), "band", "bucket")
@@ -529,7 +511,7 @@ def simhash_pairs(
     # once PER SIDE — alias-renamed subplans don't hit Spark's
     # ReusedExchange. Measured at sf0.1: 3.1s → 1.2s warm. Same
     # |docs|-row persist shape minhash_lsh_pairs already uses.
-    sig = _persist(
+    sig = persist_tracked(
         simhash_signatures(df, id_col, text_col, hash_col, n_bits)
     )
     width = n_bits // n_chunks
@@ -696,7 +678,7 @@ def incremental_neardup(
             f"minhash_signature_index with num_perm={num_perm} and the "
             "same id column (mismatched k/num_perm silently zeroes recall)"
         )
-    new_sig = _persist(
+    new_sig = persist_tracked(
         minhash_signature_index(new_docs, id_col, text_col, k, num_perm)
     )
     new_buckets = band_buckets(new_sig, id_col, num_perm, rows_per_band)
@@ -1092,7 +1074,7 @@ def containment_pairs(
     directions afterward (a |pairs|-row map, not a second join).
     Output: (src_id, dst_id, containment) for src != dst.
     """
-    sh = _persist(
+    sh = persist_tracked(
         shingle_sets(df, id_col, text_col, k).select(
             F.col(id_col), F.explode("sset").alias("shingle")
         )

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from top_produce_etl_spark.operators._cache import persist_tracked
+
 
 def normalize_edges(
     edges: DataFrame, src: str, dst: str, weight: str
@@ -92,8 +94,6 @@ def pagerank(
     VALUES feed a downstream computation that assumes a probability
     distribution.
     """
-    from top_produce_etl_spark.operators._cache import persist_tracked
-
     # both the transition relation and the node set feed every
     # iteration's plan — persist them once (same rationale as LPA)
     norm = persist_tracked(normalize_edges(edges, src, dst, weight))
@@ -262,8 +262,6 @@ def label_propagation(
     # the edge relation is re-read by EVERY round's join — persist it
     # once or the upstream build (source joins + symmetrize + agg)
     # re-executes O(iterations) times (see operators/_cache.py)
-    from top_produce_etl_spark.operators._cache import persist_tracked
-
     # (measured: an extra repartition("u") before the persist buys
     # nothing here — the |nodes|-sized label vector broadcasts, so
     # the per-round joins never re-shuffle the edge relation; the
@@ -358,10 +356,8 @@ def count_triangles(
     # expensive upstream tower (pair_rules' basket self-join);
     # wedges feeds TWO (its count and the closing join).
     # Unpersisted, Spark re-executes each tower per consumer (guide
-    # §2.4) — persist via the house registry; callers release with
-    # unpersist_all after materializing (dedup.py contract).
-    from top_produce_etl_spark.operators._cache import persist_tracked
-
+    # §2.4) — persist once; the caller's pipeline_session releases
+    # it (operators/_cache.py).
     e = persist_tracked(
         edges.select(
             F.col(a_col).alias("a"), F.col(b_col).alias("b")
@@ -439,8 +435,6 @@ def k_core(
         raise ValueError(f"k must be >= 1, got {k}")
     if max_rounds < 1:
         raise ValueError(f"max_rounds must be >= 1, got {max_rounds}")
-    from top_produce_etl_spark.operators._cache import persist_tracked
-
     # the symmetrizing union references the input TWICE — persist the
     # canonical selection first or an expensive upstream edge build
     # (e.g. a within-order self-join) executes once per branch
@@ -541,8 +535,6 @@ def bfs_distances(
     """
     if max_hops < 0:
         raise ValueError(f"max_hops must be >= 0, got {max_hops}")
-    from top_produce_etl_spark.operators._cache import persist_tracked
-
     e = persist_tracked(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).distinct()
     )
@@ -622,8 +614,6 @@ def local_clustering(
 
     Output: (node, degree, n_triangles, lcc_micro).
     """
-    from top_produce_etl_spark.operators._cache import persist_tracked
-
     canon = persist_tracked(
         edges.select(
             F.least(F.col(a_col), F.col(b_col)).alias("a"),

@@ -231,8 +231,9 @@ def train_langid(
     trainer builds — a scoring pass over the SAME docs can explode
     ``fx`` back to (id, bucket, c) instead of re-deriving the
     char-n-gram features from the corpus (one corpus scan + hash
-    saved; see queries/langid_q.py::langid_confusion). Lives until
-    the caller's unpersist_all.
+    saved; see queries/langid_q.py::langid_confusion). Stays cached
+    until the caller's ``pipeline_session`` exits, so a plan that
+    reads it must be materialized inside that scope.
 
     Per iteration: ONE scan of the persisted per-doc feature arrays
     (every head's z and error computed map-side from literal weight

@@ -38,6 +38,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from top_produce_etl_spark.operators._cache import persist_tracked
+
 
 def _validate(df: DataFrame, minimize: list[str], maximize: list[str]) -> None:
     objectives = list(minimize) + list(maximize)
@@ -102,8 +104,6 @@ def skyline(
     minimize = list(minimize or [])
     maximize = list(maximize or [])
     _validate(df, minimize, maximize)
-
-    from top_produce_etl_spark.operators._cache import persist_tracked
 
     # phase 2 references the pruned candidates TWICE (probe side +
     # broadcast dominator side) — persist once or the upstream

@@ -51,6 +51,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from top_produce_etl_spark.operators._cache import persist_tracked
 from top_produce_etl_spark.operators.similarity import _dec_dot
 
 SUBSPACES = 8
@@ -394,10 +395,6 @@ def pq_topk(
             app_id=corpus.sparkSession.sparkContext.applicationId,
         )
         if cache_key is not None:
-            from top_produce_etl_spark.operators._cache import (
-                persist_tracked,
-            )
-
             c = persist_tracked(c)
         q = (
             _attach_model(
@@ -461,10 +458,6 @@ def pq_topk(
             app_id=corpus.sparkSession.sparkContext.applicationId,
         )
         if cache_key is not None:
-            from top_produce_etl_spark.operators._cache import (
-                persist_tracked,
-            )
-
             c = persist_tracked(c)
         q = queries.select(
             F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")
@@ -828,10 +821,6 @@ def ivfpq_topk(
             app_id=app_id,
         )
         if cache_key is not None:
-            from top_produce_etl_spark.operators._cache import (
-                persist_tracked,
-            )
-
             inv = persist_tracked(inv)
         probes = (
             with_probe_cells(
@@ -896,10 +885,6 @@ def ivfpq_topk(
             app_id=app_id,
         )
         if cache_key is not None:
-            from top_produce_etl_spark.operators._cache import (
-                persist_tracked,
-            )
-
             inv = persist_tracked(inv)
         probes = (
             with_probe_cells(

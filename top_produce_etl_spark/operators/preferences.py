@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from top_produce_etl_spark.operators._cache import persist_tracked
+
 MICRO = 1_000_000
 PICO = 1_000_000_000_000  # MICRO^2: one fixed-point divide per term
 
@@ -77,7 +79,6 @@ def bt_ratings(
             F.sum("a_won").alias("wins_a"),
         )
     )
-    from top_produce_etl_spark.operators._cache import persist_tracked
 
     games = persist_tracked(games)
     totals = persist_tracked(

@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from top_produce_etl_spark.operators._cache import persist_tracked
 from top_produce_etl_spark.operators.joins import maybe_broadcast
 from pyspark.sql.window import Window
 
@@ -197,8 +198,6 @@ def tfidf_top_terms(
     # same two-subtree shape as unigram_surprisal (df rollup + the
     # scoring join both consume tf): persist once instead of
     # re-running the corpus explode+agg per subtree
-    from top_produce_etl_spark.operators._cache import persist_tracked
-
     tf = persist_tracked(tf)
     dfreq = (
         tf.groupBy("term")
@@ -309,10 +308,7 @@ def unigram_surprisal(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     # join; unpersisted, Spark executes the corpus-wide explode+agg
     # TWICE per call (no common-subexpression reuse across subtrees)
     # — measured 14.75 → 8.5 s on the 200k-doc curation stage from
-    # this one persist (house registry; callers release via
-    # unpersist_all after materializing, the dedup.py contract)
-    from top_produce_etl_spark.operators._cache import persist_tracked
-
+    # this one persist (the caller's pipeline_session releases it)
     tf = persist_tracked(tf)
     ct = tf.groupBy("term").agg(F.sum("tfreq").alias("ctotal"))
     total = (
@@ -400,9 +396,8 @@ def bigram_cond_surprisal(
     mean_cond_info_micro).
 
     Caching side effect: the (doc, bigram) tf relation is persisted
-    via the house registry (it feeds three subtrees); callers must
-    release with ``operators._cache.unpersist_all()`` after
-    materializing the result — the dedup.py contract.
+    (it feeds three subtrees); materialize the result inside
+    ``operators._cache.pipeline_session()``, which releases it.
     """
     toks = _tokens(text_col)
     idx = F.sequence(F.lit(1), F.size(toks) - F.lit(1))
@@ -433,8 +428,6 @@ def bigram_cond_surprisal(
     # plans/r11/bigram_surprisal_scores_before.txt: three parallel
     # Scan→Generate→HashAggregate towers). Persist it once, same as
     # unigram_surprisal (guide §2.4 — remove repeated passes).
-    from top_produce_etl_spark.operators._cache import persist_tracked
-
     tf = persist_tracked(tf)
     cb = tf.groupBy("bigram").agg(F.sum("bfreq").alias("cbg"))
     cp = tf.groupBy("prefix").agg(F.sum("bfreq").alias("cpf"))

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from top_produce_etl_spark.operators._cache import persist_tracked
 from top_produce_etl_spark.operators.eventtime import check_interval
 
 
@@ -124,10 +125,8 @@ def audience_overlap(
 
     # gm feeds THREE consumers (sizes + both self-join sides);
     # unpersisted, the scan→project→distinct tower re-executes per
-    # consumer (guide §2.4). House registry; callers release with
-    # unpersist_all after materializing (dedup.py contract).
-    from top_produce_etl_spark.operators._cache import persist_tracked
-
+    # consumer (guide §2.4). The caller's pipeline_session releases
+    # it (operators/_cache.py).
     gm = persist_tracked(
         df.select(
             F.col(group_col).alias("g"), F.col(member_col).alias("m")

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from top_produce_etl_spark.operators._cache import persist_tracked
+
 
 def _dec_dot(a: Column, b: Column) -> Column:
     """Exact-decimal dot product of two float arrays (as double).
@@ -499,14 +501,12 @@ def mmr_topk(
         raise ValueError(f"need 1 <= k <= pool, got k={k}, pool={pool}")
     if rel_weight < 0 or div_weight < 0 or rel_weight + div_weight == 0:
         raise ValueError("weights must be non-negative, not both zero")
-    from top_produce_etl_spark.operators._cache import persist_tracked
-
     micro = lambda c: F.round(c * F.lit(1e6)).cast("long")  # noqa: E731
     # PERSIST the pool and its pairwise sims: every greedy round's
     # plan references both (remaining-set anti-join + max-sim join),
     # so without a persist the corpus-scan candidate stage re-executes
-    # O(k) times — measured 13 s → ~2 s at sf0.1 with k=5. Caller (or
-    # bench/oracle harness) releases via unpersist_all().
+    # O(k) times — measured 13 s → ~2 s at sf0.1 with k=5. The
+    # caller's pipeline_session releases them.
     cands = persist_tracked(
         cosine_topk_bruteforce(
             corpus, queries, id_col, vec_col, k=pool, scoring="decimal"

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from top_produce_etl_spark.operators._cache import persist_tracked
+
 
 def _ngrams(tokens: Column, n: int) -> Column:
     """Word n-grams of a token array (empty when the doc is too
@@ -190,7 +192,6 @@ def curation_funnel(
         quality_score,
     )
     from top_produce_etl_spark.io.sources import fan_out
-    from top_produce_etl_spark.operators._cache import persist_tracked
     from top_produce_etl_spark.operators.retrieval import unigram_surprisal
 
     # The corpus projection feeds THREE subtrees (surprisal explode,
@@ -198,8 +199,8 @@ def curation_funnel(
     # work that would otherwise re-run the scan per subtree — and a
     # one-row-group fixture file scans as ONE task, serializing all
     # of it on one core (guide §2.4 + §2.5). Fan out (scale-gated
-    # no-op on wide scans) and persist once via the house registry
-    # (callers release with unpersist_all — the dedup.py contract).
+    # no-op on wide scans) and persist once (released by the
+    # caller's pipeline_session — operators/_cache.py).
     # Placement-invariant: every signal is row-local, the surprisal
     # aggregates are keyed integer sums, and the id joins are exact.
     src = persist_tracked(

@@ -19,8 +19,7 @@ fold, join strategies stay adaptive. Op order in the config is a
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-from typing import Any, Iterator
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -28,6 +27,10 @@ from pyspark.sql import functions as F
 from top_produce_etl_spark.config import JobConfig
 from top_produce_etl_spark.io.sinks import write_table
 from top_produce_etl_spark.io.sources import read_table
+from top_produce_etl_spark.operators._cache import (  # noqa: F401
+    persist_tracked,
+    pipeline_session,
+)
 from top_produce_etl_spark.operators.joins import maybe_broadcast
 from top_produce_etl_spark.operators.topn import top_n_agg, top_n_window
 
@@ -307,12 +310,11 @@ def build_pipeline(
     DataFrames; production resolves catalog tables).
 
     Caching contract: stage boundaries feeding a multi-scan op are
-    persisted (MEMORY_AND_DISK) via the house ``_cache`` registry and
-    are NOT released here — the plan must stay cached until the caller
-    materializes it. After materialization, call
-    ``operators._cache.unpersist_all()`` (bench/tests do), or use
-    :func:`pipeline_session` below, which releases boundary persists
-    on exit.
+    persisted (MEMORY_AND_DISK) through ``operators._cache`` and are
+    NOT released here — the returned plan is lazy and reads them.
+    The caller materializes it inside ``pipeline_session()`` (defined
+    in ``operators._cache``, importable from here), which releases
+    them on exit.
     """
     tables = tables or {}
 
@@ -331,10 +333,6 @@ def build_pipeline(
     for op in spec.get("ops", []):
         kind = op["op"]
         if kind in _MULTI_SCAN_OPS and applied:
-            from top_produce_etl_spark.operators._cache import (
-                persist_tracked,
-            )
-
             df = persist_tracked(df)
         applied += 1
         if kind == "filter":
@@ -1170,27 +1168,3 @@ def build_pipeline(
             raise ValueError(f"unknown op: {kind}")
     return df
 
-
-@contextmanager
-def pipeline_session() -> Iterator[None]:
-    """Scope for build_pipeline callers who don't know the house
-    cache contract (round-8 advisor): boundary persists registered by
-    multi-scan ops during the ``with`` block are released on exit, so
-    a library caller can't leak MEMORY_AND_DISK frames across calls.
-
-    Usage::
-
-        with pipeline_session():
-            out = build_pipeline(spark, spec, tables)
-            rows = out.collect()   # materialize INSIDE the scope
-
-    Materialize inside the block — the persists exist precisely to
-    share work across the plan's consumers; releasing them before the
-    action would silently re-derive every boundary.
-    """
-    from top_produce_etl_spark.operators._cache import unpersist_all
-
-    try:
-        yield
-    finally:
-        unpersist_all()

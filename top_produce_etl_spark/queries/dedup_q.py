@@ -20,6 +20,7 @@ from top_produce_etl_spark.functions.portable_hash import (
     composite_hash_sql,
 )
 from top_produce_etl_spark.io.sources import load_table
+from top_produce_etl_spark.operators._cache import persist_tracked
 from top_produce_etl_spark.operators.dedup import (
     exact_dedup,
     jaccard_pairs,
@@ -925,7 +926,6 @@ def clean_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     strip job — the persist stands in for that materialization,
     not for a data-sized cache."""
     from top_produce_etl_spark.operators.dedup import (
-        _persist,
         connected_components,
         strip_duplicate_spans,
     )
@@ -949,7 +949,7 @@ def clean_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # measured WORSE, r11 negative result #2). Span detection groups
     # by shingle/doc and the strip is row-local — placement cannot
     # change output.
-    surv = _persist(
+    surv = persist_tracked(
         fan_out(docs).join(maybe_broadcast(losers), "doc_id", "left_anti")
     )
     return strip_duplicate_spans(surv, "doc_id", "text", k=8, min_docs=2)

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from top_produce_etl_spark.io.sources import load_table
+from top_produce_etl_spark.operators._cache import persist_tracked, release
 from top_produce_etl_spark.operators.importance import (
     dsir_scores,
     dsir_scores_oracle_sql,
@@ -146,7 +147,7 @@ def dsir_fast_selection_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     order = [F.col("score_micro").desc(), F.col("doc_id").asc()]
     scores = dsir_scores(docs, "doc_id", "text", _TARGET, hasher="xxhash64")
-    sel = scores.orderBy(*order).limit(100).persist()
+    sel = persist_tracked(scores.orderBy(*order).limit(100))
     sel_ids = sel.select("doc_id")
 
     sel2_ids = (
@@ -192,7 +193,7 @@ def dsir_fast_selection_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
     )
     overlap = sel_ids.join(portable_ids, "doc_id").count()
-    sel.unpersist()
+    release(sel)  # the returned frame is built from literals
 
     return spark.createDataFrame(
         [(n, n_distinct, diffs, boundary_violations, overlap >= 60)],

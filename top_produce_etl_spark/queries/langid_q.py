@@ -11,7 +11,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from top_produce_etl_spark.io.sources import load_table
-from top_produce_etl_spark.operators._cache import unpersist_all
 from top_produce_etl_spark.operators.langid import (
     langid_confusion_oracle_sql,
     score_langid,
@@ -55,7 +54,6 @@ def langid_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     model = train_langid(
         corpus, iters=ITERS, n_buckets=N_BUCKETS, lr=LR
     )
-    unpersist_all()
     return model
 
 
@@ -112,7 +110,6 @@ def langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("z_micro").cast("bigint").alias("max_z_micro"),
         )
     )
-    unpersist_all()
     return out
 
 
@@ -186,5 +183,4 @@ def langid_stored_model_serve(
             F.max("z_micro").cast("bigint").alias("max_z_micro"),
         )
     )
-    unpersist_all()
     return out

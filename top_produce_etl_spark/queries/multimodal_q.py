@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from top_produce_etl_spark.functions.udfs import cosine_topk_numpy
 from top_produce_etl_spark.io.sources import load_table
+from top_produce_etl_spark.operators._cache import persist_tracked
 from top_produce_etl_spark.operators.multimodal import (
     extract_features,
     plan_frame_samples,
@@ -346,7 +347,6 @@ def image_dhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact 64-bit Hamming distance gates at ≤6 via xor+bit_count.
     Fully oracle-checked: DuckDB re-derives every band from the
     closed-form pixel formula and replays the same band join."""
-    from top_produce_etl_spark.operators._cache import persist_tracked
     from top_produce_etl_spark.operators.multimodal import image_dhash
 
     # three consumers (two candidate sides + two score lookups) —

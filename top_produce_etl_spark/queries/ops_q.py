@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from top_produce_etl_spark.io.sources import fan_out, load_table
+from top_produce_etl_spark.operators._cache import persist_tracked
 from top_produce_etl_spark.queries import query
 
 
@@ -268,7 +269,6 @@ def orders_profile_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     — one aggregation pass per side, |cols|-row join). The exact-NDV
     oracle pins the report; approx_count_distinct is the documented
     100 TB path with the same shape."""
-    from top_produce_etl_spark.operators._cache import persist_tracked
     from top_produce_etl_spark.operators.profiling import profile_drift
 
     # the two snapshot sides are date-filters of the SAME projection;
@@ -315,7 +315,6 @@ def orders_profile_drift_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     extra exact-NDV pass at battery/bench time — the production
     OPERATOR stays single-pass; the flags are the verification
     harness, not the pipeline)."""
-    from top_produce_etl_spark.operators._cache import persist_tracked
     from top_produce_etl_spark.operators.profiling import profile_drift
 
     # FOUR profile towers (fast+exact × old+new) share this

@@ -14,6 +14,7 @@ from top_produce_etl_spark.functions.text import (
     quality_score,
 )
 from top_produce_etl_spark.io.sources import load_table
+from top_produce_etl_spark.operators._cache import persist_tracked
 from top_produce_etl_spark.operators.retrieval import (
     bm25_oracle_sql,
     bm25_scores,
@@ -318,8 +319,8 @@ def split_decontamination_check_q(spark: SparkSession, sf_dir: str) -> DataFrame
 
     Scale shape: the split label is a narrow zero-shuffle
     expression; the shingle inverted index is built ONCE and
-    persisted (dedup.py convention — released via
-    ``operators.dedup.unpersist_all``), and the train⨝test overlap
+    persisted (operators._cache — the caller's ``pipeline_session``
+    releases it), and the train⨝test overlap
     join runs ONCE: ``contaminated`` is its distinct train side and
     ``residual`` is the same pair set anti-joined against the
     removal list (provably empty — the query computes it rather
@@ -327,7 +328,6 @@ def split_decontamination_check_q(spark: SparkSession, sf_dir: str) -> DataFrame
     contaminated-id set ride size-gated broadcasts; no all-pairs
     joins anywhere.
     """
-    from top_produce_etl_spark.operators.dedup import _persist
     from top_produce_etl_spark.operators.joins import maybe_broadcast
     from top_produce_etl_spark.operators.splits import assign_split
 
@@ -337,7 +337,7 @@ def split_decontamination_check_q(spark: SparkSession, sf_dir: str) -> DataFrame
     # staged tokenization: see functions.text.shingles_of inlining note
     from top_produce_etl_spark.functions.text import shingles_of, tokens
 
-    sh = _persist(
+    sh = persist_tracked(
         docs.filter(F.col("split").isin("train", "test"))
         .select("doc_id", "split", tokens("text").alias("__toks"))
         .select(
@@ -354,7 +354,7 @@ def split_decontamination_check_q(spark: SparkSession, sf_dir: str) -> DataFrame
     test_sh = sh.filter(F.col("split") == "test").select(
         F.col("doc_id").alias("test_id"), "shingle"
     )
-    overlap = _persist(
+    overlap = persist_tracked(
         train_sh.join(maybe_broadcast(test_sh), "shingle").select(
             "train_id", "test_id"
         )
@@ -774,8 +774,6 @@ def doc_clusters_hashed_bow(spark: SparkSession, sf_dir: str) -> DataFrame:
     from top_produce_etl_spark.operators.retrieval import (
         hashed_bow_vectors,
     )
-
-    from top_produce_etl_spark.operators._cache import persist_tracked
 
     docs = load_table(spark, sf_dir, "documents")
     # persist the vectorized relation: kmeans_fit reads it once per
@@ -1632,7 +1630,6 @@ def ccnet_frozen_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import Window
 
-    from top_produce_etl_spark.operators._cache import persist_tracked
     from top_produce_etl_spark.operators.textquality import (
         bucket_frozen,
         load_surprisal_reference,

@@ -1081,7 +1081,6 @@ def langid_scoring_stream(
     consumes the bounded fixture; every (doc, prediction, z) row in
     the sink must hash-match the batch/DuckDB derivation, which
     queries/streaming_q.py::stream_langid_scoring_parity checks."""
-    from top_produce_etl_spark.operators._cache import unpersist_all
     from top_produce_etl_spark.operators.langid import (
         score_langid_expr,
         synthesize_lang_corpus,
@@ -1092,7 +1091,6 @@ def langid_scoring_stream(
     raw_schema = spark.read.parquet(path).schema
     batch_corpus = synthesize_lang_corpus(spark.read.parquet(path))
     model_rows = train_langid(batch_corpus, iters=3).collect()
-    unpersist_all()
 
     sdf = (
         spark.readStream.schema(raw_schema)
@@ -1137,7 +1135,6 @@ def frozen_bucket_stream(
     (queries/streaming_q.py::stream_frozen_buckets_parity)."""
     from pyspark.sql import functions as F
 
-    from top_produce_etl_spark.operators._cache import unpersist_all
     from top_produce_etl_spark.operators.textquality import (
         score_surprisal_expr,
         surprisal_cutoffs,
@@ -1151,7 +1148,6 @@ def frozen_bucket_stream(
     lm_rows = unigram_lm(ref).collect()  # |vocab| rows — model-sized
     ttotal = sum(r["ctotal"] for r in lm_rows)
     cut_rows = surprisal_cutoffs(ref, by=("lang",)).collect()
-    unpersist_all()
 
     def lit_map(field):
         entries = []
