@@ -6,6 +6,7 @@ declarative pipeline builder."""
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -13,6 +14,9 @@ from pyspark.sql import functions as F
 from top_produce_etl_spark.config import JobConfig, load_config
 from top_produce_etl_spark.io.sources import load_table
 from top_produce_etl_spark.plans.builder import build_pipeline, run_topn_job
+
+ROOT = Path(__file__).resolve().parents[1]
+CONFIGS = str(ROOT / "configs")
 
 TOP_PRODUCTS = [
     # region, product, sales — EU has a tie at 30.0 (FIXTURES §C asks
@@ -70,6 +74,31 @@ def test_topn_job_writes_partitioned_output(spark, config_and_data):
     assert subdirs == {"region=EU", "region=US", "region=ASIA"}
     back = spark.read.parquet(out_path)
     assert back.count() == 5
+
+
+def test_topn_job_honors_output_options(spark, config_and_data, tmp_path):
+    """``cfg.output.options`` reach the writer: a CSV output with
+    ``header: "true"`` starts every file with the header line, and
+    reading it back with the same options counts the rows."""
+    import dataclasses
+    import glob
+
+    cfg, _ = config_and_data
+    out = str(tmp_path / "csv_out")
+    csv_cfg = dataclasses.replace(
+        cfg,
+        output=dataclasses.replace(
+            cfg.output, path=out, format="csv", options={"header": "true"}
+        ),
+    )
+    result = run_topn_job(spark, csv_cfg)
+    files = glob.glob(f"{out}/region=*/*.csv")
+    assert files
+    for f in files:
+        with open(f) as fh:
+            assert fh.readline().strip() == "product,sales,rank", f
+    back = spark.read.format("csv").options(header="true").load(out)
+    assert back.count() == 5 == result.count()
 
 
 def test_config_loader_roundtrip(tmp_path):
@@ -156,7 +185,7 @@ def test_yaml_curation_funnel_shares_query_oracle(spark, sf_dir, tmp_path):
     from top_produce_etl_spark.plans.builder import load_pipeline_spec
     from top_produce_etl_spark.queries import get_all_oracles
 
-    spec = load_pipeline_spec("/root/repo/configs/pipeline_curation.yaml")
+    spec = load_pipeline_spec(f"{CONFIGS}/pipeline_curation.yaml")
     tables = {"documents": load_table(spark, sf_dir, "documents")}
     out_path = str(tmp_path / "curated")
     write_table(build_pipeline(spark, spec, tables), out_path)
@@ -181,7 +210,7 @@ def test_yaml_curation_funnel_keep_only_filters_corpus(spark, sf_dir):
     the source columns — the curated-corpus materialization shape."""
     from top_produce_etl_spark.plans.builder import load_pipeline_spec
 
-    spec = load_pipeline_spec("/root/repo/configs/pipeline_curation.yaml")
+    spec = load_pipeline_spec(f"{CONFIGS}/pipeline_curation.yaml")
     tables = {"documents": load_table(spark, sf_dir, "documents")}
     audit = build_pipeline(spark, spec, tables)
     n_keep = audit.filter(F.col("keep")).count()
@@ -201,8 +230,10 @@ def test_pipeline_unknown_op_raises(spark):
 def test_cli_module_end_to_end(tmp_path):
     """`python -m top_produce_etl_spark` — the job runner the
     reference scaffolded but left empty — must run the config-driven
-    top-N job end to end in a fresh process (own SparkSession) and
-    write the partitioned result."""
+    top-N job end to end in a fresh process (own SparkSession), write
+    the partitioned result and log its row count. A second run writes
+    CSV with a header and previews with ``--show``: its logged count
+    is read back with the same output options."""
     import json
     import subprocess
     import sys
@@ -218,19 +249,34 @@ def test_cli_module_end_to_end(tmp_path):
     """)
     cfgdir = tmp_path / "configs"
     cfgdir.mkdir()
-    (cfgdir / "config_test.json").write_text(json.dumps({
-        "env": "test",
-        "input": {"source_type": "file", "path": inp, "format": "parquet"},
-        "output": {"source_type": "file", "path": outp, "format": "parquet"},
-        "processing": {"group_by_column": "region", "target_metric": "sales",
-                       "top_n": 2, "tiebreak_column": "product"},
-    }))
-    r = subprocess.run(
-        [sys.executable, "-m", "top_produce_etl_spark", "--env", "test",
-         "--config-dir", str(cfgdir), "--master", "local[2]"],
-        cwd="/root/repo", capture_output=True, text=True, timeout=240,
-    )
+    csv_out = str(tmp_path / "csv_out")
+    for env, output in [
+        ("test", {"path": outp, "format": "parquet"}),
+        ("csv", {"path": csv_out, "format": "csv",
+                 "options": {"header": "true"}}),
+    ]:
+        (cfgdir / f"config_{env}.json").write_text(json.dumps({
+            "env": env,
+            "input": {"source_type": "file", "path": inp, "format": "parquet"},
+            "output": {"source_type": "file", **output},
+            "processing": {"group_by_column": "region",
+                           "target_metric": "sales",
+                           "top_n": 2, "tiebreak_column": "product"},
+        }))
+
+    def cli(*args):
+        return subprocess.run(
+            [sys.executable, "-m", "top_produce_etl_spark",
+             "--config-dir", str(cfgdir), "--master", "local[2]", *args],
+            cwd=ROOT, capture_output=True, text=True, timeout=240,
+        )
+
+    r = cli("--env", "test")
     assert r.returncode == 0, r.stderr[-2000:]
+    assert "job done: 4 rows" in r.stderr, r.stderr[-2000:]
+    r = cli("--env", "csv", "--show", "2")
+    assert r.returncode == 0, r.stderr[-2000:]
+    assert "job done: 4 rows" in r.stderr, r.stderr[-2000:]
     rows = duckdb.sql(
         f"SELECT region, product, rank FROM read_parquet('{outp}/**/*.parquet',"
         " hive_partitioning=true) ORDER BY region, rank"
@@ -248,8 +294,8 @@ def test_shipped_yaml_configs_drive_topn_job(spark, tmp_path):
     end to end — not just the JSON path."""
     import dataclasses
 
-    prod = load_config("prod", "/root/repo/configs")
-    dev = load_config("dev", "/root/repo/configs")
+    prod = load_config("prod", CONFIGS)
+    dev = load_config("dev", CONFIGS)
     # dual-env contract: identical processing spec, different env/paths
     assert prod.env == "prod" and dev.env == "dev"
     assert prod.processing == dev.processing
@@ -528,7 +574,7 @@ def test_yaml_span_clean_runs_end_to_end(spark, sf_dir):
     )
     train = docs.filter("split = 'train'")
     test = docs.filter("split = 'test'")
-    spec = load_pipeline_spec("/root/repo/configs/pipeline_span_clean.yaml")
+    spec = load_pipeline_spec(f"{CONFIGS}/pipeline_span_clean.yaml")
     got = {
         r["doc_id"]: r["text_clean"]
         for r in build_pipeline(
@@ -562,7 +608,7 @@ def test_yaml_dsir_selection_shares_query_oracle(spark, sf_dir):
     from top_produce_etl_spark.plans.builder import load_pipeline_spec
     from top_produce_etl_spark.queries import get_all_oracles
 
-    spec = load_pipeline_spec("/root/repo/configs/pipeline_dsir.yaml")
+    spec = load_pipeline_spec(f"{CONFIGS}/pipeline_dsir.yaml")
     tables = {"documents": load_table(spark, sf_dir, "documents")}
 
     # production default: selection of n docs with source columns
@@ -611,7 +657,7 @@ def test_yaml_full_composition_matches_direct_operators(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     tables = {"documents": docs}
     spec = load_pipeline_spec(
-        "/root/repo/configs/pipeline_mix_curate_pack.yaml"
+        f"{CONFIGS}/pipeline_mix_curate_pack.yaml"
     )
     got = build_pipeline(spark, spec, tables).collect()
 
@@ -704,7 +750,7 @@ def test_yaml_ann_topk_shares_pq_oracle(spark, sf_dir, tmp_path):
     )
     from top_produce_etl_spark.queries import get_all_oracles
 
-    spec = load_pipeline_spec("/root/repo/configs/pipeline_ann.yaml")
+    spec = load_pipeline_spec(f"{CONFIGS}/pipeline_ann.yaml")
     idx = str(tmp_path / "ann_index")
     spec["ops"][1]["index_path"] = idx
     tables = {"embeddings": load_table(spark, sf_dir, "embeddings")}
@@ -1054,7 +1100,7 @@ def test_yaml_url_dedup_shares_query_oracle(spark, sf_dir):
     from top_produce_etl_spark.queries import get_all_oracles
 
     spec = load_pipeline_spec(
-        "/root/repo/configs/pipeline_url_curation.yaml"
+        f"{CONFIGS}/pipeline_url_curation.yaml"
     )
     prefix = {
         "source": "urls",
@@ -1091,7 +1137,7 @@ def test_yaml_url_curation_full_pipeline(spark, sf_dir):
     from top_produce_etl_spark.queries import get_all_oracles
 
     spec = load_pipeline_spec(
-        "/root/repo/configs/pipeline_url_curation.yaml"
+        f"{CONFIGS}/pipeline_url_curation.yaml"
     )
     docs = load_table(spark, sf_dir, "documents")
     urls = synthesize_urls(docs, effective_mod=100)
@@ -1155,7 +1201,7 @@ def test_yaml_ccnet_chain_matches_handwritten(spark):
         spark.range(1000, 1300).select(F.col("id").alias("doc_id"))
     )
 
-    spec = load_pipeline_spec("/root/repo/configs/pipeline_ccnet.yaml")
+    spec = load_pipeline_spec(f"{CONFIGS}/pipeline_ccnet.yaml")
     got = build_pipeline(
         spark, spec, {"docs": docs, "lang_reference": ref}
     ).collect()
@@ -1224,7 +1270,7 @@ def test_yaml_preference_curation_matches_handwritten(spark):
     # pair_id = o_orderkey: unique and deterministic (the cap key)
     pairs = synthesize_preference_pairs(orders, with_pair_id=True)
     spec = load_pipeline_spec(
-        "/root/repo/configs/pipeline_preference_curation.yaml"
+        f"{CONFIGS}/pipeline_preference_curation.yaml"
     )
     got = sorted(
         map(
@@ -1366,7 +1412,7 @@ def test_yaml_crawl_chain_from_raw_html(spark):
     ref = synthesize_lang_corpus(
         spark.range(1000, 1200).select(F.col("id").alias("doc_id"))
     )
-    spec = load_pipeline_spec("/root/repo/configs/pipeline_crawl.yaml")
+    spec = load_pipeline_spec(f"{CONFIGS}/pipeline_crawl.yaml")
     got_ids = {
         r["doc_id"]
         for r in build_pipeline(

@@ -142,11 +142,20 @@ def run_topn_job(
     """Reference-parity job: read input, keep the top
     ``cfg.processing.top_n`` rows per ``group_by_column`` by
     ``target_metric`` (row_number semantics, deterministic tiebreak),
-    order by (group, rank), write to output if configured.
+    write to output if configured, and return the result ordered by
+    (group, rank).
 
     This is the computation the reference declares
     (``config_prod.yaml:10-13``) with the determinism fix SURVEY §7
     calls out: ties are broken by ``tiebreak_column`` ascending.
+
+    The output (written with ``cfg.output.format`` and
+    ``cfg.output.options``) is partitioned by group, and each file is
+    rank-ordered by a local sort; the write computes the top-N plan
+    once. Only the RETURNED frame is globally ordered: a global sort
+    before the write would add a sampling job and a range exchange
+    for rows that ``partitionBy`` splits into directories anyway. An
+    action on the returned frame re-runs the plan.
 
     Pass ``metrics_out={}`` to receive job observability counters
     (``rows_in``, ``null_metric_rows``, ``rows_out``) after the write
@@ -197,7 +206,7 @@ def run_topn_job(
         strategy=p.strategy,
         probe_fraction=p.auto_probe_fraction,
         group_rows_threshold=p.auto_group_rows,
-    ).orderBy(p.group_by_column, "rank")
+    )
     if obs_out is not None:
         out = out.observe(obs_out, F.count(F.lit(1)).alias("rows_out"))
     if cfg.output is not None and cfg.output.path:
@@ -206,11 +215,13 @@ def run_topn_job(
             cfg.output.path,
             fmt=cfg.output.format,
             partition_by=[p.group_by_column],
+            sort_by=[p.group_by_column, "rank"],
+            options=cfg.output.options,
         )
         if metrics_out is not None:
             metrics_out.update(obs_in.get)
             metrics_out.update(obs_out.get)
-    return out
+    return out.orderBy(p.group_by_column, "rank")
 
 
 # ---------------------------------------------------------------------------
