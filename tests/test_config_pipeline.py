@@ -321,84 +321,41 @@ def test_shipped_yaml_configs_drive_topn_job(spark, tmp_path):
     assert spark.read.parquet(out).count() == 5
 
 
-def test_topn_job_agg_strategy_end_to_end(spark, config_and_data):
-    """`strategy: agg` must drive the skew-resistant collect/sort/
-    slice top-N through the SAME config job and produce the SAME
-    rows, column order, and partitioned output as the window
-    strategy (round-3 verdict item: SURVEY §2.6 names agg as the
-    100 TB default when n ≪ group size)."""
-    import dataclasses
-
-    cfg, out_path = config_and_data
-    agg_cfg = dataclasses.replace(
-        cfg, processing=dataclasses.replace(cfg.processing, strategy="agg")
-    )
-    result = run_topn_job(spark, agg_cfg)
-    # the agg plan must contain no Window node (that's the point)
-    import io
-    from contextlib import redirect_stdout
-
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        result.explain("simple")
-    assert "Window" not in buf.getvalue()
-    rows = [(r["region"], r["product"], r["sales"], r["rank"]) for r in result.collect()]
-    assert rows == [
+def test_declarative_topn_op(spark, config_and_data):
+    """The ops-list `topn` op keeps the top rows per group by the
+    ranking window and returns the input columns followed by rank."""
+    cfg, _ = config_and_data
+    df = spark.read.parquet(cfg.input.path)
+    spec = {
+        "source": "t",
+        "ops": [{
+            "op": "topn", "group_by": "region", "metric": "sales",
+            "n": 2, "tiebreak": "product",
+        }, {"op": "sort", "by": ["region", "rank"]}],
+    }
+    out = build_pipeline(spark, spec, {"t": df})
+    assert out.columns == ["region", "product", "sales", "rank"]
+    assert [tuple(r) for r in out.collect()] == [
         ("ASIA", "gadget", 7.0, 1),
         ("EU", "widget", 50.0, 1),
         ("EU", "gadget", 30.0, 2),
-        ("EU", "gizmo", 30.0, 3),
         ("US", "widget", 5.0, 1),
     ]
-    assert result.columns == ["region", "product", "sales", "rank"]
-    back = spark.read.parquet(out_path)
-    assert back.count() == 5
-
-
-def test_topn_auto_strategy_probe(spark):
-    """`auto` picks agg for few huge groups and window for many tiny
-    ones, via the sampled mean-group-size probe."""
-    from top_produce_etl_spark.plans.builder import choose_topn_strategy
-
-    big_groups = spark.range(0, 20_000).select(
-        (F.col("id") % 2).alias("g"), F.col("id").alias("m")
-    )  # 2 groups × 10k rows — mean group size 10k ≫ 1000
-    many_groups = spark.range(0, 20_000).select(
-        (F.col("id") % 5_000).alias("g"), F.col("id").alias("m")
-    )  # 5k groups × 4 rows
-    assert choose_topn_strategy(big_groups, "g", probe_fraction=0.1) == "agg"
-    assert choose_topn_strategy(many_groups, "g", probe_fraction=0.1) == "window"
-
-
-def test_declarative_topn_strategies_agree(spark, config_and_data):
-    """The ops-list `topn` op must yield identical rows under both
-    physical strategies."""
-    cfg, _ = config_and_data
-    df = spark.read.parquet(cfg.input.path)
-    rows = {}
-    for strat in ("window", "agg"):
-        spec = {
-            "source": "t",
-            "ops": [{
-                "op": "topn", "group_by": "region", "metric": "sales",
-                "n": 2, "tiebreak": "product", "strategy": strat,
-            }, {"op": "sort", "by": ["region", "rank"]}],
-        }
-        out = build_pipeline(spark, spec, {"t": df})
-        rows[strat] = [tuple(r) for r in out.collect()]
-        assert out.columns == ["region", "product", "sales", "rank"]
-    assert rows["window"] == rows["agg"]
 
 
 def test_config_validation_rejects_bad_strategy():
-    with pytest.raises(ValueError, match="strategy"):
-        JobConfig.from_dict(
-            {
-                "input": {"path": "/x"},
-                "processing": {"group_by_column": "g", "target_metric": "m",
-                               "strategy": "sorted-merge"},
-            }
-        )
+    """A removed or misspelled processing key fails loudly instead of
+    running with a default: a leftover `strategy`, and `tiebreak`
+    written for `tiebreak_column` (which would drop the tiebreak)."""
+    for key, value in (("strategy", "agg"), ("tiebreak", "product")):
+        with pytest.raises(ValueError, match=key):
+            JobConfig.from_dict(
+                {
+                    "input": {"path": "/x"},
+                    "processing": {"group_by_column": "g",
+                                   "target_metric": "m", key: value},
+                }
+            )
 
 
 def test_topn_job_observe_metrics(spark, config_and_data):

@@ -453,16 +453,18 @@ def test_robots_gate_broadcasts_rules(spark):
 def test_topn_job_writes_without_global_sort(spark, tmp_path, monkeypatch):
     """The CLI job's write computes the top-N plan once: the frame
     handed to the writer carries no range exchange (no sampling job,
-    no global sort) under either strategy; the writer's local sort
-    still leaves each group's file in rank order."""
-    import dataclasses
-
+    no global sort), and its ranking window runs a partial
+    WindowGroupLimit in each map task BELOW the hash exchange, so at
+    most n rows per group per task are shuffled — why one huge group
+    does not land whole on one task. The writer's local sort still
+    leaves each group's file in rank order."""
     import pyarrow.parquet as pq
 
     from top_produce_etl_spark.config import JobConfig
     from top_produce_etl_spark.plans import builder
 
     inp = str(tmp_path / "in")
+    out = str(tmp_path / "out")
     spark.createDataFrame(
         [("EU", f"p{i:02d}", float(i % 7)) for i in range(40)]
         + [("US", f"p{i:02d}", float(i)) for i in range(10)],
@@ -471,7 +473,7 @@ def test_topn_job_writes_without_global_sort(spark, tmp_path, monkeypatch):
     cfg = JobConfig.from_dict({
         "env": "test",
         "input": {"path": inp, "format": "parquet"},
-        "output": {"path": str(tmp_path / "out"), "format": "parquet"},
+        "output": {"path": out, "format": "parquet"},
         "processing": {"group_by_column": "region", "target_metric": "sales",
                        "top_n": 5, "tiebreak_column": "product"},
     })
@@ -483,14 +485,17 @@ def test_topn_job_writes_without_global_sort(spark, tmp_path, monkeypatch):
         return real_write(df, *a, **kw)
 
     monkeypatch.setattr(builder, "write_table", capture)
-    for strategy in ("window", "agg"):
-        out = str(tmp_path / f"out_{strategy}")
-        builder.run_topn_job(spark, dataclasses.replace(
-            cfg,
-            output=dataclasses.replace(cfg.output, path=out),
-            processing=dataclasses.replace(cfg.processing, strategy=strategy),
-        ))
-        p = plan(written[-1])
-        assert "rangepartitioning" not in p, (strategy, p)
-        eu = pq.read_table(f"{out}/region=EU").column("rank").to_pylist()
-        assert eu == [1, 2, 3, 4, 5], (strategy, eu)
+    builder.run_topn_job(spark, cfg)
+    (df,) = written
+    p = simple_plan(df)
+    assert "rangepartitioning" not in p, p
+    lines = p.splitlines()
+    exchange = next(
+        i for i, ln in enumerate(lines) if "Exchange hashpartitioning(region" in ln
+    )
+    assert any(
+        "WindowGroupLimit" in ln and ln.rstrip().endswith("Partial")
+        for ln in lines[exchange + 1:]
+    ), p
+    eu = pq.read_table(f"{out}/region=EU").column("rank").to_pylist()
+    assert eu == [1, 2, 3, 4, 5], eu

@@ -49,7 +49,7 @@ def test_rank_method_returns_ties_beyond_n(df):
 
 
 def test_agg_strategy_matches_window_strategy(df):
-    """The skew-resistant collect/sort/slice strategy must produce
+    """The collect/sort/slice formulation must produce
     exactly the row_number-window result."""
     w = top_n_window(df, "region", "sales", 2, tiebreak="product")
     a = top_n_agg(df, "region", "sales", 2, tiebreak="product")

@@ -13,7 +13,7 @@ whole declarative pipeline).
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, fields
 from typing import Any
 
 try:  # PyYAML is optional in this environment; JSON configs always work.
@@ -34,28 +34,12 @@ class IOConfig:
     options: dict[str, str] = field(default_factory=dict)
 
 
-#: physical strategies for the top-N computation (operators/topn.py):
-#: ``window`` = ranking window (canonical; skew-sensitive — one huge
-#: group serializes into one task), ``agg`` = collect/sort/slice
-#: aggregate (map-side partial reduction; the 100 TB default when
-#: n ≪ group size), ``auto`` = pick ``agg`` when a cheap sampled
-#: probe estimates mean group size above ``auto_group_rows``.
-TOPN_STRATEGIES = ("window", "agg", "auto")
-
-
 @dataclass(frozen=True)
 class ProcessingConfig:
     group_by_column: str
     target_metric: str
     top_n: int = 3
     tiebreak_column: str | None = None  # deterministic tie-break (asc)
-    strategy: str = "window"  # one of TOPN_STRATEGIES
-    # `auto` knobs: sample this fraction of rows to estimate mean
-    # rows-per-group; choose `agg` when the estimate exceeds
-    # auto_group_rows (i.e. groups are huge relative to top_n and the
-    # window sort would serialize skewed groups).
-    auto_probe_fraction: float = 0.01
-    auto_group_rows: int = 1000
 
 
 @dataclass(frozen=True)
@@ -77,14 +61,14 @@ class JobConfig:
         missing = [k for k in required if k not in proc]
         if missing:
             raise ValueError(f"processing config missing keys: {missing}")
+        # a misspelled key (``tiebreak``, ``topN``) must not silently
+        # run with the default it was meant to override
+        unknown = sorted(set(proc) - {f.name for f in fields(ProcessingConfig)})
+        if unknown:
+            raise ValueError(f"processing config has unknown keys: {unknown}")
         top_n = int(proc.get("top_n", 3))
         if top_n <= 0:
             raise ValueError(f"top_n must be positive, got {top_n}")
-        strategy = str(proc.get("strategy", "window"))
-        if strategy not in TOPN_STRATEGIES:
-            raise ValueError(
-                f"strategy must be one of {TOPN_STRATEGIES}, got {strategy!r}"
-            )
         return JobConfig(
             env=str(d.get("env", "dev")),
             input=IOConfig(
@@ -108,9 +92,6 @@ class JobConfig:
                 target_metric=str(proc["target_metric"]),
                 top_n=top_n,
                 tiebreak_column=proc.get("tiebreak_column"),
-                strategy=strategy,
-                auto_probe_fraction=float(proc.get("auto_probe_fraction", 0.01)),
-                auto_group_rows=int(proc.get("auto_group_rows", 1000)),
             ),
             quality=tuple(d.get("quality") or ()),
         )

@@ -4,25 +4,26 @@ The reference declares ``group_by_column: region, target_metric:
 sales, top_n: 3`` (reference ``config/config_prod.yaml:10-13``) with
 an empty transform body (``src/transform/top3_logic.py``, 0 bytes);
 this module is the real, parameterized implementation, in two
-physical strategies:
+formulations:
 
 1. ``top_n_window`` — ranking window (``row_number`` over
-   ``partitionBy(group).orderBy(desc(metric))``). The canonical
-   formulation; one shuffle on the group key, then a per-group sort.
-   At scale, a single enormous group ("skewed key") serializes into
-   one task — AQE cannot split a window partition.
+   ``partitionBy(group).orderBy(desc(metric))``). The plan every job
+   and pipeline uses. For ``row_number``/``rank``/``dense_rank`` with
+   n ≤ ``spark.sql.optimizer.windowGroupLimitThreshold`` (default
+   1000), Spark plans a ``WindowGroupLimit … Partial`` in each map
+   task: at most n rows per group per task reach the hash exchange,
+   so the task that receives a skewed group after the exchange sorts
+   n rows per map task, not the whole group.
 
-2. ``top_n_agg`` — skew-resistant: ``groupBy(group).agg(slice(
-   sort_array(collect_list(struct(...)), desc), 1, n))`` + explode.
-   Partial aggregation runs map-side, so each map task pre-reduces
-   its local rows before the shuffle; for small N this moves
-   ~N·groups rows through the shuffle instead of all rows. The
-   better plan at 100 TB when n ≪ group size. (Map-side combine on
-   collect_list keeps whole lists, but the post-shuffle slice still
-   bounds memory per group to the group's row count, not the table.)
+2. ``top_n_agg`` — ``groupBy(group).agg(slice(array_sort(
+   collect_list(struct(...))), 1, n))`` + explode. Kept as a second
+   formulation that tests and the ``topn_agg_top3_region`` query
+   cross-check against the window. It is not the faster plan: its
+   map-side combine keeps whole lists, and on a skewed input (one
+   group holding 90% of 4M rows) it measured about 8× slower.
 
 Ties: ``row_number`` is nondeterministic under ties unless a total
-order exists, so both strategies require a deterministic tiebreak
+order exists, so both formulations require a deterministic tiebreak
 column (ascending) — SURVEY.md §7 risk #1.
 """
 
@@ -68,7 +69,7 @@ def top_n_agg(
     payload: list[str] | None = None,
     rank_col: str = "rank",
 ) -> DataFrame:
-    """Skew-resistant top-N: collect per-group structs, sort, slice.
+    """Top-N by aggregate: collect per-group structs, sort, slice.
 
     Output schema matches ``top_n_window(method='row_number')``:
     group cols + payload cols + metric + rank. Sorting a struct

@@ -32,7 +32,7 @@ from top_produce_etl_spark.operators._cache import (  # noqa: F401
     pipeline_session,
 )
 from top_produce_etl_spark.operators.joins import maybe_broadcast
-from top_produce_etl_spark.operators.topn import top_n_agg, top_n_window
+from top_produce_etl_spark.operators.topn import top_n_window
 
 # Ops whose IMPLEMENTATION scans its input DataFrame more than once
 # (a count/rollup aggregate plus a join/filter back, a multi-signal
@@ -71,67 +71,6 @@ _MULTI_SCAN_OPS = frozenset({
     "mojibake_repair",
     "paragraph_dedup",
 })
-
-
-def choose_topn_strategy(
-    df: DataFrame,
-    group_by: str,
-    probe_fraction: float = 0.01,
-    group_rows_threshold: int = 1000,
-) -> str:
-    """The ``auto`` policy: ``agg`` when groups are huge, else
-    ``window``.
-
-    Probe = one aggregate over a Bernoulli SAMPLE of the input
-    (seeded, so repeatable): estimated mean rows-per-group =
-    sampled_rows / approx_distinct_groups / fraction. The probe scans
-    ~fraction of the data with no shuffle beyond a 1-row aggregate —
-    cheap relative to the job it steers. Rationale (SURVEY §2.6): the
-    ranking window serializes each group into one task's sort, so at
-    mean group sizes ≫ top_n the collect/sort/slice aggregate (with
-    map-side partial reduction) is the plan that survives skew; for
-    many small groups the window is cheaper and AQE handles the rest.
-    Empty/tiny samples fall back to ``window``.
-    """
-    probed = (
-        df.sample(fraction=probe_fraction, seed=42)
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.approx_count_distinct(group_by).alias("g"),
-        )
-        .first()
-    )
-    if not probed or not probed["n"] or not probed["g"]:
-        return "window"
-    mean_group_rows = probed["n"] / probed["g"] / probe_fraction
-    return "agg" if mean_group_rows > group_rows_threshold else "window"
-
-
-def _apply_topn(
-    df: DataFrame,
-    *,
-    group_by: str,
-    metric: str,
-    n: int,
-    tiebreak: str | None,
-    strategy: str,
-    probe_fraction: float = 0.01,
-    group_rows_threshold: int = 1000,
-) -> DataFrame:
-    """Dispatch to a top-N physical strategy; output column order is
-    normalized to (input columns…, rank) so both strategies are
-    drop-in interchangeable for writers and oracles."""
-    if strategy == "auto":
-        strategy = choose_topn_strategy(
-            df, group_by, probe_fraction, group_rows_threshold
-        )
-    if strategy == "agg":
-        out = top_n_agg(df, group_by=group_by, metric=metric, n=n, tiebreak=tiebreak)
-    else:
-        out = top_n_window(
-            df, group_by=group_by, metric=metric, n=n, tiebreak=tiebreak
-        )
-    return out.select(*df.columns, "rank")
 
 
 def run_topn_job(
@@ -197,15 +136,12 @@ def run_topn_job(
             F.count(F.lit(1)).alias("rows_in"),
             F.count(F.when(metric.isNull(), 1)).alias("null_metric_rows"),
         )
-    out = _apply_topn(
+    out = top_n_window(
         df,
         group_by=p.group_by_column,
         metric=p.target_metric,
         n=p.top_n,
         tiebreak=p.tiebreak_column,
-        strategy=p.strategy,
-        probe_fraction=p.auto_probe_fraction,
-        group_rows_threshold=p.auto_group_rows,
     )
     if obs_out is not None:
         out = out.observe(obs_out, F.count(F.lit(1)).alias("rows_out"))
@@ -259,7 +195,7 @@ def build_pipeline(
          "broadcast": true},
         {"op": "group_agg", "by": ["k"], "aggs": {"total": "sum(x)"}},
         {"op": "topn", "group_by": "k", "metric": "total", "n": 3,
-         "tiebreak": "a", "strategy": "window|agg|auto"},
+         "tiebreak": "a"},
         {"op": "distinct"} | {"op": "sort", "by": ["k"]} |
         {"op": "limit", "n": 10} |
         {"op": "union", "table": "other"} | {"op": "dropna", ...} |
@@ -370,13 +306,12 @@ def build_pipeline(
             aggs = [F.expr(e).alias(name) for name, e in op["aggs"].items()]
             df = df.groupBy(*op.get("by", [])).agg(*aggs)
         elif kind == "topn":
-            df = _apply_topn(
+            df = top_n_window(
                 df,
                 group_by=op["group_by"],
                 metric=op["metric"],
                 n=int(op["n"]),
                 tiebreak=op.get("tiebreak"),
-                strategy=op.get("strategy", "window"),
             )
         elif kind == "distinct":
             df = df.distinct()

@@ -1,4 +1,4 @@
-"""Advanced relational queries: skew-resistant top-N, explicit
+"""Advanced relational queries: aggregate-formulated top-N, explicit
 grouping sets, statistical moments, RANGE-frame windows,
 deterministic sampling, and pandas-UDF sessionization — each with a
 DuckDB oracle (SURVEY.md §2.4-§2.6, §2.9-§2.10).
@@ -41,8 +41,8 @@ from top_produce_etl_spark.queries.relational import FLAGSHIP_SQL, REV_DEC
 
 @query("topn_agg_top3_region", oracle=FLAGSHIP_SQL)
 def topn_agg_top3_region(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flagship computation via the skew-resistant ``top_n_agg``
-    strategy (collect_list → array_sort → slice with map-side
+    """Flagship computation via the ``top_n_agg`` formulation
+    (collect_list → array_sort → slice with map-side
     partial agg) — must be value-identical to the window variant,
     so it shares the flagship oracle verbatim."""
     lineitem = load_table(spark, sf_dir, "lineitem")

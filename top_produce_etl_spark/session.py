@@ -35,9 +35,6 @@ def create_spark_session(
     *,
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    max_partition_bytes: str | None = None,
-    arrow_batch_rows: int | None = None,
-    broadcast_threshold: str | None = None,
     enable_hive: bool = False,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
@@ -50,26 +47,10 @@ def create_spark_session(
     but a sane ceiling avoids tiny-partition overhead locally and
     seeds AQE's initial plan.
 
-    The two spill-sizing knobs are exposed (not defaulted) because
-    their right values are deployment facts, not code facts:
-    ``max_partition_bytes`` (``spark.sql.files.maxPartitionBytes``)
-    sizes scan splits so a task's input fits executor memory — at
-    100 TB with wide rows you LOWER it, with tiny rows you raise it;
-    ``arrow_batch_rows`` (``spark.sql.execution.arrow.
-    maxRecordsPerBatch``) bounds Arrow batch footprint for pandas
-    UDFs over wide binary columns (operators/multimodal.py sizing
-    note: batch_bytes ≈ rows × max_payload must fit the Python
-    worker).
-
-    ``broadcast_threshold`` sets
-    ``spark.sql.autoBroadcastJoinThreshold`` (e.g. ``"64m"``,
-    ``"-1"`` to disable). This is the load-bearing conf for join
-    strategy: the planner auto-broadcasts below it, AQE switches
-    strategies at runtime around it, and
-    ``operators.joins.maybe_broadcast`` defers to it when deciding
-    whether a hint is safe — so raising it on a big-memory cluster
-    widens the map-side-join window everywhere at once, with no
-    per-query hint edits.
+    ``extra_conf`` carries the confs whose right values are deployment
+    facts, e.g. ``spark.sql.files.maxPartitionBytes``,
+    ``spark.sql.autoBroadcastJoinThreshold`` and
+    ``spark.sql.execution.arrow.maxRecordsPerBatch``.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     if master is None:
@@ -97,18 +78,6 @@ def create_spark_session(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    if max_partition_bytes is not None:
-        builder = builder.config(
-            "spark.sql.files.maxPartitionBytes", max_partition_bytes
-        )
-    if broadcast_threshold is not None:
-        builder = builder.config(
-            "spark.sql.autoBroadcastJoinThreshold", broadcast_threshold
-        )
-    if arrow_batch_rows is not None:
-        builder = builder.config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_rows)
-        )
     if enable_hive:
         builder = builder.enableHiveSupport()
     if extra_conf:
