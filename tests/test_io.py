@@ -722,6 +722,142 @@ def test_pruning_report_counts_skippable_files(spark, tmp_path):
     assert len(load_pruned(spark, path, "k", 120, 130).inputFiles()) == 1
 
 
+def test_manifest_on_partitioned_table(spark, tmp_path):
+    """A ``partition_by`` write puts same-named part files under
+    different ``key=value/`` directories: entries are table-relative
+    paths, so stats stay per file and snapshot/pruned reads find the
+    files and keep the partition column."""
+    from top_produce_etl_spark.io.sinks import (
+        append_manifest,
+        snapshot_manifest,
+        verify_manifest,
+        write_manifest,
+    )
+    from top_produce_etl_spark.io.sources import (
+        load_pruned,
+        load_snapshot,
+        pruning_report,
+    )
+
+    path = str(tmp_path / "by_region")
+    # 2 tasks x 2 regions -> 4 files, 2 distinct basenames
+    write_table(
+        spark.range(0, 100, 1, 2).select(
+            "id",
+            F.when(F.col("id") % 2 == 0, "EU").otherwise("US").alias("region"),
+        ),
+        path,
+        partition_by=["region"],
+    )
+    m = write_manifest(spark, path, stats_cols=["id"])
+    assert m["n_files"] == 4 and len({f["name"] for f in m["files"]}) == 4
+    assert all(f["name"].startswith("region=") for f in m["files"])
+    assert verify_manifest(spark, path)["ok"]
+    assert snapshot_manifest(spark, path) == 1
+
+    full = read_table(spark, path)
+    snap = load_snapshot(spark, path, 1)
+    assert snap.columns == full.columns
+    assert sorted(map(tuple, snap.collect())) == sorted(
+        map(tuple, full.collect())
+    )
+
+    got = load_pruned(spark, path, "id", 49, 49)
+    assert [tuple(r) for r in got.select("id", "region").collect()] == [
+        (49, "US")
+    ]
+    rep = pruning_report(spark, path, "id", 49, 49)
+    assert rep["n_files"] == 4
+    assert rep["n_kept"] == len(got.inputFiles()) == 1
+    assert rep["n_skipped"] == 3
+
+    # an append into a partition directory is found and merged
+    write_table(
+        spark.range(100, 110).select("id", F.lit("EU").alias("region")),
+        path,
+        mode="append",
+        partition_by=["region"],
+    )
+    grown = append_manifest(spark, path)
+    assert grown["n_rows"] == 110
+    assert grown["n_files"] == len(read_table(spark, path).inputFiles())
+    assert verify_manifest(spark, path)["ok"]
+    assert load_snapshot(spark, path, 1).count() == 100
+
+
+def test_read_manifest_json_reads_large_sidecar_fast(spark, tmp_path):
+    """A 1,000-file manifest (~200 KiB) reads back in one JVM call,
+    not one py4j round trip per byte."""
+    import json
+    import time
+
+    from top_produce_etl_spark.io.sinks import read_manifest_json
+
+    files = [
+        {
+            "name": f"part-{i:05d}-23b518d9-3a21-4c8c-9582-d77ad3a0bc58"
+            "-c000.snappy.parquet",
+            "bytes": 100_000 + i,
+            "stats": {"k": [i * 100, i * 100 + 99], "d": ["2024-01-01", "2024-12-31"]},
+        }
+        for i in range(1000)
+    ]
+    manifest = {
+        "format": "parquet",
+        "n_files": len(files),
+        "total_bytes": sum(f["bytes"] for f in files),
+        "files": files,
+        "stats_cols": ["k", "d"],
+        "n_rows": 10**6,
+    }
+    (tmp_path / "_manifest.json").write_text(json.dumps(manifest, indent=1))
+    t0 = time.perf_counter()
+    back = read_manifest_json(spark, str(tmp_path))
+    elapsed = time.perf_counter() - t0
+    assert back == manifest
+    assert elapsed < 2.0, f"read_manifest_json took {elapsed:.2f} s"
+
+
+def test_every_manifest_reader_uses_the_one_sidecar_reader(
+    spark, tmp_path, monkeypatch
+):
+    """One reader: with the sidecar reader replaced by one that
+    raises, every manifest consumer surfaces that error."""
+    import pytest as _pytest
+
+    from top_produce_etl_spark.io import sinks
+    from top_produce_etl_spark.io.sources import (
+        load_pruned,
+        load_snapshot,
+        pruning_report,
+    )
+
+    path = str(tmp_path / "one_reader")
+    spark.range(0, 10).withColumnRenamed("id", "k").write.parquet(path)
+    sinks.write_manifest(spark, path, stats_cols=["k"])
+    assert sinks.snapshot_manifest(spark, path) == 1
+
+    class Sentinel(Exception):
+        pass
+
+    def boom(*args, **kwargs):
+        raise Sentinel
+
+    monkeypatch.setattr(sinks, "_read_sidecar", boom)
+    calls = {
+        "load_pruned": lambda: load_pruned(spark, path, "k", 0, 5),
+        "load_snapshot": lambda: load_snapshot(spark, path, 1),
+        "pruning_report": lambda: pruning_report(spark, path, "k", 0, 5),
+        "verify_manifest": lambda: sinks.verify_manifest(spark, path),
+        "append_manifest": lambda: sinks.append_manifest(spark, path),
+        "snapshot_manifest": lambda: sinks.snapshot_manifest(spark, path),
+    }
+    for name, call in calls.items():
+        with _pytest.raises(Sentinel):
+            call()
+            _pytest.fail(f"{name} did not read through _read_sidecar")
+
+
 def test_copy_table_verified_cross_format(spark, tmp_path):
     """parquet → ORC migration with integrity proof: the fingerprint
     is format/layout independent, so a faithful copy verifies and a

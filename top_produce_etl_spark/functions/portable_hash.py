@@ -47,11 +47,6 @@ def _duck_powers(base: int) -> str:
     return "[" + ",".join(f"CAST({p} AS BIGINT)" for p in _powers(base)) + "]"
 
 
-def portable_hash_col(col: str, base: int = 31) -> Column:
-    """Spark column: portable polynomial hash of a string column."""
-    return F.expr(portable_hash_spark_sql(col, base))
-
-
 def portable_hash_spark_sql(name: str, base: int = 31) -> str:
     return f"""aggregate(
               transform(sequence(1, least(length({name}), {MAX_TOKEN_LEN})),

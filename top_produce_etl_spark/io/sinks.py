@@ -22,7 +22,11 @@ Scale notes:
 
 from __future__ import annotations
 
+import json
+import re
+
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 
 def estimate_row_bytes(
@@ -46,11 +50,10 @@ def estimate_row_bytes(
     writer.format(fmt).save(probe_path)
     probe = df.sparkSession.read.format(fmt).load(probe_path)
     n = probe.count()  # footer metadata for parquet/orc — no scan
-    total, _ = _dir_bytes(probe)
+    total = sum(b for _, b in _table_files(probe, probe_path))
     # clean up via the table's own filesystem (works for any scheme)
-    sc = df.sparkSession.sparkContext
-    p = sc._jvm.org.apache.hadoop.fs.Path(probe_path)
-    p.getFileSystem(sc._jsc.hadoopConfiguration()).delete(p, True)
+    fs, p = _hadoop_path(df.sparkSession, probe_path)
+    fs.delete(p, True)
     return total / n if n else None
 
 
@@ -146,20 +149,45 @@ def write_table(
     writer.format(fmt).save(path)
 
 
-def _dir_bytes(df: DataFrame) -> tuple[int, int]:
-    """(total_bytes, n_files) of the files backing ``df``, from the
-    Hadoop FileSystem API (works for any supported scheme — local,
-    HDFS, s3a — unlike driver-side os.stat)."""
-    sc = df.sparkSession.sparkContext
-    jvm = sc._jvm
-    conf = sc._jsc.hadoopConfiguration()
-    total = n = 0
+def _hadoop_path(spark, path: str):
+    """(FileSystem, Path) for ``path`` through the Hadoop API — any
+    scheme (local, HDFS, s3a), unlike driver-side os.stat."""
+    sc = spark.sparkContext
+    p = sc._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(sc._jsc.hadoopConfiguration()), p
+
+
+def _table_names(spark, root: str):
+    """``(fs, resolve)`` for the table at ``root``: ``resolve(url)``
+    maps a Spark file URL (``inputFiles()`` / ``input_file_name()``,
+    both URL-encoded) to its qualified Hadoop Path and its name
+    relative to ``root`` through root's FileSystem — the basename for
+    an unpartitioned table, ``key=value/…/part-…`` for a partitioned
+    one."""
+    fs, rp = _hadoop_path(spark, root)
+    jvm = spark.sparkContext._jvm
+    base = fs.makeQualified(rp).toString().rstrip("/") + "/"
+
+    def resolve(url: str):
+        p = fs.makeQualified(
+            jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(url))
+        )
+        return p, p.toString().removeprefix(base)
+
+    return fs, resolve
+
+
+def _table_files(df: DataFrame, root: str) -> list[tuple[str, int]]:
+    """``(name, bytes)`` of the files backing ``df``, sorted by name
+    (names relative to the table ``root``, see :func:`_table_names`)
+    — the one file listing behind manifests, compaction and the
+    size report."""
+    fs, resolve = _table_names(df.sparkSession, root)
+    files = []
     for f in df.inputFiles():
-        p = jvm.org.apache.hadoop.fs.Path(f)
-        fs = p.getFileSystem(conf)
-        total += fs.getFileStatus(p).getLen()
-        n += 1
-    return total, n
+        p, name = resolve(f)
+        files.append((name, fs.getFileStatus(p).getLen()))
+    return sorted(files)
 
 
 def compact_table(
@@ -195,9 +223,7 @@ def compact_table(
       converges instead of compounding the mess (round-4 advice).
     """
     jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    hp = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hp.getFileSystem(conf)
+    fs, hp = _hadoop_path(spark, path)
     old = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "__compact_old")
     tmp_p = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "__compact_tmp")
     if fs.exists(old):
@@ -217,7 +243,8 @@ def compact_table(
         fs.delete(tmp_p, True)
 
     df = spark.read.format(fmt).load(path)
-    total, before = _dir_bytes(df)
+    sizes = [b for _, b in _table_files(df, path)]
+    total, before = sum(sizes), len(sizes)
     n_out = max(1, -(-total // max(1, target_file_bytes)))
     if sort_by:
         compacted = df.repartitionByRange(n_out, *sort_by).sortWithinPartitions(
@@ -249,51 +276,115 @@ def compact_table(
     return {"files_before": before, "files_after": after, "bytes": total}
 
 
-def _per_file_stats(
-    df, stats_cols: list[str] | None, jvm
-) -> dict[str, dict]:
-    """Per-file min/max for ``stats_cols``, keyed by file NAME —
-    computed DISTRIBUTED (``groupBy(input_file_name())``), never by
-    the driver touching footers."""
-    if not stats_cols:
-        return {}
-    from pyspark.sql import functions as F
+def _j(v):
+    """JSON form of a stats value: dates/timestamps as ISO strings
+    (which compare in the same order as the values)."""
+    return v.isoformat() if hasattr(v, "isoformat") else v
 
-    aggs = []
-    for c in stats_cols:
-        aggs.append(F.min(c).alias(f"__mn_{c}"))
-        aggs.append(F.max(c).alias(f"__mx_{c}"))
-    rows = (
-        df.groupBy(F.input_file_name().alias("__f"))
-        .agg(*aggs)
-        .collect()
+
+def _read_sidecar(spark, path: str, name: str) -> dict:
+    """The one reader of a table's JSON sidecars (``_manifest.json``,
+    ``_manifest.v<N>.json``): Hadoop FileSystem API (any scheme),
+    the whole stream decoded in ONE JVM call. Raises
+    ``FileNotFoundError`` when absent."""
+    fs, p = _hadoop_path(spark, path.rstrip("/") + "/" + name)
+    if not fs.exists(p):
+        raise FileNotFoundError(f"no {name} under {path}")
+    stream = fs.open(p)
+    try:
+        text = spark.sparkContext._jvm.org.apache.commons.io.IOUtils.toString(
+            stream, "UTF-8"
+        )
+    finally:
+        stream.close()
+    return json.loads(text)
+
+
+def _write_sidecar(
+    spark, path: str, name: str, manifest: dict, overwrite: bool = True
+) -> None:
+    """The one writer of a table's JSON sidecars; with
+    ``overwrite=False`` an existing file raises instead of being
+    clobbered."""
+    fs, p = _hadoop_path(spark, path.rstrip("/") + "/" + name)
+    out = fs.create(p, overwrite)
+    try:
+        out.write(bytes(json.dumps(manifest, indent=1), "utf-8"))
+    finally:
+        out.close()
+
+
+def _load_files(spark, root: str, names: list[str], fmt: str) -> DataFrame:
+    """Read exactly the files ``names`` (relative to the table
+    ``root``, as manifests record them) with ``basePath`` at the
+    root, so a partitioned table keeps its partition columns."""
+    base = root.rstrip("/")
+    return (
+        spark.read.format(fmt)
+        .option("basePath", base)
+        .load([f"{base}/{n}" for n in names])
     )
 
-    def _j(v):
-        return v.isoformat() if hasattr(v, "isoformat") else v
 
-    return {
-        jvm.org.apache.hadoop.fs.Path(r["__f"]).getName(): {
-            c: [_j(r[f"__mn_{c}"]), _j(r[f"__mx_{c}"])]
-            for c in stats_cols
-        }
-        for r in rows
+_FACT_KEYS = ("n_files", "total_bytes", "n_rows", "fingerprint")
+
+
+def _manifest(
+    df: DataFrame,
+    root: str,
+    fmt: str,
+    files: list[tuple[str, int]],
+    stats_cols: list[str] | None = None,
+    fingerprint_cols: list[str] | None = None,
+    decimal_cols: dict[str, str] | None = None,
+) -> dict:
+    """The manifest facts of ``df`` — the table at ``root`` or a
+    slice of it — backed by ``files`` (:func:`_table_files`): per-file
+    entries with min/max for ``stats_cols`` (one distributed
+    ``groupBy(input_file_name())``), file count and byte total, and
+    ``n_rows`` plus the content fingerprint when ``fingerprint_cols``
+    is given (one aggregate scan), else a count. Keys come in the
+    stored JSON order."""
+    stats: dict[str, dict] = {}
+    if stats_cols:
+        aggs = []
+        for c in stats_cols:
+            aggs.append(F.min(c).alias(f"__mn_{c}"))
+            aggs.append(F.max(c).alias(f"__mx_{c}"))
+        _, resolve = _table_names(df.sparkSession, root)
+        rows = df.groupBy(F.input_file_name().alias("__f")).agg(*aggs)
+        for r in rows.collect():
+            stats[resolve(r["__f"])[1]] = {
+                c: [_j(r[f"__mn_{c}"]), _j(r[f"__mx_{c}"])] for c in stats_cols
+            }
+    entries = []
+    for name, size in files:
+        entry = {"name": name, "bytes": size}
+        if name in stats:
+            entry["stats"] = stats[name]
+        entries.append(entry)
+    manifest: dict = {
+        "format": fmt,
+        "n_files": len(entries),
+        "total_bytes": sum(size for _, size in files),
+        "files": entries,
     }
+    if stats_cols:
+        manifest["stats_cols"] = list(stats_cols)
+    if fingerprint_cols:
+        from top_produce_etl_spark.operators.quality import table_fingerprint
 
-
-def _write_manifest_json(spark, path: str, manifest: dict) -> None:
-    import json
-
-    sc = spark.sparkContext
-    jvm = sc._jvm
-    conf = sc._jsc.hadoopConfiguration()
-    mpath = jvm.org.apache.hadoop.fs.Path(
-        path.rstrip("/") + "/_manifest.json"
-    )
-    fs = mpath.getFileSystem(conf)
-    out = fs.create(mpath, True)
-    out.write(bytes(json.dumps(manifest, indent=1), "utf-8"))
-    out.close()
+        row = table_fingerprint(
+            df, cols=fingerprint_cols, decimal_cols=decimal_cols
+        ).collect()[0]
+        manifest["n_rows"] = row["n_rows"]
+        manifest["fingerprint"] = row["fingerprint"]
+        manifest["fingerprint_cols"] = list(fingerprint_cols)
+        # the verifier must re-derive with the SAME canonicalization
+        manifest["decimal_cols"] = dict(decimal_cols or {})
+    else:
+        manifest["n_rows"] = df.count()
+    return manifest
 
 
 def write_manifest(
@@ -313,7 +404,10 @@ def write_manifest(
     100 TB.
 
     File listing uses the Hadoop FileSystem API (any scheme); the
-    row count and fingerprint are ONE aggregate scan. The manifest
+    row count and fingerprint are ONE aggregate scan. Entry names
+    are paths relative to the table root — the basename for an
+    unpartitioned table, ``key=value/…/part-…`` for a partitioned
+    one, so partitioned tables are supported. The manifest
     deliberately excludes mtimes/paths-with-scheme so that two
     byte-identical tables in different locations produce comparable
     manifests. Returns the manifest dict.
@@ -327,67 +421,21 @@ def write_manifest(
     count. An all-null column in a file records ``[None, None]``.
     """
     df = spark.read.format(fmt).load(path)
-    sc = spark.sparkContext
-    jvm = sc._jvm
-    conf = sc._jsc.hadoopConfiguration()
-    per_file_stats = _per_file_stats(df, stats_cols, jvm)
-    files = []
-    for f in sorted(df.inputFiles()):
-        p = jvm.org.apache.hadoop.fs.Path(f)
-        fs = p.getFileSystem(conf)
-        entry = {"name": p.getName(), "bytes": fs.getFileStatus(p).getLen()}
-        if p.getName() in per_file_stats:
-            entry["stats"] = per_file_stats[p.getName()]
-        files.append(entry)
-    manifest: dict = {
-        "format": fmt,
-        "n_files": len(files),
-        "total_bytes": sum(f["bytes"] for f in files),
-        "files": files,
-    }
-    if stats_cols:
-        manifest["stats_cols"] = list(stats_cols)
-    if fingerprint_cols:
-        from top_produce_etl_spark.operators.quality import table_fingerprint
-
-        row = table_fingerprint(
-            df, cols=fingerprint_cols, decimal_cols=decimal_cols
-        ).collect()[0]
-        manifest["n_rows"] = row["n_rows"]
-        manifest["fingerprint"] = row["fingerprint"]
-        manifest["fingerprint_cols"] = list(fingerprint_cols)
-        # the verifier must re-derive with the SAME canonicalization
-        manifest["decimal_cols"] = dict(decimal_cols or {})
-    else:
-        manifest["n_rows"] = df.count()
-    _write_manifest_json(spark, path, manifest)
+    manifest = _manifest(
+        df, path, fmt, _table_files(df, path),
+        stats_cols, fingerprint_cols, decimal_cols,
+    )
+    _write_sidecar(spark, path, "_manifest.json", manifest)
     return manifest
 
 
 def read_manifest_json(spark, path: str) -> dict:
     """Read a table's ``_manifest.json`` sidecar via the Hadoop
     FileSystem API (any scheme). Raises ``FileNotFoundError`` when
-    absent. Shared by verify/append here and
-    ``io.sources.load_pruned``."""
-    import json
-
-    sc = spark.sparkContext
-    jvm = sc._jvm
-    conf = sc._jsc.hadoopConfiguration()
-    mpath = jvm.org.apache.hadoop.fs.Path(
-        path.rstrip("/") + "/_manifest.json"
-    )
-    fs = mpath.getFileSystem(conf)
-    if not fs.exists(mpath):
-        raise FileNotFoundError(f"no _manifest.json under {path}")
-    stream = fs.open(mpath)
-    raw = []
-    b = stream.read()
-    while b >= 0:
-        raw.append(b)
-        b = stream.read()
-    stream.close()
-    return json.loads(bytes(raw).decode("utf-8"))
+    absent. Every manifest reader goes through the same sidecar
+    reader: verify/append/snapshot here, ``io.sources.load_pruned``,
+    ``load_snapshot`` and ``pruning_report``."""
+    return _read_sidecar(spark, path, "_manifest.json")
 
 
 def verify_manifest(
@@ -403,40 +451,22 @@ def verify_manifest(
     changed, data didn't).
     """
     expected = read_manifest_json(spark, path)
-
-    sc = spark.sparkContext
-    jvm = sc._jvm
-    conf = sc._jsc.hadoopConfiguration()
     df = spark.read.format(fmt).load(path)
-    actual: dict = {}
-    files = []
-    for f in sorted(df.inputFiles()):
-        p = jvm.org.apache.hadoop.fs.Path(f)
-        pfs = p.getFileSystem(conf)
-        files.append(
-            {"name": p.getName(), "bytes": pfs.getFileStatus(p).getLen()}
-        )
-    actual["n_files"] = len(files)
-    actual["total_bytes"] = sum(f["bytes"] for f in files)
-    if "fingerprint" in expected:
-        from top_produce_etl_spark.operators.quality import table_fingerprint
-
-        row = table_fingerprint(
-            df,
-            cols=expected["fingerprint_cols"],
-            decimal_cols=expected.get("decimal_cols") or {},
-        ).collect()[0]
-        actual["n_rows"] = row["n_rows"]
-        actual["fingerprint"] = row["fingerprint"]
-    else:
-        actual["n_rows"] = df.count()
+    fresh = _manifest(
+        df, path, fmt, _table_files(df, path),
+        fingerprint_cols=(
+            expected["fingerprint_cols"] if "fingerprint" in expected else None
+        ),
+        decimal_cols=expected.get("decimal_cols"),
+    )
+    actual = {k: fresh[k] for k in _FACT_KEYS if k in fresh}
     mismatches = [
-        k for k in ("n_files", "total_bytes", "n_rows", "fingerprint")
+        k for k in _FACT_KEYS
         if k in expected and k in actual and expected[k] != actual[k]
     ]
     return {
         "ok": not mismatches,
-        "expected": {k: expected.get(k) for k in ("n_files", "total_bytes", "n_rows", "fingerprint")},
+        "expected": {k: expected.get(k) for k in _FACT_KEYS},
         "actual": actual,
         "mismatches": mismatches,
     }
@@ -453,61 +483,38 @@ def append_manifest(spark, path: str, fmt: str = "parquet") -> dict:
     fp(old ∪ new) = (fp_old + fp_new) mod 2^59 for disjoint parts,
     and min/max stats are per-file to begin with. At 100 TB a daily
     append re-manifests in time proportional to the APPEND, never
-    the table. Returns the updated manifest dict; a no-op (and no
-    rewrite) when nothing new is found.
+    the table. Entries are paths relative to the table root, so new
+    files under partition directories (``key=value/``) are found and
+    read with their partition columns. Returns the updated manifest
+    dict; a no-op (and no rewrite) when nothing new is found.
     """
     expected = read_manifest_json(spark, path)
-    sc = spark.sparkContext
-    jvm = sc._jvm
-    conf = sc._jsc.hadoopConfiguration()
-    df = spark.read.format(fmt).load(path)
     known = {f["name"] for f in expected["files"]}
-    new_paths = [
-        f
-        for f in sorted(df.inputFiles())
-        if jvm.org.apache.hadoop.fs.Path(f).getName() not in known
+    new = [
+        f for f in _table_files(spark.read.format(fmt).load(path), path)
+        if f[0] not in known
     ]
-    if not new_paths:
+    if not new:
         return expected
-    ndf = spark.read.format(fmt).load(new_paths)
-    stats_cols = expected.get("stats_cols")
-    per_file_stats = _per_file_stats(ndf, stats_cols, jvm)
-    new_entries = []
-    for f in new_paths:
-        p = jvm.org.apache.hadoop.fs.Path(f)
-        fs = p.getFileSystem(conf)
-        entry = {"name": p.getName(), "bytes": fs.getFileStatus(p).getLen()}
-        if p.getName() in per_file_stats:
-            entry["stats"] = per_file_stats[p.getName()]
-        new_entries.append(entry)
-    files = sorted(
-        list(expected["files"]) + new_entries, key=lambda e: e["name"]
+    ndf = _load_files(spark, path, [name for name, _ in new], fmt)
+    manifest = _manifest(
+        ndf, path, expected.get("format", fmt), new,
+        expected.get("stats_cols"),
+        expected["fingerprint_cols"] if "fingerprint" in expected else None,
+        expected.get("decimal_cols"),
     )
-    manifest: dict = {
-        "format": expected.get("format", fmt),
-        "n_files": len(files),
-        "total_bytes": sum(f["bytes"] for f in files),
-        "files": files,
-    }
-    if stats_cols:
-        manifest["stats_cols"] = list(stats_cols)
-    if "fingerprint" in expected:
-        from top_produce_etl_spark.operators.quality import table_fingerprint
-
-        row = table_fingerprint(
-            ndf,
-            cols=expected["fingerprint_cols"],
-            decimal_cols=expected.get("decimal_cols") or {},
-        ).collect()[0]
-        manifest["n_rows"] = expected["n_rows"] + row["n_rows"]
+    # merge: keys keep _manifest's order, so the JSON layout matches
+    # a from-scratch write_manifest
+    files = sorted(expected["files"] + manifest["files"], key=lambda e: e["name"])
+    manifest["n_files"] = len(files)
+    manifest["total_bytes"] = sum(f["bytes"] for f in files)
+    manifest["files"] = files
+    manifest["n_rows"] += expected["n_rows"]
+    if "fingerprint" in manifest:
         manifest["fingerprint"] = (
-            expected["fingerprint"] + row["fingerprint"]
+            expected["fingerprint"] + manifest["fingerprint"]
         ) % 2**59
-        manifest["fingerprint_cols"] = expected["fingerprint_cols"]
-        manifest["decimal_cols"] = expected.get("decimal_cols") or {}
-    else:
-        manifest["n_rows"] = expected["n_rows"] + ndf.count()
-    _write_manifest_json(spark, path, manifest)
+    _write_sidecar(spark, path, "_manifest.json", manifest)
     return manifest
 
 
@@ -591,27 +598,16 @@ def snapshot_manifest(spark, path: str) -> int:
     compacting if history must survive: re-materialize the old
     version first.
     """
-    import json
-    import re as _re
-
     m = read_manifest_json(spark, path)
-    sc = spark.sparkContext
-    jvm = sc._jvm
-    conf = sc._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    fs = root.getFileSystem(conf)
+    fs, root = _hadoop_path(spark, path)
     latest = 0
     for st in fs.listStatus(root):
-        g = _re.fullmatch(r"_manifest\.v(\d+)\.json", st.getPath().getName())
+        g = re.fullmatch(r"_manifest\.v(\d+)\.json", st.getPath().getName())
         if g:
             latest = max(latest, int(g.group(1)))
     version = latest + 1
-    vpath = jvm.org.apache.hadoop.fs.Path(
-        path.rstrip("/") + f"/_manifest.v{version}.json"
-    )
-    out = fs.create(vpath, False)  # never clobber a snapshot
-    out.write(bytes(json.dumps(m, indent=1), "utf-8"))
-    out.close()
+    # never clobber a snapshot
+    _write_sidecar(spark, path, f"_manifest.v{version}.json", m, overwrite=False)
     return version
 
 
@@ -666,15 +662,7 @@ def file_size_report(
     rewrite cost. At 100 TB this is the table-maintenance dashboard
     row; a scheduler calls :func:`needs_compaction` on it."""
     df = spark.read.format(fmt).load(path)
-    sizes = []
-    sc = spark.sparkContext
-    jvm = sc._jvm
-    conf = sc._jsc.hadoopConfiguration()
-    for f in df.inputFiles():
-        p = jvm.org.apache.hadoop.fs.Path(f)
-        fs = p.getFileSystem(conf)
-        sizes.append(fs.getFileStatus(p).getLen())
-    sizes.sort()
+    sizes = sorted(b for _, b in _table_files(df, path))
     n = len(sizes)
     total = sum(sizes)
 

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from top_produce_etl_spark.io import sinks
 from top_produce_etl_spark.operators._cache import persist_tracked
 
 # Canonical fixture tables (TESTDATA.md).
@@ -244,6 +245,24 @@ def read_table_evolved(
     return getattr(reader, fmt)(path)
 
 
+def _in_range(entry: dict, col: str, lo, hi) -> bool:
+    """The manifest file-skipping rule: keep a file entry unless its
+    stored [min, max] for ``col`` proves no row is in [lo, hi]. No
+    stats → keep (conservative); ``[null, null]`` (all nulls) → skip,
+    a range predicate never matches nulls; otherwise interval
+    overlap, with ``None`` bounds open."""
+    st = (entry.get("stats") or {}).get(col)
+    if st is None:
+        return True
+    fmin, fmax = st
+    lo, hi = sinks._j(lo), sinks._j(hi)
+    return not (
+        (fmin is None and fmax is None)
+        or (hi is not None and fmin is not None and fmin > hi)
+        or (lo is not None and fmax is not None and fmax < lo)
+    )
+
+
 def load_pruned(
     spark: SparkSession,
     path: str,
@@ -266,53 +285,14 @@ def load_pruned(
     whose stats are [null, null] (all nulls) is skipped — a range
     predicate never matches nulls. The residual predicate is still
     applied, so the result is exactly ``read(path).filter(range)``.
+    Manifest entries are paths relative to the table root, so
+    partitioned tables are supported: the kept files are read with
+    ``basePath`` at the root and keep their partition columns.
     """
-    import json
-
-    from pyspark.sql import functions as F
-
-    sc = spark.sparkContext
-    jvm = sc._jvm
-    conf = sc._jsc.hadoopConfiguration()
-    mpath = jvm.org.apache.hadoop.fs.Path(
-        path.rstrip("/") + "/_manifest.json"
-    )
-    fs = mpath.getFileSystem(conf)
-    if not fs.exists(mpath):
-        raise FileNotFoundError(f"no _manifest.json under {path}")
-    stream = fs.open(mpath)
-    raw = []
-    b = stream.read()
-    while b >= 0:
-        raw.append(b)
-        b = stream.read()
-    stream.close()
-    manifest = json.loads(bytes(raw).decode("utf-8"))
-
-    def _j(v):
-        return v.isoformat() if hasattr(v, "isoformat") else v
-
-    jlo, jhi = _j(lo), _j(hi)
-    keep = []
-    for f in manifest["files"]:
-        st = (f.get("stats") or {}).get(col)
-        if st is None:
-            keep.append(f["name"])
-            continue
-        fmin, fmax = st
-        if fmin is None and fmax is None:
-            continue
-        if jhi is not None and fmin is not None and fmin > jhi:
-            continue
-        if jlo is not None and fmax is not None and fmax < jlo:
-            continue
-        keep.append(f["name"])
-
-    base = path.rstrip("/")
+    manifest = sinks.read_manifest_json(spark, path)
+    keep = [f for f in manifest["files"] if _in_range(f, col, lo, hi)]
     if keep:
-        df = spark.read.format(fmt).load(
-            [f"{base}/{n}" for n in keep]
-        )
+        df = sinks._load_files(spark, path, [f["name"] for f in keep], fmt)
     else:
         # nothing overlaps: preserve the schema, return no rows
         df = spark.read.format(fmt).load(path).limit(0)
@@ -329,31 +309,14 @@ def load_snapshot(
     """Time-travel read: load EXACTLY the files recorded in
     ``_manifest.v<version>.json`` (io.sinks.snapshot_manifest) —
     later appends are invisible, so the result is the table as of
-    the snapshot. Valid as long as no rewrite (compaction/overwrite)
-    has replaced the snapshot's files; integrity-check the read with
-    the snapshot's stored fingerprint when it matters."""
-    import json
-
-    sc = spark.sparkContext
-    jvm = sc._jvm
-    conf = sc._jsc.hadoopConfiguration()
-    vpath = jvm.org.apache.hadoop.fs.Path(
-        path.rstrip("/") + f"/_manifest.v{version}.json"
-    )
-    fs = vpath.getFileSystem(conf)
-    if not fs.exists(vpath):
-        raise FileNotFoundError(f"no _manifest.v{version}.json under {path}")
-    stream = fs.open(vpath)
-    raw = []
-    b = stream.read()
-    while b >= 0:
-        raw.append(b)
-        b = stream.read()
-    stream.close()
-    manifest = json.loads(bytes(raw).decode("utf-8"))
-    base = path.rstrip("/")
-    return spark.read.format(fmt).load(
-        [f"{base}/{f['name']}" for f in manifest["files"]]
+    the snapshot. Entries are paths relative to the table root, so a
+    partitioned table reads back with its partition columns. Valid
+    as long as no rewrite (compaction/overwrite) has replaced the
+    snapshot's files; integrity-check the read with the snapshot's
+    stored fingerprint when it matters."""
+    manifest = sinks._read_sidecar(spark, path, f"_manifest.v{version}.json")
+    return sinks._load_files(
+        spark, path, [f["name"] for f in manifest["files"]], fmt
     )
 
 
@@ -363,37 +326,14 @@ def pruning_report(spark, path: str, col: str, lo=None, hi=None) -> dict:
     decided from the sidecar alone — the observability companion to
     :func:`load_pruned` for choosing layout (is the table range-
     clustered enough on ``col`` for skipping to pay?)."""
-    from top_produce_etl_spark.io.sinks import read_manifest_json
-
-    manifest = read_manifest_json(spark, path)
-
-    def _j(v):
-        return v.isoformat() if hasattr(v, "isoformat") else v
-
-    jlo, jhi = _j(lo), _j(hi)
-    kept = skipped = bk = 0
-    for f in manifest["files"]:
-        st = (f.get("stats") or {}).get(col)
-        keep = True
-        if st is not None:
-            fmin, fmax = st
-            if fmin is None and fmax is None:
-                keep = False
-            elif jhi is not None and fmin is not None and fmin > jhi:
-                keep = False
-            elif jlo is not None and fmax is not None and fmax < jlo:
-                keep = False
-        if keep:
-            kept += 1
-            bk += f["bytes"]
-        else:
-            skipped += 1
+    manifest = sinks.read_manifest_json(spark, path)
+    keep = [f for f in manifest["files"] if _in_range(f, col, lo, hi)]
     return {
         "n_files": manifest["n_files"],
-        "n_kept": kept,
-        "n_skipped": skipped,
+        "n_kept": len(keep),
+        "n_skipped": len(manifest["files"]) - len(keep),
         "bytes_total": manifest["total_bytes"],
-        "bytes_kept": bk,
+        "bytes_kept": sum(f["bytes"] for f in keep),
     }
 
 

@@ -112,13 +112,6 @@ def dedup_first_by_time(
     )
 
 
-def with_watermark_batch(df: DataFrame, ts_col: str, delay: str) -> DataFrame:
-    """Watermark declaration seam: a no-op in batch (Spark ignores
-    watermarks outside streaming) kept so pipelines declare lateness
-    bounds once and run unchanged under readStream."""
-    return df.withWatermark(ts_col, delay) if df.isStreaming else df
-
-
 def cohort_retention(
     df: DataFrame,
     user_col: str,

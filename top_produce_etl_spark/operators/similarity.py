@@ -70,10 +70,6 @@ def dot_fn(scoring: str):
     raise ValueError(f"unknown scoring mode: {scoring!r}")
 
 
-def with_norm(df: DataFrame, vec_col: str, out_col: str = "norm") -> DataFrame:
-    return df.withColumn(out_col, F.sqrt(_dec_dot(F.col(vec_col), F.col(vec_col))))
-
-
 def cosine_topk_bruteforce(
     corpus: DataFrame,
     queries: DataFrame,
