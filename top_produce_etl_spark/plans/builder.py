@@ -19,7 +19,11 @@ fold, join strategies stay adaptive. Op order in the config is a
 
 from __future__ import annotations
 
-from typing import Any
+import importlib
+import inspect
+import keyword
+from functools import cache
+from typing import Any, Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,44 +37,6 @@ from top_produce_etl_spark.operators._cache import (  # noqa: F401
 )
 from top_produce_etl_spark.operators.joins import maybe_broadcast
 from top_produce_etl_spark.operators.topn import top_n_window
-
-# Ops whose IMPLEMENTATION scans its input DataFrame more than once
-# (a count/rollup aggregate plus a join/filter back, a multi-signal
-# fan-out, an eager model fit plus the final projection, ...). In a
-# COMPOSED pipeline the input is an arbitrary upstream funnel, and
-# without a boundary each scan re-derives that whole funnel — the
-# super-linear composition cost bench.py's funnel probe gates
-# (observed 2.0× on mixture→strip→curate→budget→pack before this:
-# curation_funnel alone re-ran the span-strip stage three times).
-# build_pipeline persists the stage boundary before such an op —
-# but ONLY when upstream ops have already been applied: a raw
-# source scan stays lazy so Catalyst keeps pushdown/pruning across
-# the op chain, and single-op specs (the battery surface) are
-# byte-identical to calling the operator directly.
-_MULTI_SCAN_OPS = frozenset({
-    "cap_per_category",
-    "strip_duplicate_spans",
-    "mask_contaminated_spans",
-    "curation_funnel",
-    "budget_select",
-    "dsir_select",
-    "rebalance_mixture",
-    "temperature_mix",
-    "upsample_mixture",
-    "resolve_entities",
-    "privacy_gate",
-    "quality_classifier_filter",
-    "normalize_dedup",
-    "url_dedup",
-    "langid_filter",
-    "surprisal_bucket",
-    "bt_ratings",
-    "pair_gap_filter",
-    "html_extract",
-    "robots_filter",
-    "mojibake_repair",
-    "paragraph_dedup",
-})
 
 
 def run_topn_job(
@@ -185,84 +151,30 @@ def build_pipeline(
 ) -> DataFrame:
     """Compile a declarative pipeline spec to a DataFrame plan.
 
-    spec = {
-      "source": "lineitem" | {"path": ..., "format": ...},
-      "ops": [
-        {"op": "filter", "expr": "l_discount > 0.05"},
-        {"op": "select", "cols": ["a", "b"]},
-        {"op": "with_column", "name": "x", "expr": "a * 2"},
-        {"op": "join", "table": "orders", "on": "...", "how": "inner",
-         "broadcast": true},
-        {"op": "group_agg", "by": ["k"], "aggs": {"total": "sum(x)"}},
-        {"op": "topn", "group_by": "k", "metric": "total", "n": 3,
-         "tiebreak": "a"},
-        {"op": "distinct"} | {"op": "sort", "by": ["k"]} |
-        {"op": "limit", "n": 10} |
-        {"op": "union", "table": "other"} | {"op": "dropna", ...} |
-        {"op": "fillna", "value": 0, "cols": [...]},
-        {"op": "rebalance_mixture", "category_col": "lang",
-         "key_col": "doc_id", "weights": {"en": 3, "de": 1}} |
-        {"op": "temperature_mix", "category_col": "source",
-         "key_col": "doc_id"} |
-        {"op": "upsample_mixture", "category_col": "lang",
-         "key_col": "doc_id", "epochs": {"zh": 3.0, "es": 2.5}},
-        {"op": "cap_per_category", "category_col": "source",
-         "key_col": "doc_id", "cap": 100},
-        {"op": "strip_duplicate_spans", "id_col": "doc_id",
-         "text_col": "text", "k": 8, "min_docs": 2},
-        {"op": "mask_contaminated_spans", "id_col": "doc_id",
-         "text_col": "text", "ref_table": "test_docs", "k": 3,
-         "sentinel": "<mask>"},
-        {"op": "curation_funnel", "id_col": "doc_id", "text_col": "text",
-         "lang": "en", "min_quality": 0.65, "max_dup_ngram_frac": 0.05,
-         "max_mean_info_micro": 3450000, "keep_only": false},
-        {"op": "dsir_select", "id_col": "doc_id", "text_col": "text",
-         "target_pred": "lang = 'en'", "n": 100},
-        {"op": "budget_select", "text_col": "text", "budget": 20000,
-         "score": "quality", "n_buckets": 1000},
-        {"op": "pack_sequences", "id_col": "doc_id", "text_col": "text",
-         "budget": 512, "n_shards": 32},
-        {"op": "url_parse", "url_col": "url"} |
-        {"op": "url_normalize", "url_col": "url",
-         "out": "canonical_url"} |
-        {"op": "url_dedup", "id_col": "doc_id", "url_col": "url",
-         "keep": "rows|report"} |
-        {"op": "url_domain", "host_col": "host", "out": "domain",
-         "psl": true, "psl_path": "optional full PSL file"},
-        {"op": "langid_filter", "id_col": "doc_id", "text_col": "text",
-         "train_table": "lang_reference", "lang_col": "lang",
-         "keep_lang": "en", "iters": 3} |
-        {"op": "surprisal_bucket", "id_col": "doc_id",
-         "text_col": "text", "by": [], "keep": ["head", "middle"],
-         "frozen": {"path": "optional stored artifact",
-                    "train_table": "optional"}},
-        {"op": "html_extract", "html_col": "html",
-         "out": "text"} |
-        {"op": "paragraph_dedup", "id_col": "doc_id",
-         "text_col": "text", "min_chars": 1} |
-        {"op": "mojibake_repair", "text_col": "text",
-         "keep_flag": False} |
-        {"op": "robots_filter", "robots_table": "robots",
-         "agent": "trainingbot", "domain_col": "domain",
-         "path_col": "path"} |
-        {"op": "bt_ratings", "winner_col": "winner",
-         "loser_col": "loser", "iters": 3} |
-        {"op": "pair_gap_filter", "winner_col": "winner",
-         "loser_col": "loser", "iters": 3, "train_table": "optional",
-         "min_gap_micro": 0, "max_gap_micro": 2500000}
-      ]
-    }
+    ``spec = {"source": <table name> | {"path", "format", "options"},
+    "ops": [{"op": <name>, <key>: <value>, ...}, ...]}``. Each op name
+    is an entry of ``_OPS``: an operator, or a small adapter where the
+    op does more than one call. An op's keys are the keyword
+    parameters of its entry (a Python keyword such as ``from`` is
+    spelled ``from_`` there); a key the spec omits takes the
+    operator's own default. Unknown and missing keys, unknown ops and
+    unknown top-level spec keys are rejected with ``ValueError``
+    before any op runs.
 
     ``tables`` resolves by-name sources (tests register fixture
     DataFrames; production resolves catalog tables).
 
-    Caching contract: stage boundaries feeding a multi-scan op are
-    persisted (MEMORY_AND_DISK) through ``operators._cache`` and are
-    NOT released here — the returned plan is lazy and reads them.
-    The caller materializes it inside ``pipeline_session()`` (defined
-    in ``operators._cache``, importable from here), which releases
-    them on exit.
+    Caching contract: the input of an op that re-reads it
+    (``_Op.rereads``) is persisted (MEMORY_AND_DISK) through
+    ``operators._cache`` when upstream ops have been applied, and is
+    NOT released here — the returned plan is lazy and reads it. The
+    caller materializes the plan inside ``pipeline_session()``
+    (defined in ``operators._cache``, importable from here), which
+    releases the persists on exit.
     """
+    unknown = sorted(set(spec) - {"source", "ops"})
+    if unknown:
+        raise ValueError(f"pipeline spec has unknown keys: {unknown}")
     tables = tables or {}
 
     def resolve(src: Any) -> DataFrame:
@@ -275,842 +187,616 @@ def build_pipeline(
             options=src.get("options"),
         )
 
+    bound = [_bind(op, resolve) for op in spec.get("ops", [])]
     df = resolve(spec["source"])
-    applied = 0
-    for op in spec.get("ops", []):
-        kind = op["op"]
-        if kind in _MULTI_SCAN_OPS and applied:
+    for i, (entry, fn, kwargs) in enumerate(bound):
+        # a raw source scan stays lazy, so Catalyst keeps pushdown and
+        # pruning across the op chain and a single-op spec is the
+        # operator call itself
+        if entry.rereads and i:
             df = persist_tracked(df)
-        applied += 1
-        if kind == "filter":
-            df = df.filter(F.expr(op["expr"]))
-        elif kind == "select":
-            df = df.select(*[F.expr(c) for c in op["cols"]])
-        elif kind == "with_column":
-            df = df.withColumn(op["name"], F.expr(op["expr"]))
-        elif kind == "rename":
-            df = df.withColumnRenamed(op["from"], op["to"])
-        elif kind == "drop":
-            df = df.drop(*op["cols"])
-        elif kind == "join":
-            right = resolve(op["table"])
-            if op.get("broadcast"):
-                # size-gated: the config asserts intent, the engine
-                # still refuses to force-broadcast something that no
-                # longer fits under the session threshold
-                right = maybe_broadcast(right)
-            on = op["on"]
-            cond = F.expr(on) if isinstance(on, str) and " " in on else on
-            df = df.join(right, on=cond, how=op.get("how", "inner"))
-        elif kind == "group_agg":
-            aggs = [F.expr(e).alias(name) for name, e in op["aggs"].items()]
-            df = df.groupBy(*op.get("by", [])).agg(*aggs)
-        elif kind == "topn":
-            df = top_n_window(
-                df,
-                group_by=op["group_by"],
-                metric=op["metric"],
-                n=int(op["n"]),
-                tiebreak=op.get("tiebreak"),
-            )
-        elif kind == "distinct":
-            df = df.distinct()
-        elif kind == "dedup":
-            # exact dedup on a key subset (first row per key,
-            # nondeterministic without a prior sort — callers that
-            # need a specific survivor should use op=topn with n=1)
-            df = df.dropDuplicates(subset=op.get("cols"))
-        elif kind == "dropna":
-            df = df.na.drop(
-                how=op.get("how", "any"), subset=op.get("cols")
-            )
-        elif kind == "fillna":
-            df = df.na.fill(op["value"], subset=op.get("cols"))
-        elif kind == "sort":
-            cols = [
-                F.col(c[1:]).desc() if c.startswith("-") else F.col(c).asc()
-                for c in op["by"]
-            ]
-            df = df.orderBy(*cols)
-        elif kind == "limit":
-            df = df.limit(int(op["n"]))
-        elif kind == "union":
-            df = df.unionByName(
-                resolve(op["table"]),
-                allowMissingColumns=bool(op.get("allow_missing", False)),
-            )
-        elif kind == "sample":
-            df = df.sample(fraction=float(op["fraction"]), seed=int(op.get("seed", 42)))
-        elif kind == "curation_funnel":
-            # the LLM-data curation deliverable as a declarative
-            # stage: four verified signals + thresholds straight from
-            # config (operators/textquality.py::curation_funnel — the
-            # oracle-checked query delegates to the same function, so
-            # a YAML-driven run inherits its verification)
-            from top_produce_etl_spark.operators.textquality import (
-                curation_funnel,
-            )
-
-            verdicts = curation_funnel(
-                df,
-                op["id_col"],
-                op["text_col"],
-                lang=op.get("lang", "en"),
-                min_quality=float(op.get("min_quality", 0.65)),
-                max_dup_ngram_frac=float(op.get("max_dup_ngram_frac", 0.05)),
-                max_mean_info_micro=int(
-                    op.get("max_mean_info_micro", 3_450_000)
-                ),
-                ngram=int(op.get("ngram", 3)),
-            )
-            if op.get("keep_only"):
-                # keep-side corpus with original columns (the funnel
-                # as a FILTER: survivors only, audit trail dropped)
-                df = df.join(
-                    verdicts.filter(F.col("keep")).select(op["id_col"]),
-                    op["id_col"],
-                    "left_semi",
-                )
-            else:
-                df = verdicts
-        elif kind == "strip_duplicate_spans":
-            # exact-substring dedup as a declarative stage: the
-            # cleaned corpus replaces (id, text) — same verified
-            # function behind the stripped_duplicate_corpus oracle
-            from top_produce_etl_spark.operators.dedup import (
-                strip_duplicate_spans,
-            )
-
-            df = strip_duplicate_spans(
-                df,
-                op["id_col"],
-                op["text_col"],
-                k=int(op.get("k", 8)),
-                min_docs=int(op.get("min_docs", 2)),
-            )
-        elif kind == "mask_contaminated_spans":
-            # span-level decontamination from config: detect spans
-            # leaked from a reference table (typically the test
-            # split) and mask them with the sentinel — the verified
-            # path behind masked_decontamination_proof
-            from top_produce_etl_spark.operators.dedup import (
-                contaminated_spans,
-                mask_spans,
-            )
-
-            ref = resolve(op["ref_table"])
-            spans = contaminated_spans(
-                df,
-                ref,
-                op["id_col"],
-                op["text_col"],
-                k=int(op.get("k", 3)),
-                ref_text_col=op.get("ref_text_col"),
-            )
-            df = mask_spans(
-                df,
-                spans,
-                op["id_col"],
-                op["text_col"],
-                sentinel=op.get("sentinel", "<mask>"),
-            )
-        elif kind == "rebalance_mixture":
-            # corpus composition from config: explicit integer recipe
-            from top_produce_etl_spark.operators.mixture import (
-                rebalance_mixture,
-            )
-
-            df = rebalance_mixture(
-                df,
-                op["category_col"],
-                op["key_col"],
-                {str(c): int(w) for c, w in op["weights"].items()},
-                salt=op.get("salt", "mix-v1"),
-                strategy=op.get("strategy", "hash"),
-            )
-        elif kind == "temperature_mix":
-            # corpus composition from config: alpha=0.5 recipe
-            # derived from the data in-plan (no weights to maintain)
-            from top_produce_etl_spark.operators.mixture import (
-                temperature_rebalance,
-            )
-
-            df = temperature_rebalance(
-                df,
-                op["category_col"],
-                op["key_col"],
-                salt=op.get("salt", "temp-v1"),
-            )
-        elif kind == "upsample_mixture":
-            # epoch-aware upsampling from config (fractional epochs
-            # per category; replicas carry an epoch index)
-            from top_produce_etl_spark.operators.mixture import (
-                upsample_mixture,
-            )
-
-            df = upsample_mixture(
-                df,
-                op["category_col"],
-                op["key_col"],
-                {str(c): float(e) for c, e in op["epochs"].items()},
-                salt=op.get("salt", "epoch-v1"),
-            )
-        elif kind == "cap_per_category":
-            # per-domain frequency cap from config
-            from top_produce_etl_spark.operators.mixture import (
-                cap_per_category,
-            )
-
-            df = cap_per_category(
-                df,
-                op["category_col"],
-                op["key_col"],
-                int(op["cap"]),
-                salt=op.get("salt", "cap-v1"),
-                strategy=op.get("strategy", "hash"),
-            )
-        elif kind == "resolve_entities":
-            # record linkage from config: blocking + declarative
-            # comparison + transitive closure; emits (id, entity_id)
-            # unless golden-record aggregates are declared, in which
-            # case the merged survivorship rows are emitted
-            # (operators/linkage.py — the verified functions behind
-            # entity_pairs_parts / entity_golden_parts)
-            from top_produce_etl_spark.operators.linkage import (
-                golden_records,
-                resolve_entities,
-            )
-
-            assign = resolve_entities(
-                df,
-                op["id_col"],
-                list(op["block_cols"]),
-                op["match_pred"],
-                attrs=list(op.get("attrs", [])),
-            )
-            if op.get("golden"):
-                df = golden_records(
-                    df,
-                    assign,
-                    op["id_col"],
-                    {str(k): str(v) for k, v in op["golden"].items()},
-                )
-            else:
-                df = assign
-        elif kind == "budget_select":
-            # token-budget quality selection from config: keep the
-            # best score-buckets whose cumulative token mass fits
-            # the budget (operators/mixture.py::budget_select — the
-            # verified function behind budget_selected_corpus).
-            # score defaults to the house quality_score over
-            # text_col; tokens defaults to the whitespace count.
-            from top_produce_etl_spark.functions.text import (
-                quality_score,
-                tokens as _tok,
-            )
-            from top_produce_etl_spark.operators.mixture import (
-                budget_select,
-            )
-
-            score = (
-                quality_score(op["text_col"])
-                if op.get("score") in (None, "quality")
-                else F.expr(op["score"])
-            )
-            tok = (
-                F.size(_tok(op["text_col"]))
-                if op.get("tokens") is None
-                else F.expr(op["tokens"])
-            )
-            kept = budget_select(
-                df.withColumn("__q", score).withColumn("__toks", tok),
-                "__q",
-                "__toks",
-                budget=int(op["budget"]),
-                n_buckets=int(op.get("n_buckets", 1000)),
-            )
-            df = (
-                kept
-                if op.get("keep_audit")
-                else kept.drop("__q", "__toks", "__bucket")
-            )
-        elif kind == "pack_sequences":
-            # packed training layout from config: every surviving
-            # document gets a (shard, bin, pos) slot under the token
-            # budget (operators/packing.py — the verified function
-            # behind packed_training_layout)
-            from top_produce_etl_spark.functions.text import tokens as _tok
-            from top_produce_etl_spark.operators.packing import (
-                pack_sequences,
-            )
-
-            ln = (
-                F.expr(op["len_expr"])
-                if "len_expr" in op
-                else F.size(_tok(op["text_col"]))
-            )
-            df = pack_sequences(
-                df,
-                op["id_col"],
-                ln,
-                budget=int(op["budget"]),
-                n_shards=int(op.get("n_shards", 32)),
-            )
-        elif kind == "dsir_select":
-            # DSIR importance selection from config: keep the n
-            # documents most like the target slice (the same
-            # verified function behind dsir_selection_top100; the
-            # xxhash64 featurizer is the production default, the
-            # portable hasher opts into oracle-parity runs)
-            from top_produce_etl_spark.operators.importance import (
-                dsir_scores,
-            )
-
-            scores = dsir_scores(
-                df,
-                op["id_col"],
-                op["text_col"],
-                op["target_pred"],
-                buckets=int(op.get("buckets", 512)),
-                hasher=op.get("hasher", "xxhash64"),
-            )
-            keep = (
-                scores.orderBy(
-                    F.col("score_micro").desc(),
-                    F.col(op["id_col"]).asc(),
-                )
-                .limit(int(op["n"]))
-                .select(op["id_col"])
-            )
-            df = df.join(keep, op["id_col"], "left_semi")
-        elif kind == "privacy_gate":
-            # Declarative release gate (r7): run any subset of the
-            # privacy trio over the current frame and either FAIL
-            # the build (the assert_quality precedent — a release
-            # pipeline must not silently publish) or DROP the
-            # violating quasi-identifier groups (suppression, the
-            # standard k-anonymization remedy). The gates are the
-            # verified operators behind the oracle-checked
-            # k_anonymity/l_diversity/t_closeness battery entries.
-            from top_produce_etl_spark.operators.quality import (
-                k_anonymity_violations,
-                l_diversity_violations,
-                t_closeness_violations,
-            )
-
-            quasi = list(op["quasi_cols"])
-            viols = []
-            if "k" in op:
-                viols.append(
-                    ("k_anonymity",
-                     k_anonymity_violations(df, quasi, int(op["k"])))
-                )
-            if "l" in op:
-                viols.append(
-                    ("l_diversity",
-                     l_diversity_violations(
-                         df, quasi, op["l"]["sensitive"],
-                         int(op["l"]["min"]),
-                     ))
-                )
-            if "t" in op:
-                viols.append(
-                    ("t_closeness",
-                     t_closeness_violations(
-                         df, quasi, op["t"]["sensitive"],
-                         int(op["t"]["t_micro"]),
-                     ))
-                )
-            if not viols:
-                raise ValueError(
-                    "privacy_gate needs at least one of k/l/t"
-                )
-            action = op.get("action", "fail")
-            if action == "fail":
-                # one eager count per gate serves both the emptiness
-                # test and the message — the fail path is already
-                # eager, and a second full aggregation per violated
-                # gate bought nothing (round-8 advisor fix)
-                bad = []
-                for name, v in viols:
-                    n = v.count()
-                    if n > 0:
-                        bad.append(f"{name}: {n} violating groups")
-                if bad:
-                    raise ValueError(
-                        "privacy gate failed: " + "; ".join(bad)
-                    )
-            elif action == "drop":
-                for _, v in viols:
-                    df = df.join(
-                        v.select(*quasi), quasi, "left_anti"
-                    )
-            else:
-                raise ValueError(f"unknown privacy_gate action: {action}")
-        elif kind == "normalize_dedup":
-            # CCNet-normalized exact dedup from config (r9): derive
-            # the case/digit/punct/whitespace-invariant key at scan
-            # speed and keep ONE row per class (min-id keeper) — the
-            # standard web-corpus dedup stage between URL dedup and
-            # near-dup MinHash. keep="rows" returns the surviving
-            # original rows (a left-semi on the keeper ids);
-            # keep="report" returns the per-class dedup report.
-            from top_produce_etl_spark.operators.dedup import (
-                normalized_exact_dedup,
-            )
-
-            rep = normalized_exact_dedup(
-                df, op["text_col"], op["id_col"]
-            )
-            if op.get("keep", "rows") == "rows":
-                df = df.join(
-                    rep.select(op["id_col"]), op["id_col"], "left_semi"
-                )
-            else:
-                df = rep
-        elif kind == "quality_classifier_filter":
-            # Learned quality gate from config (r9): train the
-            # in-engine quasi-logistic classifier on the CURRENT
-            # frame against a declarative 0/1 label expression, score
-            # every row, and keep rows whose fast-sigmoid probability
-            # clears the threshold — the fasttext-shaped "train a
-            # filter on weak labels, keep the top slice" curation
-            # stage, fully inside the plan. Training is iterative
-            # (model-sized collects only); inference is one broadcast
-            # model join.
-            from top_produce_etl_spark.operators.classifier import (
-                score_quasi_logreg,
-                train_quasi_logreg,
-            )
-
-            nb = int(op.get("n_buckets", 32))
-            labeled = df.withColumn(
-                "__y", F.expr(op["label_expr"]).cast("int")
-            )
-            model = train_quasi_logreg(
-                labeled,
-                op["id_col"],
-                op["text_col"],
-                "__y",
-                n_buckets=nb,
-                iters=int(op.get("iters", 12)),
-                lr=tuple(op.get("lr", (1, 50))),
-            )
-            scored = score_quasi_logreg(
-                df, model, op["id_col"], op["text_col"], n_buckets=nb
-            ).filter(
-                F.col("score_micro")
-                >= int(op.get("threshold_micro", 500_000))
-            )
-            df = df.join(
-                scored.select(F.col("id").alias(op["id_col"])),
-                op["id_col"],
-                "left_semi",
-            )
-        elif kind == "langid_filter":
-            # In-engine language gate (r10): train the multi-head
-            # one-vs-rest langid on a labeled reference table, score
-            # the CURRENT frame at scan speed (one broadcast-model
-            # join + one per-doc aggregate), keep rows predicted as
-            # ``keep_lang`` — the CCNet chain's first content stage,
-            # now producible by the engine instead of consumed as a
-            # given column.
-            from top_produce_etl_spark.operators.langid import (
-                score_langid,
-                train_langid,
-            )
-
-            ref = resolve(op["train_table"])
-            nb = int(op.get("n_buckets", 64))
-            hm = op.get("hash_mode", "portable")
-            langs = tuple(
-                op.get(
-                    "langs",
-                    sorted(
-                        r[0]
-                        for r in ref.select(
-                            op.get("lang_col", "lang")
-                        ).distinct().collect()
-                        # |langs|-sized collect — model-sized
-                    ),
-                )
-            )
-            model = train_langid(
-                ref,
-                id_col=op.get("train_id_col", op["id_col"]),
-                text_col=op.get("train_text_col", op["text_col"]),
-                lang_col=op.get("lang_col", "lang"),
-                langs=langs,
-                iters=int(op.get("iters", 3)),
-                n_buckets=nb,
-                lr=tuple(op.get("lr", (1, 4))),
-                hash_mode=hm,
-            )
-            scored = score_langid(
-                df, model, op["id_col"], op["text_col"],
-                langs=langs, n_buckets=nb, hash_mode=hm,
-            ).filter(F.col("pred_lang") == op["keep_lang"])
-            df = df.join(
-                scored.select(F.col("id").alias(op["id_col"])),
-                op["id_col"],
-                "left_semi",
-            )
-        elif kind == "surprisal_bucket":
-            # CCNet head/middle/tail perplexity buckets (r10):
-            # unigram-LM surprisal terciles over the slim score
-            # relation. ``keep`` filters to the named buckets;
-            # without it the ppl_bucket column is attached.
-            #
-            # ``frozen: {path, train_table?}`` (r11) switches to the
-            # STORED-ARTIFACT lifecycle: LM counts + cutoff pairs
-            # built from train_table (default: the flowing frame)
-            # and saved on first miss — the hybrid_serve stored-PQ
-            # precedent — then every run scores by pure comparison
-            # against the loaded artifact: append-stable,
-            # streaming-legal, no wide sort.
-            from top_produce_etl_spark.operators.textquality import (
-                perplexity_buckets,
-            )
-
-            frozen = op.get("frozen")
-            if frozen:
-                import os as _os
-
-                from top_produce_etl_spark.operators.textquality import (
-                    bucket_frozen,
-                    load_surprisal_reference,
-                    save_surprisal_reference,
-                    score_with_frozen_lm,
-                    surprisal_cutoffs,
-                    unigram_lm,
-                )
-
-                fpath = frozen["path"]
-                by = tuple(op.get("by", ()))
-                if not _os.path.exists(_os.path.join(fpath, "lm")):
-                    train = (
-                        resolve(frozen["train_table"])
-                        if frozen.get("train_table")
-                        else df
-                    )
-                    save_surprisal_reference(
-                        unigram_lm(train, op["text_col"]),
-                        surprisal_cutoffs(
-                            train, op["id_col"], op["text_col"], by
-                        ),
-                        fpath,
-                    )
-                lm, cuts = load_surprisal_reference(spark, fpath)
-                scored = score_with_frozen_lm(
-                    df, lm, op["id_col"], op["text_col"]
-                )
-                if by:
-                    scored = scored.join(
-                        df.select(op["id_col"], *by), op["id_col"]
-                    )
-                b = bucket_frozen(scored, cuts, op["id_col"], by)
-            else:
-                b = perplexity_buckets(
-                    df,
-                    op["id_col"],
-                    op["text_col"],
-                    by=tuple(op.get("by", ())),
-                )
-            keep = op.get("keep")
-            if keep:
-                df = df.join(
-                    b.where(F.col("ppl_bucket").isin(*keep)).select(
-                        op["id_col"]
-                    ),
-                    op["id_col"],
-                    "left_semi",
-                )
-            else:
-                df = df.join(
-                    b.select(op["id_col"], "ppl_bucket"), op["id_col"]
-                )
-        elif kind == "paragraph_dedup":
-            # paragraph-grain first-occurrence dedup (r11): the
-            # flowing frame's text is REWRITTEN; non-text columns
-            # are re-joined by id.
-            from top_produce_etl_spark.operators.dedup import (
-                paragraph_dedup,
-            )
-
-            idc = op.get("id_col", "doc_id")
-            txc = op.get("text_col", "text")
-            pd = paragraph_dedup(
-                df, idc, txc, min_chars=int(op.get("min_chars", 1))
-            )
-            df = df.drop(txc).join(
-                pd.select(
-                    idc, F.col("text_clean").alias(txc)
-                ),
-                idc,
-            )
-        elif kind == "mojibake_repair":
-            # charset repair (r11): gated UTF-8-as-Latin-1 inversion
-            # — the crawl chain's step between extraction and
-            # language identification.
-            from top_produce_etl_spark.operators.encoding import (
-                repair_mojibake,
-            )
-
-            df = repair_mojibake(
-                df,
-                text_col=op.get("text_col", "text"),
-                out=op.get("out"),
-            )
-            if not op.get("keep_flag", False):
-                df = df.drop("was_mojibake")
-        elif kind == "robots_filter":
-            # robots.txt compliance gate (r11): parse the robots
-            # dimension for the configured agent, keep only URLs the
-            # RFC 9309 longest-match verdict allows.
-            from top_produce_etl_spark.operators.robots import (
-                parse_robots,
-                robots_allowed,
-            )
-
-            rules = parse_robots(
-                resolve(op["robots_table"]),
-                id_col=op.get("domain_col", "domain"),
-                text_col=op.get("robots_text_col", "robots_txt"),
-                agent=op.get("agent", "*"),
-            )
-            df = robots_allowed(
-                df,
-                rules,
-                domain_col=op.get("domain_col", "domain"),
-                path_col=op.get("path_col", "path"),
-            ).where(F.col("allowed")).drop("allowed", "matched_len")
-        elif kind == "html_extract":
-            # HTML -> visible text (r11): the crawl pipeline's first
-            # step as chained regexp_replace projections — composes
-            # upstream of clean_lines / langid_filter /
-            # normalize_dedup in one config.
-            from top_produce_etl_spark.operators.html import (
-                extract_html_text,
-            )
-
-            df = extract_html_text(
-                df,
-                html_col=op.get("html_col", "html"),
-                out=op.get("out", "text"),
-            )
-        elif kind == "bt_ratings":
-            # Bradley-Terry MM ratings from the flowing preference-
-            # pair relation (r11, completing the r10 preference
-            # family's YAML surface): df must carry winner/loser
-            # columns; the frame BECOMES the (item, games, wins,
-            # r_micro) rating relation — bit-exact vs the
-            # bt_preference_ratings battery oracle's engine path.
-            from top_produce_etl_spark.operators.preferences import (
-                bt_ratings,
-            )
-
-            df = bt_ratings(
-                df,
-                winner_col=op.get("winner_col", "winner"),
-                loser_col=op.get("loser_col", "loser"),
-                iters=int(op.get("iters", 3)),
-            )
-        elif kind == "pair_gap_filter":
-            # Rating-gap pair curation (r11): rate items by BT MM
-            # (on the flowing pairs, or a ``train_table`` reference),
-            # attach each pair's signed winner−loser gap, keep pairs
-            # inside [min_gap_micro, max_gap_micro] — the RLHF-data
-            # shape: blowout pairs teach nothing, near-tie/inverted
-            # pairs are annotation-noise candidates. The rating,
-            # winner/loser and gap columns stay on the survivors
-            # (curation decisions must be auditable).
-            from top_produce_etl_spark.operators.preferences import (
-                bt_ratings,
-                with_rating_gap,
-            )
-
-            wcol = op.get("winner_col", "winner")
-            lcol = op.get("loser_col", "loser")
-            src = (
-                resolve(op["train_table"])
-                if op.get("train_table")
-                else df
-            )
-            ratings = bt_ratings(
-                src, wcol, lcol, iters=int(op.get("iters", 3))
-            )
-            df = with_rating_gap(df, ratings, wcol, lcol)
-            if "min_gap_micro" in op:
-                df = df.filter(
-                    F.col("gap_micro") >= int(op["min_gap_micro"])
-                )
-            if "max_gap_micro" in op:
-                df = df.filter(
-                    F.col("gap_micro") <= int(op["max_gap_micro"])
-                )
-        elif kind == "url_parse":
-            # URL curation from config (r10, closing the r9 verdict
-            # gap #5: web pipelines start at the URL, so the
-            # declarative story must too). Pure column expressions —
-            # same functions as the oracle-checked url_* queries.
-            from top_produce_etl_spark.operators.urls import parse_urls
-
-            df = parse_urls(df, op.get("url_col", "url"))
-        elif kind == "url_normalize":
-            from top_produce_etl_spark.operators.urls import (
-                normalize_urls,
-            )
-
-            df = normalize_urls(
-                df,
-                op.get("url_col", "url"),
-                out=op.get("out", "canonical_url"),
-            )
-        elif kind == "url_dedup":
-            # Canonical-URL dedup stage: one hash-agg on the
-            # canonical string with min-id keeper election (the
-            # exact-dedup convention). Reuses an existing canonical
-            # column (e.g. from url_normalize just above) or derives
-            # one. keep="rows" keeps the keeper rows of every class;
-            # keep="report" emits the per-class dedup report — the
-            # exact schema of the url_normalize_dedup battery oracle.
-            from top_produce_etl_spark.operators.urls import (
-                normalize_urls,
-            )
-
-            id_col = op["id_col"]
-            url_col = op.get("url_col", "url")
-            canon = op.get("canonical_col", "canonical_url")
-            if canon not in df.columns:
-                df = normalize_urls(df, url_col, out=canon)
-            rep = df.groupBy(canon).agg(
-                F.count("*").cast("bigint").alias("n_raw"),
-                F.countDistinct(url_col)
-                .cast("bigint")
-                .alias("n_raw_variants"),
-                F.min(id_col).cast("bigint").alias(f"keeper_{id_col}"),
-            )
-            if op.get("keep", "rows") == "rows":
-                df = df.join(
-                    rep.select(
-                        F.col(f"keeper_{id_col}").alias(id_col)
-                    ),
-                    id_col,
-                    "left_semi",
-                )
-            else:
-                df = rep
-        elif kind == "url_domain":
-            # Registered-domain attach: psl=true resolves via the
-            # broadcast public-suffix dimension (operators/psl.py —
-            # wildcards/exceptions/private domains correct); else the
-            # legacy multi-label literal. The output column is the
-            # grain cap_per_category composes on for per-domain caps.
-            host_col = op.get("host_col", "host")
-            out_col = op.get("out", "domain")
-            if op.get("psl", True):
-                from top_produce_etl_spark.operators.psl import (
-                    psl_rules_df,
-                    with_registered_domain_psl,
-                )
-
-                rules = (
-                    psl_rules_df(spark, path=op["psl_path"])
-                    if op.get("psl_path")
-                    else None
-                )
-                df = with_registered_domain_psl(
-                    df, host_col, out_col, rules_df=rules
-                )
-            else:
-                from top_produce_etl_spark.operators.urls import (
-                    with_registered_domain,
-                )
-
-                df = with_registered_domain(df, host_col, out_col)
-        elif kind == "rrf_fuse":
-            # Hybrid-retrieval fusion from config (r9 — the verdict's
-            # declarative-serving completion): the current frame is
-            # one rank list (e.g. ann_topk's output just above);
-            # ``tables`` names the other tiers. Declaration order is
-            # [current, *tables] — rrf_fuse fixes its IEEE addition
-            # order on that, so the YAML surface inherits the
-            # hybrid_rrf_retrieval oracle bit-exactly.
-            from top_produce_etl_spark.operators.retrieval import (
-                rrf_fuse,
-            )
-
-            others = [resolve(t) for t in op.get("tables", [])]
-            df = rrf_fuse(
-                [df, *others],
-                query_col=op.get("query_col", "query_id"),
-                doc_col=op.get("doc_col", "neighbor_id"),
-                rank_col=op.get("rank_col", "rank"),
-                k=int(op.get("k", 60)),
-                topn=op.get("topn"),
-            )
-        elif kind == "rerank_exact":
-            # Exact rescoring stage from config (r9): the current
-            # frame is the SHORTLIST (query_id, neighbor_id — any
-            # retrieval tier's output, e.g. ann_topk or rrf_fuse just
-            # above); ``corpus`` names the full-precision vector
-            # table. Completes the declarative retrieve → fuse →
-            # rerank serving composition.
-            from top_produce_etl_spark.operators.similarity import (
-                rerank_exact,
-            )
-
-            corpus = resolve(op["corpus"])
-            df = rerank_exact(
-                corpus,
-                df,
-                op["id_col"],
-                op["vec_col"],
-                k=int(op.get("k", 3)),
-                scoring=op.get("scoring", "decimal"),
-            )
-        elif kind == "ann_topk":
-            # ANN retrieval from config (r6 verdict #6): the current
-            # frame is the QUERY relation; neighbors come from a
-            # STORED product-quantization index (pq_index_save
-            # artifacts — codebooks + 8-byte codes), LUT-scored
-            # without touching raw corpus vectors. ``build_from``
-            # (optional) names a corpus table to index first when
-            # the artifacts don't exist yet — the one-YAML
-            # index-then-serve composition; ``rebuild: true`` forces
-            # retraining. Emits (query_id, neighbor_id, pq_cosine,
-            # rank) — the same contract as the oracle-checked
-            # pq_topk battery queries.
-            import os as _os
-
-            from top_produce_etl_spark.operators.pq import (
-                pq_index_save,
-                pq_topk_from_index,
-            )
-
-            path = op["index_path"]
-            have = _os.path.isdir(_os.path.join(path, "codebooks"))
-            if op.get("build_from") and (not have or op.get("rebuild")):
-                corpus = resolve(op["build_from"])
-                pq_index_save(
-                    corpus,
-                    op["id_col"],
-                    op["vec_col"],
-                    dim=int(op["dim"]),
-                    path=path,
-                    subspaces=int(op.get("subspaces", 8)),
-                    codes=int(op.get("codes", 16)),
-                    train_sample_mod=op.get("train_sample_mod"),
-                )
-            df = pq_topk_from_index(
-                spark,
-                path,
-                df,
-                op["id_col"],
-                op["vec_col"],
-                k=int(op.get("k", 3)),
-            )
-        else:
-            raise ValueError(f"unknown op: {kind}")
+        df = fn(df, **kwargs)
     return df
 
+
+class _Op(NamedTuple):
+    """One pipeline op. ``fn(df, **keys)`` is an operator named as
+    ``"module:function"`` under ``operators`` (imported on first use:
+    the CLI job imports this module on every cold start) or an
+    adapter; an adapter that takes a keyword-only ``resolve`` gets the
+    table resolver.
+
+    ``rereads``: the op's implementation scans its input more than
+    once (a count/rollup aggregate plus a join back, a multi-signal
+    fan-out, an eager model fit plus the final projection, ...). In a
+    composed pipeline the input is an arbitrary upstream funnel that
+    each scan would re-derive — the super-linear composition cost
+    bench.py's funnel probe gates (2.0× on
+    mixture→strip→curate→budget→pack before the boundary persist) —
+    so ``build_pipeline`` persists it first."""
+
+    fn: Callable[..., DataFrame] | str
+    rereads: bool = False
+
+
+@cache
+def _entry(
+    kind: str,
+) -> tuple[_Op, Callable[..., DataFrame], dict[str, inspect.Parameter]]:
+    """Op ``kind``'s table entry, its function, and the keys it
+    accepts (spec key -> parameter)."""
+    if kind not in _OPS:
+        raise ValueError(f"unknown op: {kind}")
+    entry = _OPS[kind]
+    fn = entry.fn
+    if isinstance(fn, str):
+        module, name = fn.split(":")
+        fn = getattr(
+            importlib.import_module(f"top_produce_etl_spark.operators.{module}"),
+            name,
+        )
+    params = list(inspect.signature(fn).parameters.values())[1:]
+    keys = {
+        p.name[:-1] if keyword.iskeyword(p.name[:-1]) else p.name: p
+        for p in params
+        if p.name != "resolve"
+    }
+    return entry, fn, keys
+
+
+def _bind(
+    op: dict[str, Any], resolve: Callable[[Any], DataFrame]
+) -> tuple[_Op, Callable[..., DataFrame], dict[str, Any]]:
+    """Check ``op``'s keys against its entry's signature; return the
+    entry, its function and the keyword arguments to call it with."""
+    kind = op.get("op")
+    entry, fn, params = _entry(kind)
+    keys = {k: v for k, v in op.items() if k != "op"}
+    unknown = sorted(set(keys) - set(params))
+    if unknown:
+        raise ValueError(
+            f"op {kind!r}: unknown key {unknown[0]!r} "
+            f"(accepts: {', '.join(params)})"
+        )
+    for key, p in params.items():
+        if p.default is p.empty and key not in keys:
+            raise ValueError(f"op {kind!r}: missing key {key!r}")
+    kwargs = {params[k].name: v for k, v in keys.items()}
+    if "resolve" in inspect.signature(fn).parameters:
+        kwargs["resolve"] = resolve
+    return entry, fn, kwargs
+
+
+# The default of an adapter key that the adapter forwards to an
+# operator: an omitted key is not forwarded, so the operator's own
+# signature default applies.
+_DEFAULT: Any = object()
+
+
+def _given(**keys: Any) -> dict[str, Any]:
+    """``keys`` without the ones the spec omitted."""
+    return {k: v for k, v in keys.items() if v is not _DEFAULT}
+
+
+def _default(fn: Callable, key: str, value: Any) -> Any:
+    """``value``, or ``fn``'s default for ``key`` if the spec omitted it."""
+    if value is _DEFAULT:
+        return inspect.signature(fn).parameters[key].default
+    return value
+
+
+def _keep_ids(
+    df: DataFrame, survivors: DataFrame, id_col: str, survivor_id: str | None = None
+) -> DataFrame:
+    """The rows of ``df`` whose ``id_col`` is among the ``survivor_id``
+    (default: ``id_col``) values of ``survivors`` — a left-semi join."""
+    ids = survivors.select(
+        F.col(survivor_id).alias(id_col) if survivor_id else id_col
+    )
+    return df.join(ids, id_col, "left_semi")
+
+
+# ---------------------------------------------------------------------------
+# Adapters: ops that do more than forward their keys to one operator
+# ---------------------------------------------------------------------------
+
+def _join(df, table, on, how="inner", broadcast=False, *, resolve):
+    right = resolve(table)
+    if broadcast:
+        # size-gated: the config asserts intent, the engine still
+        # refuses to force-broadcast something that no longer fits
+        # under the session threshold
+        right = maybe_broadcast(right)
+    cond = F.expr(on) if isinstance(on, str) and " " in on else on
+    return df.join(right, on=cond, how=how)
+
+
+def _union(df, table, allow_missing=False, *, resolve):
+    return df.unionByName(resolve(table), allowMissingColumns=bool(allow_missing))
+
+
+def _group_agg(df, aggs, by=()):
+    return df.groupBy(*by).agg(*[F.expr(e).alias(name) for name, e in aggs.items()])
+
+
+def _topn(df, group_by, metric, n, tiebreak=None):
+    return top_n_window(
+        df, group_by=group_by, metric=metric, n=int(n), tiebreak=tiebreak
+    )
+
+
+def _sort(df, by):
+    return df.orderBy(*[
+        F.col(c[1:]).desc() if c.startswith("-") else F.col(c).asc()
+        for c in by
+    ])
+
+
+def _curation_funnel(
+    df, id_col, text_col, lang=_DEFAULT, min_quality=_DEFAULT,
+    max_dup_ngram_frac=_DEFAULT, max_mean_info_micro=_DEFAULT,
+    ngram=_DEFAULT, keep_only=False,
+):
+    """The four verified curation signals with their thresholds (the
+    oracle-checked query delegates to the same function). keep_only:
+    the funnel as a FILTER — survivors with their original columns,
+    audit trail dropped."""
+    from top_produce_etl_spark.operators.textquality import curation_funnel
+
+    verdicts = curation_funnel(df, id_col, text_col, **_given(
+        lang=lang, min_quality=min_quality,
+        max_dup_ngram_frac=max_dup_ngram_frac,
+        max_mean_info_micro=max_mean_info_micro, ngram=ngram,
+    ))
+    if keep_only:
+        return _keep_ids(df, verdicts.filter(F.col("keep")), id_col)
+    return verdicts
+
+
+def _mask_contaminated_spans(
+    df, id_col, text_col, ref_table, k=_DEFAULT, ref_text_col=None,
+    sentinel=_DEFAULT, *, resolve,
+):
+    """Mask the spans leaked from a reference table (typically the
+    test split) — the verified path behind
+    masked_decontamination_proof."""
+    from top_produce_etl_spark.operators.dedup import (
+        contaminated_spans,
+        mask_spans,
+    )
+
+    spans = contaminated_spans(
+        df, resolve(ref_table), id_col, text_col,
+        ref_text_col=ref_text_col, **_given(k=k),
+    )
+    return mask_spans(df, spans, id_col, text_col, **_given(sentinel=sentinel))
+
+
+def _resolve_entities(df, id_col, block_cols, match_pred, attrs=None, golden=None):
+    """Record linkage: (id, entity_id), or the merged survivorship rows
+    when golden-record aggregates are declared."""
+    from top_produce_etl_spark.operators.linkage import (
+        golden_records,
+        resolve_entities,
+    )
+
+    assign = resolve_entities(df, id_col, block_cols, match_pred, attrs=attrs)
+    return golden_records(df, assign, id_col, golden) if golden else assign
+
+
+def _budget_select(
+    df, budget, text_col=None, score=None, tokens=None, n_buckets=_DEFAULT,
+    keep_audit=False,
+):
+    """Keep the best score-buckets whose token mass fits the budget.
+    score defaults to the house quality_score over text_col, tokens to
+    the whitespace count of text_col."""
+    from top_produce_etl_spark.functions.text import quality_score
+    from top_produce_etl_spark.functions.text import tokens as _tok
+    from top_produce_etl_spark.operators.mixture import budget_select
+
+    if text_col is None and (score in (None, "quality") or tokens is None):
+        raise ValueError("op 'budget_select': missing key 'text_col'")
+    q = quality_score(text_col) if score in (None, "quality") else F.expr(score)
+    toks = F.size(_tok(text_col)) if tokens is None else F.expr(tokens)
+    kept = budget_select(
+        df.withColumn("__q", q).withColumn("__toks", toks), "__q", "__toks",
+        budget=budget, **_given(n_buckets=n_buckets),
+    )
+    return kept if keep_audit else kept.drop("__q", "__toks", "__bucket")
+
+
+def _pack_sequences(
+    df, id_col, budget, text_col=None, len_expr=None, n_shards=_DEFAULT
+):
+    """A (shard, bin, pos) slot per document under the token budget;
+    length is ``len_expr`` or the whitespace token count of
+    ``text_col``."""
+    from top_produce_etl_spark.functions.text import tokens as _tok
+    from top_produce_etl_spark.operators.packing import pack_sequences
+
+    if len_expr is None and text_col is None:
+        raise ValueError("op 'pack_sequences': missing key 'text_col'")
+    ln = F.size(_tok(text_col)) if len_expr is None else F.expr(len_expr)
+    return pack_sequences(df, id_col, ln, budget=budget, **_given(n_shards=n_shards))
+
+
+def _dsir_select(
+    df, id_col, text_col, target_pred, n, buckets=_DEFAULT, hasher=_DEFAULT
+):
+    """Keep the n documents most like the target slice (the verified
+    function behind dsir_selection_top100)."""
+    from top_produce_etl_spark.operators.importance import dsir_scores
+
+    scores = dsir_scores(
+        df, id_col, text_col, target_pred, **_given(buckets=buckets, hasher=hasher)
+    )
+    top = scores.orderBy(
+        F.col("score_micro").desc(), F.col(id_col).asc()
+    ).limit(int(n))
+    return _keep_ids(df, top, id_col)
+
+
+def _privacy_gate(df, quasi_cols, k=None, l=None, t=None, action="fail"):  # noqa: E741
+    """Release gate over any subset of k-anonymity / l-diversity /
+    t-closeness (the verified operators behind the battery entries):
+    ``action: fail`` fails the build — a release pipeline must not
+    silently publish; ``action: drop`` suppresses the violating
+    quasi-identifier groups."""
+    from top_produce_etl_spark.operators.quality import (
+        k_anonymity_violations,
+        l_diversity_violations,
+        t_closeness_violations,
+    )
+
+    quasi = list(quasi_cols)
+    viols = []
+    if k is not None:
+        viols.append(("k_anonymity", k_anonymity_violations(df, quasi, int(k))))
+    if l is not None:
+        viols.append(("l_diversity", l_diversity_violations(
+            df, quasi, l["sensitive"], int(l["min"])
+        )))
+    if t is not None:
+        viols.append(("t_closeness", t_closeness_violations(
+            df, quasi, t["sensitive"], int(t["t_micro"])
+        )))
+    if not viols:
+        raise ValueError("privacy_gate needs at least one of k/l/t")
+    if action == "fail":
+        # one eager count per gate serves both the emptiness test and
+        # the message
+        bad = [f"{name}: {n} violating groups"
+               for name, v in viols if (n := v.count()) > 0]
+        if bad:
+            raise ValueError("privacy gate failed: " + "; ".join(bad))
+    elif action == "drop":
+        for _, v in viols:
+            df = df.join(v.select(*quasi), quasi, "left_anti")
+    else:
+        raise ValueError(f"unknown privacy_gate action: {action}")
+    return df
+
+
+def _normalize_dedup(df, id_col, text_col, keep="rows"):
+    """CCNet-normalized exact dedup, one min-id keeper per class:
+    keep="rows" returns the keeper rows, keep="report" the per-class
+    report."""
+    from top_produce_etl_spark.operators.dedup import normalized_exact_dedup
+
+    rep = normalized_exact_dedup(df, text_col, id_col)
+    return _keep_ids(df, rep, id_col) if keep == "rows" else rep
+
+
+def _quality_classifier_filter(
+    df, id_col, text_col, label_expr, n_buckets=_DEFAULT, iters=_DEFAULT,
+    lr=_DEFAULT, threshold_micro=500_000,
+):
+    """Train the quasi-logistic classifier on the current frame against
+    a 0/1 label expression (model-sized collects only), score every row
+    with one broadcast model join, keep rows whose probability clears
+    the threshold."""
+    from top_produce_etl_spark.operators.classifier import (
+        score_quasi_logreg,
+        train_quasi_logreg,
+    )
+
+    nb = _given(n_buckets=n_buckets)
+    model = train_quasi_logreg(
+        df.withColumn("__y", F.expr(label_expr).cast("int")),
+        id_col, text_col, "__y", **nb, **_given(iters=iters, lr=lr),
+    )
+    scored = score_quasi_logreg(df, model, id_col, text_col, **nb)
+    kept = scored.filter(F.col("score_micro") >= int(threshold_micro))
+    return _keep_ids(df, kept, id_col, "id")
+
+
+def _langid_filter(
+    df, id_col, text_col, train_table, keep_lang, lang_col=_DEFAULT,
+    langs=None, train_id_col=None, train_text_col=None,
+    n_buckets=_DEFAULT, hash_mode=_DEFAULT, iters=_DEFAULT, lr=_DEFAULT,
+    *, resolve,
+):
+    """Train the one-vs-rest langid on a labeled reference table, score
+    the current frame, keep rows predicted as ``keep_lang``. ``langs``
+    defaults to the reference's distinct labels."""
+    from top_produce_etl_spark.operators.langid import (
+        score_langid,
+        train_langid,
+    )
+
+    ref = resolve(train_table)
+    lang_col = _default(train_langid, "lang_col", lang_col)
+    if langs is None:
+        # |langs|-sized collect — model-sized
+        langs = sorted(r[0] for r in ref.select(lang_col).distinct().collect())
+    langs = tuple(langs)
+    shared = _given(n_buckets=n_buckets, hash_mode=hash_mode)
+    model = train_langid(
+        ref, id_col=train_id_col or id_col,
+        text_col=train_text_col or text_col, lang_col=lang_col,
+        langs=langs, **shared, **_given(iters=iters, lr=lr),
+    )
+    scored = score_langid(
+        df, model, id_col, text_col, langs=langs, **shared
+    ).filter(F.col("pred_lang") == keep_lang)
+    return _keep_ids(df, scored, id_col, "id")
+
+
+def _surprisal_bucket(
+    df, id_col, text_col, by=_DEFAULT, keep=None, frozen=None, *, resolve
+):
+    """CCNet head/middle/tail unigram-LM surprisal terciles. ``keep``
+    filters to the named buckets; without it the ppl_bucket column is
+    attached.
+
+    ``frozen: {path, train_table?}`` scores against a stored artifact
+    (LM counts + cutoffs, built from train_table or the flowing frame
+    and saved on first miss): append-stable, streaming-legal, no wide
+    sort."""
+    from top_produce_etl_spark.operators import textquality as tq
+
+    by = tuple(_default(tq.perplexity_buckets, "by", by))
+    if frozen:
+        import os
+
+        path = frozen["path"]
+        if not os.path.exists(os.path.join(path, "lm")):
+            train = (
+                resolve(frozen["train_table"])
+                if frozen.get("train_table")
+                else df
+            )
+            tq.save_surprisal_reference(
+                tq.unigram_lm(train, text_col),
+                tq.surprisal_cutoffs(train, id_col, text_col, by),
+                path,
+            )
+        lm, cuts = tq.load_surprisal_reference(df.sparkSession, path)
+        scored = tq.score_with_frozen_lm(df, lm, id_col, text_col)
+        if by:
+            scored = scored.join(df.select(id_col, *by), id_col)
+        b = tq.bucket_frozen(scored, cuts, id_col, by)
+    else:
+        b = tq.perplexity_buckets(df, id_col, text_col, by=by)
+    if keep:
+        return _keep_ids(df, b.where(F.col("ppl_bucket").isin(*keep)), id_col)
+    return df.join(b.select(id_col, "ppl_bucket"), id_col)
+
+
+def _paragraph_dedup(df, id_col=_DEFAULT, text_col=_DEFAULT, min_chars=_DEFAULT):
+    """Paragraph-grain first-occurrence dedup: the text column is
+    rewritten, the other columns re-joined by id."""
+    from top_produce_etl_spark.operators.dedup import paragraph_dedup
+
+    id_col = _default(paragraph_dedup, "id_col", id_col)
+    text_col = _default(paragraph_dedup, "text_col", text_col)
+    clean = paragraph_dedup(df, id_col, text_col, **_given(min_chars=min_chars))
+    return df.drop(text_col).join(
+        clean.select(id_col, F.col("text_clean").alias(text_col)), id_col
+    )
+
+
+def _mojibake_repair(df, text_col=_DEFAULT, out=None, keep_flag=False):
+    from top_produce_etl_spark.operators.encoding import repair_mojibake
+
+    df = repair_mojibake(df, out=out, **_given(text_col=text_col))
+    return df if keep_flag else df.drop("was_mojibake")
+
+
+def _robots_filter(
+    df, robots_table, agent=_DEFAULT, domain_col=_DEFAULT,
+    path_col=_DEFAULT, robots_text_col=_DEFAULT, *, resolve,
+):
+    """Keep only the URLs the RFC 9309 longest-match verdict of the
+    robots table allows for ``agent``."""
+    from top_produce_etl_spark.operators.robots import (
+        parse_robots,
+        robots_allowed,
+    )
+
+    rules = parse_robots(resolve(robots_table), **_given(
+        id_col=domain_col, text_col=robots_text_col, agent=agent
+    ))
+    return robots_allowed(
+        df, rules, **_given(domain_col=domain_col, path_col=path_col)
+    ).where(F.col("allowed")).drop("allowed", "matched_len")
+
+
+def _pair_gap_filter(
+    df, winner_col=_DEFAULT, loser_col=_DEFAULT, iters=_DEFAULT,
+    train_table=None, min_gap_micro=None, max_gap_micro=None, *, resolve,
+):
+    """Rate items by Bradley-Terry MM (on the flowing pairs or
+    ``train_table``), attach each pair's winner−loser gap and keep the
+    pairs inside [min_gap_micro, max_gap_micro]; the rating and gap
+    columns stay on the survivors."""
+    from top_produce_etl_spark.operators.preferences import (
+        bt_ratings,
+        with_rating_gap,
+    )
+
+    cols = _given(winner_col=winner_col, loser_col=loser_col)
+    src = resolve(train_table) if train_table else df
+    ratings = bt_ratings(src, **cols, **_given(iters=iters))
+    df = with_rating_gap(df, ratings, **cols)
+    if min_gap_micro is not None:
+        df = df.filter(F.col("gap_micro") >= int(min_gap_micro))
+    if max_gap_micro is not None:
+        df = df.filter(F.col("gap_micro") <= int(max_gap_micro))
+    return df
+
+
+def _url_parse(df, url_col="url"):
+    from top_produce_etl_spark.operators.urls import parse_urls
+
+    return parse_urls(df, url_col)
+
+
+def _url_normalize(df, url_col="url", out=_DEFAULT):
+    from top_produce_etl_spark.operators.urls import normalize_urls
+
+    return normalize_urls(df, url_col, **_given(out=out))
+
+
+def _url_dedup(df, id_col, url_col="url", canonical_col=_DEFAULT, keep="rows"):
+    """One hash-agg on the canonical URL (an existing column, or derived)
+    with min-id keeper election: keep="rows" keeps the keeper rows,
+    keep="report" emits the per-class report — the schema of the
+    url_normalize_dedup battery oracle."""
+    from top_produce_etl_spark.operators.urls import normalize_urls
+
+    canon = _default(normalize_urls, "out", canonical_col)
+    if canon not in df.columns:
+        df = normalize_urls(df, url_col, out=canon)
+    rep = df.groupBy(canon).agg(
+        F.count("*").cast("bigint").alias("n_raw"),
+        F.countDistinct(url_col).cast("bigint").alias("n_raw_variants"),
+        F.min(id_col).cast("bigint").alias(f"keeper_{id_col}"),
+    )
+    if keep == "rows":
+        return _keep_ids(df, rep, id_col, f"keeper_{id_col}")
+    return rep
+
+
+def _url_domain(df, host_col=_DEFAULT, out=_DEFAULT, psl=True, psl_path=None):
+    """Attach the registered domain: psl=true via the broadcast
+    public-suffix dimension, else the legacy multi-label literal."""
+    cols = _given(host_col=host_col, out=out)
+    if not psl:
+        from top_produce_etl_spark.operators.urls import with_registered_domain
+
+        return with_registered_domain(df, **cols)
+    from top_produce_etl_spark.operators.psl import (
+        psl_rules_df,
+        with_registered_domain_psl,
+    )
+
+    rules = psl_rules_df(df.sparkSession, path=psl_path) if psl_path else None
+    return with_registered_domain_psl(df, rules_df=rules, **cols)
+
+
+def _rrf_fuse(
+    df, tables=(), query_col=_DEFAULT, doc_col=_DEFAULT, rank_col=_DEFAULT,
+    k=_DEFAULT, topn=None, *, resolve,
+):
+    """Fuse the current rank list with the ``tables`` ones; the
+    declaration order [current, *tables] fixes rrf_fuse's addition
+    order, so the result is the hybrid_rrf_retrieval oracle's."""
+    from top_produce_etl_spark.operators.retrieval import rrf_fuse
+
+    return rrf_fuse([df, *map(resolve, tables)], topn=topn, **_given(
+        query_col=query_col, doc_col=doc_col, rank_col=rank_col, k=k
+    ))
+
+
+def _rerank_exact(
+    df, corpus, id_col, vec_col, k=_DEFAULT, scoring=_DEFAULT, *, resolve
+):
+    """Exact rescoring of the current shortlist against the
+    full-precision ``corpus``."""
+    from top_produce_etl_spark.operators.similarity import rerank_exact
+
+    return rerank_exact(
+        resolve(corpus), df, id_col, vec_col, **_given(k=k, scoring=scoring)
+    )
+
+
+def _ann_topk(
+    df, index_path, id_col, vec_col, k=_DEFAULT, build_from=None,
+    rebuild=False, dim=None, subspaces=_DEFAULT, codes=_DEFAULT,
+    train_sample_mod=None, *, resolve,
+):
+    """ANN neighbors of the current (query) frame from a stored
+    product-quantization index. ``build_from`` names a corpus to index
+    first when the index does not exist yet (or ``rebuild``)."""
+    import os
+
+    from top_produce_etl_spark.operators.pq import (
+        pq_index_save,
+        pq_topk_from_index,
+    )
+
+    have = os.path.isdir(os.path.join(index_path, "codebooks"))
+    if build_from and (not have or rebuild):
+        pq_index_save(
+            resolve(build_from), id_col, vec_col, dim=dim, path=index_path,
+            train_sample_mod=train_sample_mod,
+            **_given(subspaces=subspaces, codes=codes),
+        )
+    return pq_topk_from_index(
+        df.sparkSession, index_path, df, id_col, vec_col, **_given(k=k)
+    )
+
+
+_OPS: dict[str, _Op] = {
+    "filter": _Op(lambda df, expr: df.filter(F.expr(expr))),
+    "select": _Op(lambda df, cols: df.select(*[F.expr(c) for c in cols])),
+    "with_column": _Op(lambda df, name, expr: df.withColumn(name, F.expr(expr))),
+    "rename": _Op(lambda df, from_, to: df.withColumnRenamed(from_, to)),
+    "drop": _Op(lambda df, cols: df.drop(*cols)),
+    "join": _Op(_join),
+    "group_agg": _Op(_group_agg),
+    "topn": _Op(_topn),
+    "distinct": _Op(lambda df: df.distinct()),
+    # first row per key, nondeterministic without a prior sort — a
+    # specific survivor is op=topn with n=1
+    "dedup": _Op(lambda df, cols=None: df.dropDuplicates(subset=cols)),
+    "dropna": _Op(lambda df, how="any", cols=None: df.na.drop(how=how, subset=cols)),
+    "fillna": _Op(lambda df, value, cols=None: df.na.fill(value, subset=cols)),
+    "sort": _Op(_sort),
+    "limit": _Op(lambda df, n: df.limit(int(n))),
+    "union": _Op(_union),
+    "sample": _Op(lambda df, fraction, seed=42: df.sample(
+        fraction=float(fraction), seed=int(seed)
+    )),
+    "curation_funnel": _Op(_curation_funnel, rereads=True),
+    "strip_duplicate_spans": _Op("dedup:strip_duplicate_spans", rereads=True),
+    "mask_contaminated_spans": _Op(_mask_contaminated_spans, rereads=True),
+    "rebalance_mixture": _Op("mixture:rebalance_mixture", rereads=True),
+    "temperature_mix": _Op("mixture:temperature_rebalance", rereads=True),
+    "upsample_mixture": _Op("mixture:upsample_mixture", rereads=True),
+    "cap_per_category": _Op("mixture:cap_per_category", rereads=True),
+    "resolve_entities": _Op(_resolve_entities, rereads=True),
+    "budget_select": _Op(_budget_select, rereads=True),
+    "pack_sequences": _Op(_pack_sequences),
+    "dsir_select": _Op(_dsir_select, rereads=True),
+    "privacy_gate": _Op(_privacy_gate, rereads=True),
+    "normalize_dedup": _Op(_normalize_dedup, rereads=True),
+    "quality_classifier_filter": _Op(_quality_classifier_filter, rereads=True),
+    "langid_filter": _Op(_langid_filter, rereads=True),
+    "surprisal_bucket": _Op(_surprisal_bucket, rereads=True),
+    "paragraph_dedup": _Op(_paragraph_dedup, rereads=True),
+    "mojibake_repair": _Op(_mojibake_repair, rereads=True),
+    "robots_filter": _Op(_robots_filter, rereads=True),
+    "html_extract": _Op("html:extract_html_text", rereads=True),
+    "bt_ratings": _Op("preferences:bt_ratings", rereads=True),
+    "pair_gap_filter": _Op(_pair_gap_filter, rereads=True),
+    "url_parse": _Op(_url_parse),
+    "url_normalize": _Op(_url_normalize),
+    "url_dedup": _Op(_url_dedup, rereads=True),
+    "url_domain": _Op(_url_domain),
+    "rrf_fuse": _Op(_rrf_fuse),
+    "rerank_exact": _Op(_rerank_exact),
+    "ann_topk": _Op(_ann_topk),
+}
