@@ -4,6 +4,9 @@ window specs must produce identical results under readStream
 
 from __future__ import annotations
 
+import ast
+from pathlib import Path
+
 from top_produce_etl_spark.io.sources import load_table
 from top_produce_etl_spark.operators.eventtime import (
     session_window_agg,
@@ -91,11 +94,11 @@ def test_stream_stream_join_matches_batch(spark, sf_dir):
     equal the same join over the static table (inner stream-stream
     joins emit exactly the matched rows once both sides arrive)."""
     from top_produce_etl_spark.streaming.jobs import (
-        purchase_click_attribution_batch,
+        purchase_click_attribution,
         purchase_click_attribution_stream,
     )
 
-    batch = purchase_click_attribution_batch(spark, sf_dir)
+    batch = purchase_click_attribution(load_table(spark, sf_dir, "events"))
     stream = purchase_click_attribution_stream(
         spark, sf_dir, sink_table="t_stream_attr"
     )
@@ -150,19 +153,35 @@ def test_availablenow_checkpoint_is_incremental(spark, tmp_path):
 
 def test_stream_static_enrichment_matches_batch(spark, sf_dir):
     """Stream-static join (broadcast dim, no join state) + windowed
-    agg must equal the identical batch plan."""
+    agg must equal the identical batch plan — and both must equal an
+    independent DuckDB derivation over the same parquet files
+    (per-day, per-segment count and exact decimal value sum)."""
+    import duckdb
+
     from top_produce_etl_spark.streaming.jobs import (
-        enriched_segment_counts_batch,
+        enriched_segment_counts,
         enriched_segment_counts_stream,
     )
 
-    batch = enriched_segment_counts_batch(spark, sf_dir)
+    batch = enriched_segment_counts(load_table(spark, sf_dir, "events"), sf_dir)
     stream = enriched_segment_counts_stream(
         spark, sf_dir, sink_table="t_stream_enriched"
     )
     b = sorted(tuple(r) for r in batch.collect())
     s = sorted(tuple(r) for r in stream.collect())
     assert b == s and len(b) > 0
+
+    oracle = duckdb.sql(f"""
+        SELECT CAST(date_trunc('day', e.ts) AS TIMESTAMP) AS window_start,
+               c.c_mktsegment,
+               COUNT(*) AS n_events,
+               CAST(SUM(CAST(e.value AS DECIMAL(18,4))) AS DOUBLE)
+                   AS sum_value
+        FROM '{sf_dir}/events.parquet' e
+        JOIN '{sf_dir}/customer.parquet' c ON e.user_id = c.c_custkey
+        GROUP BY 1, 2
+    """).fetchall()
+    assert s == sorted(oracle)
 
 
 def test_foreachbatch_dynamic_overwrite_materialization(spark, tmp_path):
@@ -255,45 +274,6 @@ def test_stream_dedup_within_watermark_matches_batch_distinct(spark, sf_dir):
     assert got == want and len(got) > 0
 
 
-def test_tws_running_totals_or_documented_gap(spark, sf_dir):
-    """transformWithStateInPandas path: runs with batch parity when
-    protobuf is present; otherwise must fail with the documented
-    dependency error (never a cryptic worker crash)."""
-    import pytest
-
-    from top_produce_etl_spark.streaming.jobs import (
-        running_user_totals_tws,
-        stream_events,
-        tws_available,
-    )
-
-    if not tws_available():
-        with pytest.raises(ImportError, match="protobuf"):
-            running_user_totals_tws(stream_events(spark, sf_dir))
-        pytest.skip("google.protobuf not installed in this environment")
-
-    from top_produce_etl_spark.io.sources import load_table
-    from pyspark.sql import functions as F
-
-    got = {
-        r.user_id: (round(r.total_value, 6), r.n_events)
-        for r in running_user_totals_tws(
-            stream_events(spark, sf_dir), sink_table="t_tws_totals"
-        ).collect()
-    }
-    want = {
-        r.user_id: (round(r.total_value, 6), r.n_events)
-        for r in load_table(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(
-            F.sum("value").alias("total_value"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-        .collect()
-    }
-    assert got == want
-
-
 def test_idempotent_append_sink_exactly_once(spark, tmp_path):
     """foreachBatch append with per-epoch commit markers: a stream
     run lands each batch once; replaying a batch id (the retry case)
@@ -376,77 +356,43 @@ def test_kmv_stream_equals_batch_across_micro_batches(spark, tmp_path):
     import os
 
     from pyspark.sql import functions as F
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
-    import pandas as pd
-
-    from top_produce_etl_spark.functions.portable_hash import (
-        composite_hash_col,
-    )
     from top_produce_etl_spark.operators.kmv import kmv_sketch
+    from top_produce_etl_spark.streaming.jobs import run_kmv_stream
 
     rows = [
-        (i // 100, i % 3, f"key{i % 37}") for i in range(300)
+        (i // 100, str(i % 3), f"key{i % 37}") for i in range(300)
     ]
-    df = spark.createDataFrame(rows, "f int, grp int, key string")
+    df = spark.createDataFrame(rows, "f int, event_type string, key string")
     src_dir = str(tmp_path / "kmv_src")
     os.makedirs(src_dir)
-    # one file per row-range: every grp appears in EVERY file, so
+    # one file per row-range: every group appears in EVERY file, so
     # each key's state crosses real micro-batch seams
     for part in range(3):
-        df.filter(F.col("f") == part).select("grp", "key").coalesce(
+        df.filter(F.col("f") == part).select("event_type", "key").coalesce(
             1
         ).write.mode("append").parquet(src_dir)
 
     k = 8
     batch = kmv_sketch(
-        spark.read.parquet(src_dir), ["grp"], "key", k=k
+        spark.read.parquet(src_dir), ["event_type"], "key", k=k
     )
 
-    hashed = (
-        spark.readStream.schema("grp int, key string")
+    stream = (
+        spark.readStream.schema("event_type string, key string")
         .option("maxFilesPerTrigger", 1)
         .parquet(src_dir)
-        .select("grp", composite_hash_col("key").alias("h"))
-        .where(F.col("h").isNotNull())
     )
-
-    def fn(key, pdfs, state):
-        n_seen, hs = state.get if state.exists else (0, [])
-        s = set(hs)
-        for pdf in pdfs:
-            n_seen += len(pdf)
-            s.update(int(x) for x in pdf["h"])
-        kept = sorted(s)[:k]
-        state.update((n_seen, kept))
-        yield pd.DataFrame(
-            {"grp": [key[0]] * len(kept), "n_seen": [n_seen] * len(kept),
-             "h": kept}
-        )
-
-    updates = hashed.groupBy("grp").applyInPandasWithState(
-        fn, "grp int, n_seen bigint, h bigint",
-        "n bigint, hs array<bigint>", "update",
-        GroupStateTimeout.NoTimeout,
-    )
-    q = (
-        updates.writeStream.format("memory")
-        .queryName("t_kmv_stream")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    sink = spark.table("t_kmv_stream")
+    sink = run_kmv_stream(stream, "key", k=k, sink_table="t_kmv_stream")
     # more than one micro-batch actually happened (the seams are real)
-    assert sink.select("grp", "n_seen").distinct().count() > 3
+    assert sink.select("event_type", "n_seen").distinct().count() > 3
     from pyspark.sql import Window
 
-    w = Window.partitionBy("grp")
+    w = Window.partitionBy("event_type")
     final = (
         sink.withColumn("__mx", F.max("n_seen").over(w))
         .filter(F.col("n_seen") == F.col("__mx"))
-        .select("grp", "h")
+        .select("event_type", "h")
         .distinct()
     )
     assert final.exceptAll(batch).count() == 0
@@ -504,3 +450,55 @@ def test_checkpoint_restart_recovers_window_state(spark, sf_dir, tmp_path):
 
     offsets = sorted(_glob.glob(f"{work}/ckpt/offsets/[0-9]*"))
     assert len(offsets) > 3  # phase 1 alone was only 3 file-batches
+
+
+JOBS = (
+    Path(__file__).resolve().parent.parent
+    / "top_produce_etl_spark" / "streaming" / "jobs.py"
+)
+
+
+def _jobs_functions_holding(match) -> set[str]:
+    """Top-level functions of streaming/jobs.py whose source holds an
+    AST node satisfying ``match`` (module-level code counts as
+    ``<module>``)."""
+    owners = set()
+    for top in ast.parse(JOBS.read_text()).body:
+        name = getattr(top, "name", "<module>")
+        if any(match(node) for node in ast.walk(top)):
+            owners.add(name)
+    return owners
+
+
+def test_stream_jobs_share_one_runner_reader_and_window_operators():
+    """No Spark job: every memory-sink run goes through
+    ``_run_available_now``, every fixture ``readStream`` through
+    ``_read_fixture_stream`` (the restart proof's slice reader is the
+    one other glob-filtered source), and no job hand-writes a window
+    aggregate that ``operators.eventtime`` already provides."""
+
+    def memory_format(node):
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "format"
+            and [getattr(a, "value", None) for a in node.args] == ["memory"]
+        )
+
+    def glob_filter(node):
+        return isinstance(node, ast.Constant) and node.value == "pathGlobFilter"
+
+    def window_fn(node):
+        return (
+            isinstance(node, ast.Attribute)
+            and node.attr in ("window", "session_window")
+            and isinstance(node.value, ast.Name)
+            and node.value.id == "F"
+        )
+
+    assert _jobs_functions_holding(memory_format) == {"_run_available_now"}
+    assert _jobs_functions_holding(glob_filter) == {
+        "_read_fixture_stream",
+        "restart_recovery_windowed_counts",
+    }
+    assert _jobs_functions_holding(window_fn) == set()

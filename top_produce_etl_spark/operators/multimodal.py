@@ -420,8 +420,7 @@ def decode_image_bytes(b: bytes) -> tuple[int, int, bytes]:
     # capability gate (r9 verdict #4): PIL takes over for the
     # formats a real multimodal corpus contains (JPEG/GIF/WebP) —
     # this branch goes LIVE wherever PIL exists and carries a
-    # skipped-here test (tests/test_multimodal.py), mirroring the
-    # protobuf gate for transformWithStateInPandas
+    # skipped-here test (tests/test_multimodal.py)
     try:
         from PIL import Image  # noqa: F401 — optional dependency
     except ImportError:

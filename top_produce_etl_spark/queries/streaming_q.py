@@ -295,10 +295,15 @@ def stream_kmv_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     max-``n_seen`` emission per key (update-mode sink contract)."""
     from pyspark.sql import Window
 
-    from top_produce_etl_spark.streaming.jobs import run_kmv_stream
+    from top_produce_etl_spark.streaming.jobs import (
+        run_kmv_stream,
+        stream_events,
+    )
 
     sink = run_kmv_stream(
-        spark, sf_dir, _KMV_UDAY_SPARK, sink_table="oracle_stream_kmv"
+        stream_events(spark, sf_dir),
+        _KMV_UDAY_SPARK,
+        sink_table="oracle_stream_kmv",
     )
     w = Window.partitionBy("event_type")
     return (

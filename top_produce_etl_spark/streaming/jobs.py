@@ -1,15 +1,32 @@
 """Structured Streaming tier (SURVEY.md §2.9).
 
-The batch event-time operators (operators.eventtime) are written so
-``read`` → ``readStream`` is the only change; this module provides
-that wiring plus the genuinely stream-only pieces (watermarked
-sinks, availableNow runs, stateful sessionization).
+Every job here is a batch-legal DataFrame program over an events (or
+documents) frame; only its source and its sink are stream-specific.
+Windowed aggregates are the batch operators themselves
+(``operators.eventtime.tumbling_window_agg`` /
+``session_window_agg``), so ``read`` → ``readStream`` really is the
+only change. Two private helpers carry the stream wiring:
 
-Testing strategy: streams run with ``trigger(availableNow=True)``
-over the same parquet fixtures and land in a memory sink; parity
-tests assert stream results == batch results for the same window
-spec — which is exactly the guarantee Structured Streaming's
-incremental engine makes for append-mode windowed aggregation.
+- :func:`_read_fixture_stream` — ``readStream`` over one fixture
+  table (:func:`stream_events` adds the batch loader's event-time
+  normalization on top);
+- :func:`_run_available_now` — run a frame to completion with
+  ``trigger(availableNow=True)`` into a memory sink and return the
+  sink table.
+
+``withWatermark`` is applied unconditionally: on a batch frame the
+optimizer removes it (``EliminateEventTimeWatermark``), so a job body
+such as :func:`purchase_click_attribution` is the batch query and the
+stream job at once. The checkpointed parquet and ``foreachBatch``
+sinks (:func:`restart_recovery_windowed_counts`,
+:func:`materialize_daily_counts_stream`) keep their own
+``writeStream``.
+
+Testing strategy: streams run over the same parquet fixtures and land
+in a memory sink; parity tests assert stream results == batch results
+for the same window spec — which is exactly the guarantee Structured
+Streaming's incremental engine makes for append-mode windowed
+aggregation.
 
 Scale notes: in production these jobs read Kafka/file sources with
 watermarks bounding state; state store size = |open windows ×
@@ -20,7 +37,10 @@ stop") — checkpointed, restartable.
 
 from __future__ import annotations
 
+import datetime
+import glob
 import os
+import shutil
 from typing import Iterator
 
 import numpy as np
@@ -30,6 +50,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from top_produce_etl_spark.functions.numeric import dec_sum
+from top_produce_etl_spark.io.sources import load_table, normalize_event_time
+from top_produce_etl_spark.operators.eventtime import (
+    session_window_agg,
+    tumbling_window_agg,
+)
 from top_produce_etl_spark.operators.joins import maybe_broadcast
 from pyspark.sql.types import (
     LongType,
@@ -39,26 +64,60 @@ from pyspark.sql.types import (
 )
 
 
+def _run_available_now(df: DataFrame, sink_table: str, mode: str) -> DataFrame:
+    """Run the streaming frame ``df`` over everything available now,
+    in output ``mode``, into the memory sink ``sink_table``; return
+    the sink table once the query terminates."""
+    (
+        df.writeStream.format("memory")
+        .queryName(sink_table)
+        .outputMode(mode)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    return df.sparkSession.table(sink_table)
+
+
+def _read_fixture_stream(
+    spark: SparkSession, sf_dir: str, table: str
+) -> DataFrame:
+    """``readStream`` over the ``{table}.parquet`` fixture with its raw
+    (pre-normalization) schema. The file stream source requires a
+    DIRECTORY and each fixture is a single file, so this streams the
+    parent dir with a glob filter."""
+    name = f"{table}.parquet"
+    raw_schema = spark.read.parquet(os.path.join(sf_dir, name)).schema
+    return (
+        spark.readStream.schema(raw_schema)
+        .option("pathGlobFilter", name)
+        .parquet(sf_dir)
+    )
+
+
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``readStream`` over the events fixture directory, with the
     same event-time normalization as the batch loader — so the
     stream's ``ts`` is always LTZ TIMESTAMP (``withWatermark``
     rejects TIMESTAMP_NTZ) and batch-parity tests compare
     same-typed results."""
-    from top_produce_etl_spark.io.sources import load_table, normalize_event_time
-
     static = load_table(spark, sf_dir, "events")  # normalized batch twin
-    path = os.path.join(sf_dir, "events.parquet")
-    raw_schema = spark.read.parquet(path).schema  # pre-normalization dtypes
-    # The file stream source requires a DIRECTORY; the fixture is a
-    # single file → stream the parent dir with a glob filter.
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    sdf = normalize_event_time(sdf)
+    sdf = normalize_event_time(_read_fixture_stream(spark, sf_dir, "events"))
     return sdf.select(*[F.col(c) for c in static.columns])
+
+
+def _windowed_counts(
+    events: DataFrame, duration: str, watermark: str
+) -> DataFrame:
+    """Watermarked tumbling-window event counts per event_type:
+    (window_start, window_end, event_type, n_events)."""
+    return tumbling_window_agg(
+        events.withWatermark("ts", watermark),
+        "ts",
+        duration,
+        ["event_type"],
+        [F.count(F.lit(1)).alias("n_events")],
+    ).select("window_start", "window_end", "event_type", "n_events")
 
 
 def run_windowed_counts_stream(
@@ -71,39 +130,23 @@ def run_windowed_counts_stream(
     """Tumbling windowed counts per event_type as a stream:
     readStream → watermark → window agg → memory sink, availableNow.
     Returns the sink table DataFrame after the run completes."""
-    events = stream_events(spark, sf_dir)
-    agg = (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", duration).alias("win"), F.col("event_type"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("win.start").alias("window_start"),
-            F.col("win.end").alias("window_end"),
-            "event_type",
-            "n_events",
-        )
+    return _run_available_now(
+        _windowed_counts(stream_events(spark, sf_dir), duration, watermark),
+        sink_table,
+        "complete",
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink_table)
 
 
-def enriched_segment_counts_stream(
-    spark: SparkSession,
+def enriched_segment_counts(
+    events: DataFrame,
     sf_dir: str,
     duration: str = "1 day",
     watermark: str = "1 hour",
-    sink_table: str = "stream_enriched_counts",
 ) -> DataFrame:
-    """STREAM-STATIC dimension enrichment feeding a windowed agg:
-    event stream ⨝ broadcast(customer dim) → per-(day, market
-    segment) counts.
+    """Dimension enrichment feeding a windowed agg: events ⨝
+    broadcast(customer dim) → per-(day, market segment) counts and
+    value sums. Batch over ``load_table`` events; STREAM-STATIC over
+    :func:`stream_events` (:func:`enriched_segment_counts_stream`).
 
     Stream-static joins keep NO state: the static side is re-planned
     per micro-batch and broadcast (hint it explicitly — the dim is
@@ -115,67 +158,39 @@ def enriched_segment_counts_stream(
     (window, segment) aggregate — whose shuffled rows are partial
     aggregates, |windows × segments| per partition.
 
-    Batch parity asserted in tests/test_streaming.py. The value
-    sum goes through exact decimal (repo convention) so micro-batch
-    accumulation order cannot perturb the double.
+    The value sum goes through exact decimal (repo convention) so
+    micro-batch accumulation order cannot perturb the double.
     """
-    from top_produce_etl_spark.io.sources import load_table
-
-    events = stream_events(spark, sf_dir)
-    cust = load_table(spark, sf_dir, "customer").select(
+    cust = load_table(events.sparkSession, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
     enriched = events.join(
         maybe_broadcast(cust), events.user_id == cust.c_custkey
     )
-    agg = (
-        enriched.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", duration).alias("win"), "c_mktsegment")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            dec_sum("value", "sum_value"),
-        )
-        .select(
-            F.col("win.start").alias("window_start"),
-            "c_mktsegment",
-            "n_events",
-            "sum_value",
-        )
-    )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink_table)
+    return tumbling_window_agg(
+        enriched.withWatermark("ts", watermark),
+        "ts",
+        duration,
+        ["c_mktsegment"],
+        [F.count(F.lit(1)).alias("n_events"), dec_sum("value", "sum_value")],
+    ).select("window_start", "c_mktsegment", "n_events", "sum_value")
 
 
-def enriched_segment_counts_batch(
-    spark: SparkSession, sf_dir: str, duration: str = "1 day"
+def enriched_segment_counts_stream(
+    spark: SparkSession,
+    sf_dir: str,
+    duration: str = "1 day",
+    watermark: str = "1 hour",
+    sink_table: str = "stream_enriched_counts",
 ) -> DataFrame:
-    """Batch twin of :func:`enriched_segment_counts_stream`."""
-    from top_produce_etl_spark.io.sources import load_table
-
-    events = load_table(spark, sf_dir, "events")
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_mktsegment"
-    )
-    return (
-        events.join(maybe_broadcast(cust), events.user_id == cust.c_custkey)
-        .groupBy(F.window("ts", duration).alias("win"), "c_mktsegment")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            dec_sum("value", "sum_value"),
-        )
-        .select(
-            F.col("win.start").alias("window_start"),
-            "c_mktsegment",
-            "n_events",
-            "sum_value",
-        )
+    """:func:`enriched_segment_counts` as a stream-static job,
+    complete-mode memory sink. Batch and DuckDB parity asserted in
+    tests/test_streaming.py."""
+    events = stream_events(spark, sf_dir)
+    return _run_available_now(
+        enriched_segment_counts(events, sf_dir, duration, watermark),
+        sink_table,
+        "complete",
     )
 
 
@@ -251,26 +266,14 @@ def sessionize_stream(
     covers gap sessions with far less state-management code, so the
     engine uses it and reserves the custom path for logic the
     built-in can't express."""
-    agg = (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("win"), F.col("user_id"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("user_id"),
-            F.col("win.start").alias("session_start"),
-            F.col("win.end").alias("session_end"),
-            "n_events",
-        )
-    )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return agg.sparkSession.table(sink_table)
+    agg = session_window_agg(
+        events.withWatermark("ts", watermark),
+        "ts",
+        gap,
+        ["user_id"],
+        [F.count(F.lit(1)).alias("n_events")],
+    ).select("user_id", "session_start", "session_end", "n_events")
+    return _run_available_now(agg, sink_table, "complete")
 
 
 def running_user_totals_stream(
@@ -341,27 +344,19 @@ def running_user_totals_stream(
             GroupStateTimeout.NoTimeout,
         )
     )
-    q = (
-        updates.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return updates.sparkSession.table(sink_table)
+    return _run_available_now(updates, sink_table, "update")
 
 
-def purchase_click_attribution_stream(
-    spark: SparkSession,
-    sf_dir: str,
+def purchase_click_attribution(
+    events: DataFrame,
     lookback: str = "1 hour",
     watermark: str = "2 hours",
-    sink_table: str = "stream_attribution",
 ) -> DataFrame:
-    """Watermarked STREAM-STREAM inner join: each purchase matched
-    to the same user's clicks in the preceding ``lookback`` window
-    (ad-attribution shape).
+    """Each purchase matched to the same user's clicks in the
+    preceding ``lookback`` window (ad-attribution shape). Batch over
+    ``load_table`` events; a watermarked STREAM-STREAM inner join
+    over :func:`stream_events`
+    (:func:`purchase_click_attribution_stream`).
 
     Stream-stream joins are the one Structured Streaming operator
     with state on BOTH sides: each side buffers rows until the other
@@ -370,12 +365,7 @@ def purchase_click_attribution_stream(
     predicate is what makes that eviction possible — an unbounded
     stream-stream join would be rejected in append mode. Both sides
     here are filters of one source stream (a supported self-join).
-
-    Batch parity: the same join condition over the static events
-    table returns the identical row set — asserted in
-    tests/test_streaming.py.
     """
-    events = stream_events(spark, sf_dir)
     clicks = (
         events.filter(F.col("event_type") == "click")
         .select(
@@ -395,7 +385,7 @@ def purchase_click_attribution_stream(
         )
         .withWatermark("purchase_ts", watermark)
     )
-    joined = purchases.join(
+    return purchases.join(
         clicks,
         F.expr(
             f"""p_user_id = c_user_id
@@ -410,15 +400,25 @@ def purchase_click_attribution_stream(
         "click_id",
         "click_ts",
     )
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+
+
+def purchase_click_attribution_stream(
+    spark: SparkSession,
+    sf_dir: str,
+    lookback: str = "1 hour",
+    watermark: str = "2 hours",
+    sink_table: str = "stream_attribution",
+) -> DataFrame:
+    """:func:`purchase_click_attribution` as a stream-stream join,
+    append-mode memory sink. The same body over the static events
+    table returns the identical row set — asserted in
+    tests/test_streaming.py."""
+    events = stream_events(spark, sf_dir)
+    return _run_available_now(
+        purchase_click_attribution(events, lookback, watermark),
+        sink_table,
+        "append",
     )
-    q.awaitTermination()
-    return spark.table(sink_table)
 
 
 def materialize_daily_counts_stream(
@@ -446,22 +446,14 @@ def materialize_daily_counts_stream(
     Checkpointed + availableNow ⇒ restartable incremental batch; a
     cron-scheduled run processes just the new files each time.
     """
-    from top_produce_etl_spark.io.sources import normalize_event_time
     from top_produce_etl_spark.io.sinks import write_table
 
     raw_schema = spark.read.parquet(source_dir).schema
     events = normalize_event_time(
         spark.readStream.schema(raw_schema).parquet(source_dir)
     )
-    agg = (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 day").alias("win"), F.col("event_type"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.to_date(F.col("win.start")).alias("day"),
-            "event_type",
-            "n_events",
-        )
+    agg = _windowed_counts(events, "1 day", watermark).select(
+        F.to_date("window_start").alias("day"), "event_type", "n_events"
     )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -480,42 +472,6 @@ def materialize_daily_counts_stream(
         .start()
     )
     q.awaitTermination()
-
-
-def purchase_click_attribution_batch(
-    spark: SparkSession, sf_dir: str, lookback: str = "1 hour"
-) -> DataFrame:
-    """Batch twin of :func:`purchase_click_attribution_stream` —
-    identical join predicate over the static events table."""
-    from top_produce_etl_spark.io.sources import load_table
-
-    events = load_table(spark, sf_dir, "events")
-    clicks = events.filter(F.col("event_type") == "click").select(
-        F.col("user_id").alias("c_user_id"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-    )
-    purchases = events.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("p_user_id"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("purchase_ts"),
-        F.col("value").alias("purchase_value"),
-    )
-    return purchases.join(
-        clicks,
-        F.expr(
-            f"""p_user_id = c_user_id
-            AND click_ts >= purchase_ts - INTERVAL {lookback}
-            AND click_ts < purchase_ts"""
-        ),
-    ).select(
-        F.col("p_user_id").alias("user_id"),
-        "purchase_id",
-        "purchase_ts",
-        "purchase_value",
-        "click_id",
-        "click_ts",
-    )
 
 
 def distinct_event_keys_stream(
@@ -544,22 +500,14 @@ def distinct_event_keys_stream(
     against a ``SELECT DISTINCT`` DuckDB oracle
     (queries/streaming_q.py:stream_distinct_keys_parity).
     """
-    events = stream_events(spark, sf_dir)
     deduped = (
-        events.withWatermark("ts", watermark)
+        stream_events(spark, sf_dir)
+        .withWatermark("ts", watermark)
         .select("user_id", "event_type", "ts")
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink_table)
+    return _run_available_now(deduped, sink_table, "append")
 
 
 def normalized_dedup_stream(
@@ -586,13 +534,7 @@ def normalized_dedup_stream(
     checks it against the batch-derived DuckDB oracle)."""
     from top_produce_etl_spark.operators.dedup import normalize_for_dedup
 
-    path = os.path.join(sf_dir, "documents.parquet")
-    raw_schema = spark.read.parquet(path).schema
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    sdf = _read_fixture_stream(spark, sf_dir, "documents")
     base = sdf.filter(F.col("doc_id") % 2 == 0).select("doc_id", "text")
     twin = base.select(
         (F.col("doc_id") + 1).alias("doc_id"),
@@ -605,125 +547,7 @@ def normalized_dedup_stream(
         .select(normalize_for_dedup(F.col("text")).alias("norm_key"))
         .dropDuplicates(["norm_key"])
     )
-    q = (
-        keys.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink_table)
-
-
-def tws_available() -> bool:
-    """Spark 4's transformWithStateInPandas needs ``google.protobuf``
-    in the Python env (its state-server protocol is protobuf-framed;
-    pyspark does not vendor it). Absent here, so the job below gates
-    on this check — ``applyInPandasWithState``
-    (:func:`running_user_totals_stream`) is the covered stateful
-    path in this environment."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def running_user_totals_tws(
-    events: DataFrame, sink_table: str = "stream_user_totals_tws"
-) -> DataFrame:
-    """Per-user running totals via the Spark 4 ``StatefulProcessor``
-    API (``transformWithStateInPandas`` + RocksDB state store) — the
-    successor to applyInPandasWithState: typed state handles
-    (value/list/map), timers, TTL, and state-schema evolution.
-
-    Semantically identical to :func:`running_user_totals_stream`;
-    exists so a user on the new API has a worked example. Raises
-    with the dependency story when protobuf is unavailable (this
-    sandbox) — see :func:`tws_available`.
-    """
-    if not tws_available():
-        raise ImportError(
-            "transformWithStateInPandas requires the 'protobuf' package "
-            "(google.protobuf) for its state-server protocol; not "
-            "installed in this environment. Use "
-            "running_user_totals_stream (applyInPandasWithState) instead."
-        )
-    import pandas as pd  # noqa: F811
-    from pyspark.sql.streaming import StatefulProcessor
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    spark = events.sparkSession
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    out_schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("total_value", DoubleType()),
-            StructField("n_events", LongType()),
-        ]
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle):
-            self.state = handle.getValueState(
-                "totals",
-                StructType(
-                    [
-                        StructField("total", DoubleType()),
-                        StructField("n", LongType()),
-                    ]
-                ),
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            total, n = 0.0, 0
-            if self.state.exists():
-                total, n = self.state.get()
-            for pdf in rows:
-                total += float(pdf["value"].sum())
-                n += len(pdf)
-            self.state.update((total, n))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "total_value": [total],
-                    "n_events": [n],
-                }
-            )
-
-        def close(self):
-            pass
-
-    res = (
-        events.select("user_id", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            RunningTotals(),
-            outputStructType=out_schema,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-    q = (
-        res.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return events.sparkSession.table(sink_table)
+    return _run_available_now(keys, sink_table, "append")
 
 
 def purchase_click_outer_attribution_stream(
@@ -775,15 +599,7 @@ def purchase_click_outer_attribution_stream(
         ),
         "leftOuter",
     ).select("user_id", "purchase_id", "purchase_ts", "click_id")
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink_table)
+    return _run_available_now(joined, sink_table, "append")
 
 
 def run_cms_stream(
@@ -804,28 +620,19 @@ def run_cms_stream(
     """
     from top_produce_etl_spark.operators.countmin import cms_build
 
-    events = stream_events(spark, sf_dir)
-    sketch = cms_build(events, "user_id")
-    q = (
-        sketch.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink_table)
+    sketch = cms_build(stream_events(spark, sf_dir), "user_id")
+    return _run_available_now(sketch, sink_table, "complete")
 
 
 def run_kmv_stream(
-    spark: SparkSession,
-    sf_dir: str,
+    events: DataFrame,
     key_sql: str,
     k: int = 64,
     sink_table: str = "stream_kmv_cells",
 ) -> DataFrame:
-    """KMV distinct sketch maintained BY the streaming runtime via a
-    CUSTOM state machine (``applyInPandasWithState``).
+    """KMV distinct sketch per ``event_type`` of the stream
+    ``events``, maintained BY the streaming runtime via a CUSTOM
+    state machine (``applyInPandasWithState``).
 
     Unlike the CMS/DDSketch streaming twins (plain SUM cells — a
     built-in streaming aggregate maintains them), the k-min hash set
@@ -850,7 +657,6 @@ def run_kmv_stream(
         composite_hash_col,
     )
 
-    events = stream_events(spark, sf_dir)
     hashed = events.select(
         "event_type", composite_hash_col(key_sql).alias("h")
     ).where(F.col("h").isNotNull())
@@ -878,15 +684,7 @@ def run_kmv_stream(
         fn, out_schema, state_schema, "update",
         GroupStateTimeout.NoTimeout,
     )
-    q = (
-        updates.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink_table)
+    return _run_available_now(updates, sink_table, "update")
 
 
 def run_ddsketch_stream(
@@ -902,17 +700,8 @@ def run_ddsketch_stream(
     the parity query's oracle re-derives the cells in DuckDB."""
     from top_produce_etl_spark.operators.ddsketch import dd_build
 
-    events = stream_events(spark, sf_dir)
-    sketch = dd_build(events, ["event_type"], "value")
-    q = (
-        sketch.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink_table)
+    sketch = dd_build(stream_events(spark, sf_dir), ["event_type"], "value")
+    return _run_available_now(sketch, sink_table, "complete")
 
 
 def restart_recovery_windowed_counts(
@@ -953,15 +742,10 @@ def restart_recovery_windowed_counts(
     day-window oracle in queries/streaming_q.py; the stop/restart
     state assertions live in tests/test_streaming.py.
     """
-    from top_produce_etl_spark.io.sources import load_table
-
     src = os.path.join(work_dir, "src")
     sink = os.path.join(work_dir, "sink")
     ckpt = os.path.join(work_dir, "ckpt")
     os.makedirs(src, exist_ok=True)
-
-    import glob as _glob
-    import shutil
 
     events = load_table(spark, sf_dir, "events").select(
         "ts", "event_type", "event_id"
@@ -992,7 +776,7 @@ def restart_recovery_windowed_counts(
         # then move its part file up as ``name``
         tmp = os.path.join(work_dir, f"__tmp_{name}")
         df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = _glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
+        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
         shutil.move(part, os.path.join(src, name))
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -1004,41 +788,28 @@ def restart_recovery_windowed_counts(
 
     schema = spark.read.parquet(os.path.join(src, "slice00.parquet")).schema
 
-    def start(available_now: bool, path_glob: str):
+    def run(path_glob: str) -> None:
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
             .option("pathGlobFilter", path_glob)
             .parquet(src)
         )
-        agg = (
-            stream.withWatermark("ts", watermark)
-            .groupBy(
-                F.window("ts", duration).alias("win"),
-                F.col("event_type"),
-            )
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .select(
-                F.col("win.start").alias("window_start"),
-                F.col("win.end").alias("window_end"),
-                "event_type",
-                "n_events",
-            )
-        )
-        return (
-            agg.writeStream.format("parquet")
+        (
+            _windowed_counts(stream, duration, watermark)
+            .writeStream.format("parquet")
             .option("path", sink)
             .option("checkpointLocation", ckpt)
             .outputMode("append")
             .trigger(availableNow=True)
             .start()
+            .awaitTermination()
         )
 
     # PHASE 1: only the first phase1_slices files are visible
-    phase1_glob = "{" + ",".join(
+    run("{" + ",".join(
         f"slice{i:02d}.parquet" for i in range(phase1_slices)
-    ) + "}"
-    start(True, phase1_glob).awaitTermination()
+    ) + "}")
     if report is not None:
         # what the sink had committed BEFORE the restart — callers
         # assert it is a strict subset of the final result (i.e. the
@@ -1050,14 +821,14 @@ def restart_recovery_windowed_counts(
 
     # the sentinel: one far-future row pushes the watermark past
     # every real window in phase 2 so append mode flushes them all
-    sentinel_ts = hi_ts + __import__("datetime").timedelta(days=40)
+    sentinel_ts = hi_ts + datetime.timedelta(days=40)
     _write_single_file(
         spark.createDataFrame([(sentinel_ts, "__sentinel__", -1)], schema),
         f"slice{n_slices:02d}.parquet",
     )
 
     # PHASE 2: restart from the SAME checkpoint, all files visible
-    start(True, "slice*.parquet").awaitTermination()
+    run("slice*.parquet")
 
     return (
         spark.read.parquet(sink)
@@ -1088,30 +859,16 @@ def langid_scoring_stream(
     )
 
     path = os.path.join(sf_dir, "documents.parquet")
-    raw_schema = spark.read.parquet(path).schema
     batch_corpus = synthesize_lang_corpus(spark.read.parquet(path))
     model_rows = train_langid(batch_corpus, iters=3).collect()
 
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
-    stream_corpus = synthesize_lang_corpus(sdf).withColumnRenamed(
-        "lang", "lang_true"
-    )
+    stream_corpus = synthesize_lang_corpus(
+        _read_fixture_stream(spark, sf_dir, "documents")
+    ).withColumnRenamed("lang", "lang_true")
     scored = score_langid_expr(
         stream_corpus, model_rows, extra_cols=("lang_true",)
     )
-    q = (
-        scored.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink_table)
+    return _run_available_now(scored, sink_table, "append")
 
 
 def frozen_bucket_stream(
@@ -1133,17 +890,13 @@ def frozen_bucket_stream(
     fixture; every (doc, lang, tokens, score, bucket) row must
     hash-match the DuckDB lifecycle re-derivation
     (queries/streaming_q.py::stream_frozen_buckets_parity)."""
-    from pyspark.sql import functions as F
-
     from top_produce_etl_spark.operators.textquality import (
         score_surprisal_expr,
         surprisal_cutoffs,
         unigram_lm,
     )
 
-    path = os.path.join(sf_dir, "documents.parquet")
-    raw_schema = spark.read.parquet(path).schema
-    docs = spark.read.parquet(path)
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     ref = docs.filter(F.col("doc_id") % 2 == 0)
     lm_rows = unigram_lm(ref).collect()  # |vocab| rows — model-sized
     ttotal = sum(r["ctotal"] for r in lm_rows)
@@ -1157,13 +910,11 @@ def frozen_bucket_stream(
                 entries.append(F.lit(int(r[field])))
         return F.create_map(*entries)
 
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
     scored = score_surprisal_expr(
-        sdf, lm_rows, ttotal, extra_cols=("lang",)
+        _read_fixture_stream(spark, sf_dir, "documents"),
+        lm_rows,
+        ttotal,
+        extra_cols=("lang",),
     )
     s = F.col("mean_info_micro")
     i = F.col("doc_id").cast("bigint")
@@ -1186,15 +937,7 @@ def frozen_bucket_stream(
         "doc_id", "lang", "n_tokens", "mean_info_micro",
         bucket.alias("ppl_bucket"),
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink_table)
+    return _run_available_now(out, sink_table, "append")
 
 
 def html_extract_stream(
@@ -1210,22 +953,13 @@ def html_extract_stream(
     fixture; every (doc, extracted text, line count) row must
     hash-match the batch/DuckDB derivation
     (queries/streaming_q.py::stream_html_extract_parity)."""
-    from pyspark.sql import functions as F
-
     from top_produce_etl_spark.operators.html import (
         extract_html_text,
         synthesize_html_docs,
     )
 
-    path = os.path.join(sf_dir, "documents.parquet")
-    raw_schema = spark.read.parquet(path).schema
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
-    pages = synthesize_html_docs(sdf.select("doc_id", "text"))
-    x = extract_html_text(pages)
+    sdf = _read_fixture_stream(spark, sf_dir, "documents")
+    x = extract_html_text(synthesize_html_docs(sdf.select("doc_id", "text")))
     out = x.select(
         "doc_id",
         "text",
@@ -1236,15 +970,7 @@ def html_extract_stream(
             + 1
         ).cast("bigint").alias("n_lines"),
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink_table)
+    return _run_available_now(out, sink_table, "append")
 
 
 def robots_gate_stream(
@@ -1264,17 +990,15 @@ def robots_gate_stream(
     URL pattern are a dimension, recomputed when robots change, not
     per fetched row). availableNow consumes the bounded fixture;
     every row must hash-match the batch/DuckDB derivation."""
-    from pyspark.sql import functions as F
-
     from top_produce_etl_spark.operators.robots import (
         parse_robots,
         robots_allowed,
         synthesize_robots_corpus,
     )
 
-    path = os.path.join(sf_dir, "documents.parquet")
-    raw_schema = spark.read.parquet(path).schema
-    ids = spark.read.parquet(path).select("doc_id")
+    ids = spark.read.parquet(
+        os.path.join(sf_dir, "documents.parquet")
+    ).select("doc_id")
     robots, urls = synthesize_robots_corpus(ids)
     # static verdict dimension: one row per DISTINCT (domain, path)
     verdicts = (
@@ -1286,12 +1010,9 @@ def robots_gate_stream(
         )
         .select("domain", "path", "allowed", "matched_len")
     )
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
+    _, stream_urls = synthesize_robots_corpus(
+        _read_fixture_stream(spark, sf_dir, "documents").select("doc_id")
     )
-    _, stream_urls = synthesize_robots_corpus(sdf.select("doc_id"))
     out = stream_urls.join(
         F.broadcast(verdicts), ["domain", "path"], "left"
     ).select(
@@ -1299,12 +1020,4 @@ def robots_gate_stream(
         F.coalesce(F.col("allowed"), F.lit(True)).alias("allowed"),
         F.col("matched_len").cast("int").alias("matched_len"),
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink_table)
+    return _run_available_now(out, sink_table, "append")
