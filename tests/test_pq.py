@@ -233,9 +233,9 @@ def test_synthembs_deterministic_rereads(spark):
 
 def test_pq_index_save_load_roundtrip_search(spark, sf_dir, tmp_path):
     """The stored-index lifecycle: save (codebooks + 8-byte codes as
-    parquet), load, and serve — retrieved neighbor sets must equal
-    the live LUT path's, and the stored model must round-trip
-    exactly."""
+    parquet), load, and serve — the served rows (neighbors, ranks
+    and scores) must equal the live LUT path's, and the stored model
+    must round-trip exactly."""
     from top_produce_etl_spark.operators.pq import (
         pq_index_load,
         pq_index_save,
@@ -250,19 +250,20 @@ def test_pq_index_save_load_roundtrip_search(spark, sf_dir, tmp_path):
     assert loaded == books
     assert enc.columns == ["neighbor_id", "codes"]
 
-    live = {
-        (r["query_id"], r["neighbor_id"])
+    cols = ["query_id", "neighbor_id", "rank", "pq_cosine"]
+    live = sorted(
+        tuple(r[c] for c in cols)
         for r in pq_topk(
             emb, queries, "vec_id", "embedding", dim=64, k=3,
             scoring="lut",
         ).collect()
-    }
-    served = {
-        (r["query_id"], r["neighbor_id"])
+    )
+    served = sorted(
+        tuple(r[c] for c in cols)
         for r in pq_topk_from_index(
             spark, path, queries, "vec_id", "embedding", k=3
         ).collect()
-    }
+    )
     assert served == live and len(served) == 30
 
 
@@ -417,13 +418,16 @@ def test_ivfpq_index_save_serve_matches_live_and_prunes(
     - result parity: identical (query, neighbor, rank) rows as the
       live ivfpq_topk LUT path (both trainers are deterministic, so
       the stored model equals the live model exactly);
-    - the serving scan is PARTITION-PRUNED: its physical plan pushes
-      the probe-cell set into the parquet partition filter, so only
-      probed cell directories are read (the flat-serve-latency
-      property at 100 TB);
-    - the probe set bounds the scan: every served row's cell is in
-      the probe set.
+    - the serving scan is PARTITION-PRUNED: the served frame's own
+      physical plan pushes the probe-cell set into the parquet
+      partition filter on ``cell``, so only probed cell directories
+      are read (the flat-serve-latency property at 100 TB);
+    - the probe set bounds the scan: the cells in that partition
+      filter are exactly the queries' probe cells.
     """
+    import re
+
+    from top_produce_etl_spark.operators.clustering import with_probe_cells
     from top_produce_etl_spark.operators.pq import (
         ivfpq_index_load,
         ivfpq_index_save,
@@ -457,18 +461,26 @@ def test_ivfpq_index_save_serve_matches_live_and_prunes(
     }
     assert served == live and len(served) == 30
 
-    # partition pruning: a probe-filtered scan of the codes store
-    # must carry the cell filter as a PartitionFilter (pruned at
-    # file-listing time, not post-scan)
-    pruned = spark.read.parquet(f"{path}/codes").filter(
-        F.col("cell").isin([0, 1])
+    # partition pruning on the served path itself: the codes scan
+    # carries the probe-cell set as a PartitionFilter on ``cell``
+    # (pruned at file-listing time, not post-scan)
+    p = served_df._sc._jvm.PythonSQLUtils.explainString(
+        served_df._jdf.queryExecution(), "formatted"
     )
-    p = pruned._sc._jvm.PythonSQLUtils.explainString(
-        pruned._jdf.queryExecution(), "formatted"
-    )
-    assert "PartitionFilters" in p and "cell" in p
-    only = {int(r["cell"]) for r in pruned.select("cell").distinct().collect()}
-    assert only <= {0, 1}
+    pruned = [
+        set(map(int, m.group(1).split(",")))
+        for line in p.splitlines()
+        if "PartitionFilters" in line
+        for m in [re.search(r"cell#\d+ IN \(([\d,]+)\)", line)]
+        if m
+    ]
+    probes = {
+        int(r["c"])
+        for r in with_probe_cells(queries, "embedding", cents, 2, out="cs")
+        .select(F.explode("cs").alias("c"))
+        .collect()
+    }
+    assert pruned and all(cells == probes for cells in pruned), p
 
 
 def test_ivfpq_index_append_grows_store_without_retraining(

@@ -107,6 +107,40 @@ def test_stream_stream_join_matches_batch(spark, sf_dir):
     assert b == s and len(b) > 0
 
 
+def test_attribution_joins_reject_unsafe_lookback_before_any_job(
+    spark, sf_dir
+):
+    """``lookback`` is interpolated into ``INTERVAL …`` join SQL, so
+    each attribution join must reject a value that is not
+    '<n> <unit>' with ValueError before any Spark job runs."""
+    import pytest
+
+    from top_produce_etl_spark.streaming.jobs import (
+        purchase_click_attribution,
+        purchase_click_attribution_stream,
+        purchase_click_outer_attribution_stream,
+    )
+
+    events = load_table(spark, sf_dir, "events")
+    bad = "1 hour) OR (1=1"
+    sc = spark.sparkContext
+    sc.setJobGroup("lookback-guard", "unsafe lookback")
+    try:
+        with pytest.raises(ValueError, match="lookback"):
+            purchase_click_attribution(events, lookback=bad)
+        with pytest.raises(ValueError, match="lookback"):
+            purchase_click_attribution_stream(spark, sf_dir, lookback=bad)
+        with pytest.raises(ValueError, match="lookback"):
+            purchase_click_outer_attribution_stream(
+                spark, sf_dir, lookback=bad
+            )
+        jobs = sc.statusTracker().getJobIdsForGroup("lookback-guard")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(jobs) == []
+
+
 def test_availablenow_checkpoint_is_incremental(spark, tmp_path):
     """The production incremental-batch pattern: a checkpointed
     availableNow stream processes the backlog once; a second run

@@ -33,6 +33,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from top_produce_etl_spark.operators.topn import top_n_window
+
 
 @pandas_udf(DoubleType())
 def embedding_norm_pd(emb: pd.Series) -> pd.Series:
@@ -135,17 +137,10 @@ def cosine_topk_numpy(
                         rows.append((int(q_ids[qi]), int(ids[ci]), float(S[qi, ci])))
             yield pd.DataFrame(rows, columns=["query_id", "neighbor_id", "cosine"])
 
-    from pyspark.sql import Window
-
     partial = corpus.select(id_col, vec_col).mapInPandas(fn, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return top_n_window(
+        partial, "query_id", "cosine", k, tiebreak="neighbor_id"
+    ).select("query_id", "neighbor_id", "cosine", "rank")
 
 
 def unit_normalize_arrow(

@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from top_produce_etl_spark.operators._cache import persist_tracked, release
+from top_produce_etl_spark.operators.topn import top_n_window
 
 
 def _cents_rel(spark, cents: list[tuple[int, list[float]]]) -> DataFrame:
@@ -405,8 +406,6 @@ def ivf_topk(
     Output: query_id, neighbor_id, cosine, rank (matches
     cosine_topk_bruteforce's schema).
     """
-    from pyspark.sql.window import Window
-
     from top_produce_etl_spark.operators.similarity import dot_fn
 
     dot = dot_fn(scoring)
@@ -455,14 +454,9 @@ def ivf_topk(
             / (F.col("__qn") * F.col("__cn")),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return top_n_window(
+        scored, "query_id", "cosine", k, tiebreak="neighbor_id"
+    ).select("query_id", "neighbor_id", "cosine", "rank")
 
 
 def k_center_select(

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from top_produce_etl_spark.operators.topn import top_n_window
 
 _SAFE_INTERVAL = __import__("re").compile(
     r"(?i)\d+\s+(?:second|minute|hour|day|week|month|year)s?"
@@ -102,14 +103,9 @@ def dedup_first_by_time(
     equivalent of streaming ``withWatermark().dropDuplicates(keys)``
     but with a defined winner (earliest ts, then tiebreak), where
     ``dropDuplicates`` alone keeps an arbitrary row."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*keys).orderBy(F.col(ts_col).asc(), F.col(tiebreak).asc())
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    return top_n_window(
+        df, keys, ts_col, 1, tiebreak=tiebreak, ascending=True, rank_col="__rn"
+    ).drop("__rn")
 
 
 def cohort_retention(

@@ -35,7 +35,7 @@ Reference parity: the reference's transform core
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from top_produce_etl_spark.functions.portable_hash import (
@@ -43,6 +43,7 @@ from top_produce_etl_spark.functions.portable_hash import (
     composite_hash_col,
     composite_hash_sql,
 )
+from top_produce_etl_spark.operators.topn import top_n_window
 
 HASH_SPACE = 1 << COMPOSITE_BITS  # 2^56
 K = 64
@@ -98,12 +99,9 @@ def kmv_sketch(
         # bounded per-partition top-k (a global row_number window
         # would be a data-sized single partition — audit-forbidden)
         return distinct.orderBy(F.col("h").asc()).limit(k)
-    w = Window.partitionBy(*group_cols).orderBy(F.col("h").asc())
-    return (
-        distinct.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k)
-        .select(*group_cols, "h")
-    )
+    return top_n_window(
+        distinct, group_cols, "h", k, ascending=True, rank_col="__rn"
+    ).select(*group_cols, "h")
 
 
 def kmv_estimate(

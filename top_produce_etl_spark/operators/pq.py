@@ -33,6 +33,19 @@ Spark-first design (100 TB shape):
   reconstruction, no per-pair dim-loop. Same neighbor sets as the
   decimal twin (FP association differs in the last ulps; the sets
   are pinned in tests/test_pq.py).
+- one search core: the in-memory searches (:func:`pq_topk`,
+  :func:`ivfpq_topk`) and the stored-index searches
+  (``*_topk_from_index``) differ only in where the coded corpus
+  comes from — the memoized :func:`pq_encode` of the raw vectors, or
+  the parquet ``codes`` store. Everything after that is shared:
+  ``_query_side`` builds the query rows (the per-query LUT and norm,
+  optionally routed to probe cells), ``_corpus_side`` the candidate
+  rows (codes + model-side norm, or the reconstructed vector), and
+  ``_search`` joins them (a broadcast cross, or the equi-join on the
+  probed cell), scores, and cuts with
+  ``operators.topn.top_n_window``. The store has one codebook
+  writer/reader and one code writer (``cell``-partitioned for
+  IVF×PQ).
 - train-once: the model is driver-side Python lists (S·C·d floats);
   ``cache_key`` memoizes it per (corpus-key, params) so repeated
   queries — the bench steady state, or a session serving many
@@ -48,12 +61,20 @@ codebook so the oracle's row_number enumeration matches.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+import operator
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from top_produce_etl_spark.operators._cache import persist_tracked
-from top_produce_etl_spark.operators.similarity import _dec_dot
-
+from top_produce_etl_spark.operators.clustering import (
+    kmeans_fit,
+    with_nearest_cell,
+    with_probe_cells,
+)
+from top_produce_etl_spark.operators.similarity import dot_fn
+from top_produce_etl_spark.operators.topn import top_n_window
 SUBSPACES = 8
 CODES = 16
 
@@ -94,6 +115,19 @@ def pq_cache_clear() -> None:
     _MODEL_CACHE.clear()
 
 
+def _train_sample(df: DataFrame, id_col: str, mod: int | None) -> DataFrame:
+    """The deterministic 1/``mod`` training sample keyed by
+    ``xxhash64(id)`` (see :func:`pq_train`); the whole frame when
+    ``mod`` is None."""
+    if mod is None:
+        return df
+    if mod < 2:
+        raise ValueError(f"train_sample_mod must be >= 2, got {mod}")
+    return df.filter(
+        F.pmod(F.xxhash64(F.col(id_col), F.lit(17)), F.lit(mod)) == 0
+    )
+
+
 def pq_train(
     df: DataFrame,
     id_col: str,
@@ -130,18 +164,7 @@ def pq_train(
     bench (``pq_probe``)."""
     if dim % subspaces:
         raise ValueError(f"dim {dim} not divisible by {subspaces}")
-    if train_sample_mod is not None:
-        if train_sample_mod < 2:
-            raise ValueError(
-                f"train_sample_mod must be >= 2, got {train_sample_mod}"
-            )
-        df = df.filter(
-            F.pmod(
-                F.xxhash64(F.col(id_col), F.lit(17)),
-                F.lit(train_sample_mod),
-            )
-            == 0
-        )
+    df = _train_sample(df, id_col, train_sample_mod)
     d = dim // subspaces
     init_rows = (
         df.select(F.col(id_col), F.col(vec_col))
@@ -290,37 +313,208 @@ def _lut_col(vec_col: str, subspaces: int, d: int) -> Column:
     return F.transform(F.col("__pq_vecs"), _book_fn)
 
 
-def _lut_score(subspaces: int) -> Column:
-    """Candidate score in S lookups + S adds (fully unrolled —
-    stays inside whole-stage codegen): Σ_s lut[s][codes[s]]."""
-    terms = [
+def _codeword_terms(table: str, subspaces: int) -> list[Column]:
+    """Per-subspace lookup of each candidate's codeword in an S×C
+    table: ``table[s][codes[s]]`` for every subspace s."""
+    return [
         F.element_at(
-            F.element_at(F.col("__lut"), s + 1),
+            F.element_at(F.col(table), s + 1),
             F.element_at(F.col("codes"), s + 1),
         )
         for s in range(subspaces)
     ]
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
+
+
+def _lut_score(subspaces: int) -> Column:
+    """Candidate score in S lookups + S adds (fully unrolled —
+    stays inside whole-stage codegen): Σ_s lut[s][codes[s]]."""
+    return reduce(operator.add, _codeword_terms("__lut", subspaces))
 
 
 def _lut_norm(subspaces: int) -> Column:
     """Reconstructed-vector norm from the model's squared-norm
     table: ‖recon‖² = Σ_s ‖codebook[s][codes[s]]‖² (subvectors are
     disjoint coordinate blocks, so the squares just concatenate)."""
-    terms = [
-        F.element_at(
-            F.element_at(F.col("__pq_n2"), s + 1),
-            F.element_at(F.col("codes"), s + 1),
+    return F.sqrt(
+        reduce(operator.add, _codeword_terms("__pq_n2", subspaces))
+    )
+
+
+def _recon(subspaces: int) -> Column:
+    """The reconstructed vector: the S codewords, concatenated."""
+    return F.flatten(F.array(*_codeword_terms("__pq_vecs", subspaces)))
+
+
+def _query_side(
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    books: list[list[list[float]]],
+    scoring: str,
+    cells: tuple[list[tuple[int, list[float]]], int] | None = None,
+) -> DataFrame:
+    """The query rows of every search. LUT scoring: (query_id,
+    __lut, __qn) — the per-query S×C dot table against the broadcast
+    codebooks plus the query's IEEE-double norm, once per query.
+    Reconstruction scoring: (query_id, __qv, __qn), the norm in the
+    scoring kernel. ``cells=(cents, n_probe)`` also routes each query
+    to its probe cells (``__cells``, before the LUT/norm columns)."""
+    q = queries.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")
+    )
+    if scoring == "lut":
+        q = _attach_model(q, "__qv", books)
+    probe = []
+    if cells is not None:
+        q = with_probe_cells(q, "__qv", *cells, out="__cells")
+        probe = ["__cells"]
+    if scoring == "lut":
+        return (
+            q.withColumn(
+                "__lut", _lut_col("__qv", len(books), len(books[0][0]))
+            )
+            .withColumn(
+                "__qn",
+                F.sqrt(
+                    F.aggregate(
+                        F.transform(
+                            F.col("__qv"),
+                            lambda x: x.cast("double") * x.cast("double"),
+                        ),
+                        F.lit(0.0),
+                        lambda acc, z: acc + z,
+                    )
+                ),
+            )
+            .select("query_id", *probe, "__lut", "__qn")
         )
-        for s in range(subspaces)
-    ]
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return F.sqrt(out)
+    dot = dot_fn(scoring)
+    return q.withColumn(
+        "__qn", F.sqrt(dot(F.col("__qv"), F.col("__qv")))
+    ).select("query_id", *probe, "__qv", "__qn")
+
+
+def _corpus_side(
+    coded: DataFrame,
+    books: list[list[list[float]]],
+    scoring: str,
+    keep: tuple[str, ...] = (),
+) -> DataFrame:
+    """The candidate rows of every search, from a coded frame of
+    (neighbor_id, codes, *keep) — the in-memory encode or the stored
+    ``codes``. LUT scoring: (neighbor_id, *keep, codes, __rn) with
+    the norm from the model's squared-norm table. Reconstruction
+    scoring: (neighbor_id, *keep, __rv, __rn)."""
+    subspaces = len(books)
+    c = _attach_model(coded, "codes", books)
+    if scoring == "lut":
+        return c.select(
+            "neighbor_id", *keep, "codes", _lut_norm(subspaces).alias("__rn")
+        )
+    dot = dot_fn(scoring)
+    return (
+        c.withColumn("__rv", _recon(subspaces))
+        .withColumn("__rn", F.sqrt(dot(F.col("__rv"), F.col("__rv"))))
+        .select("neighbor_id", *keep, "__rv", "__rn")
+    )
+
+
+def _search(
+    q: DataFrame,
+    c: DataFrame,
+    subspaces: int,
+    scoring: str,
+    k: int,
+    probed: bool = False,
+) -> DataFrame:
+    """The one scoring core: pair queries with candidates, score,
+    and keep the top ``k`` per query. ``probed``: each query meets
+    only the candidates of its probe cells (the cell-keyed equi-join
+    of IVF); otherwise the broadcast-queries cross — the standard
+    |Q|-small ANN scoring shape (cosine_topk_bruteforce/adc exemption
+    in the plan audit)."""
+    if probed:
+        pairs = (
+            q.withColumn("cell", F.explode("__cells"))
+            .drop("__cells")
+            .join(c, "cell")
+        )
+    else:
+        pairs = c.crossJoin(F.broadcast(q))
+    if scoring == "lut":
+        num = _lut_score(subspaces)
+    else:
+        num = dot_fn(scoring)(F.col("__qv"), F.col("__rv"))
+    scored = pairs.filter(
+        F.col("query_id") != F.col("neighbor_id")
+    ).withColumn("pq_cosine", num / (F.col("__qn") * F.col("__rn")))
+    return top_n_window(
+        scored, "query_id", "pq_cosine", k, tiebreak="neighbor_id"
+    ).select("query_id", "neighbor_id", "pq_cosine", "rank")
+
+
+def _trained_books(
+    corpus: DataFrame,
+    id_col: str,
+    vec_col: str,
+    dim: int,
+    subspaces: int,
+    codes: int,
+    cache_key: str | None,
+) -> list[list[list[float]]]:
+    """The codebooks, memoized per (cache_key, dim, subspaces,
+    codes) when ``cache_key`` is given — train once, search many."""
+    return _cached(
+        ("pq", cache_key, dim, subspaces, codes) if cache_key else None,
+        lambda: pq_train(
+            corpus, id_col, vec_col, dim, subspaces=subspaces, codes=codes
+        ),
+    )
+
+
+def _memo_persisted(
+    tag: str,
+    scoring: str,
+    cache_key: str | None,
+    corpus: DataFrame,
+    params: tuple,
+    fit,
+) -> DataFrame:
+    """The candidate rows an in-memory search scores, built by
+    ``fit``. The encoded corpus is what production STORES (faiss
+    builds the index offline; only search rides the query path) —
+    with ``cache_key`` it is memoized under (tag, cache_key, app id,
+    *params), reconstruction entries as (tag-recon, …, scoring), and
+    persisted via the house steady-state registry, so repeated
+    searches skip re-encoding. Keyed by Spark app id: a DataFrame
+    must not outlive its session."""
+    if not cache_key:
+        return fit()
+    app_id = corpus.sparkSession.sparkContext.applicationId
+    key = (
+        (tag, cache_key, app_id, *params)
+        if scoring == "lut"
+        else (f"{tag}-recon", cache_key, app_id, *params, scoring)
+    )
+    return persist_tracked(_cached(key, fit, app_id=app_id))
+
+
+def _coded(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    books: list[list[list[float]]],
+    cents: list[tuple[int, list[float]]] | None = None,
+) -> DataFrame:
+    """(neighbor_id, codes), plus the nearest coarse ``cell`` when
+    ``cents`` is given — the coded corpus an in-memory search
+    memoizes and the index store holds."""
+    enc = pq_encode(
+        df, id_col, vec_col, books, keep_vec=cents is not None
+    ).withColumnRenamed(id_col, "neighbor_id")
+    if cents is None:
+        return enc
+    return with_nearest_cell(enc, vec_col, cents, out="cell").drop(vec_col)
 
 
 def pq_topk(
@@ -353,133 +547,55 @@ def pq_topk(
     driver-side — train once, search many. Output: query_id,
     neighbor_id, pq_cosine, rank.
     """
-    from top_produce_etl_spark.operators.similarity import dot_fn
-
-    books = _cached(
-        ("pq", cache_key, dim, subspaces, codes) if cache_key else None,
-        lambda: pq_train(
-            corpus, id_col, vec_col, dim, subspaces=subspaces, codes=codes
+    books = _trained_books(
+        corpus, id_col, vec_col, dim, subspaces, codes, cache_key
+    )
+    c = _memo_persisted(
+        "pq-enc", scoring, cache_key, corpus, (dim, subspaces, codes),
+        lambda: _corpus_side(
+            _coded(corpus, id_col, vec_col, books), books, scoring
         ),
     )
+    q = _query_side(queries, id_col, vec_col, books, scoring)
+    return _search(q, c, subspaces, scoring, k)
 
-    def _enc():
-        return _attach_model(
-            pq_encode(corpus, id_col, vec_col, books).withColumnRenamed(
-                id_col, "neighbor_id"
-            ),
-            "codes",
-            books,
-        )
 
-    if scoring == "lut":
-        d = dim // subspaces
-        # The encoded corpus is what production STORES (faiss builds
-        # the index offline; only search rides the query path) —
-        # with cache_key, persist it via the house steady-state
-        # registry so repeated searches skip re-encoding. Keyed by
-        # Spark app id: a DataFrame must not outlive its session.
-        c = _cached(
-            (
-                "pq-enc",
-                cache_key,
-                corpus.sparkSession.sparkContext.applicationId,
-                dim,
-                subspaces,
-                codes,
-            )
-            if cache_key
-            else None,
-            lambda: _enc().select(
-                "neighbor_id", "codes", _lut_norm(subspaces).alias("__rn")
-            ),
-            app_id=corpus.sparkSession.sparkContext.applicationId,
-        )
-        if cache_key is not None:
-            c = persist_tracked(c)
-        q = (
-            _attach_model(
-                queries.select(
-                    F.col(id_col).alias("query_id"),
-                    F.col(vec_col).alias("__qv"),
-                ),
-                "__qv",
-                books,
-            )
-            .withColumn("__lut", _lut_col("__qv", subspaces, d))
-            .withColumn(
-                "__qn",
-                F.sqrt(
-                    F.aggregate(
-                        F.transform(
-                            F.col("__qv"),
-                            lambda x: x.cast("double") * x.cast("double"),
-                        ),
-                        F.lit(0.0),
-                        lambda acc, z: acc + z,
-                    )
-                ),
-            )
-            .select("query_id", "__lut", "__qn")
-        )
-        pairs = c.crossJoin(F.broadcast(q)).filter(
-            F.col("query_id") != F.col("neighbor_id")
-        )
-        scored = pairs.withColumn(
-            "pq_cosine",
-            _lut_score(subspaces) / (F.col("__qn") * F.col("__rn")),
-        )
-    else:
-        dot = dot_fn(scoring)
-        recon = F.flatten(
-            F.array(*[
-                F.element_at(
-                    F.element_at(F.col("__pq_vecs"), s + 1),
-                    F.element_at(F.col("codes"), s + 1),
-                )
-                for s in range(subspaces)
-            ])
-        )
-        c = _cached(
-            (
-                "pq-enc-recon",
-                cache_key,
-                corpus.sparkSession.sparkContext.applicationId,
-                dim,
-                subspaces,
-                codes,
-                scoring,
-            )
-            if cache_key
-            else None,
-            lambda: _enc()
-            .withColumn("__rv", recon)
-            .withColumn("__rn", F.sqrt(dot(F.col("__rv"), F.col("__rv"))))
-            .select("neighbor_id", "__rv", "__rn"),
-            app_id=corpus.sparkSession.sparkContext.applicationId,
-        )
-        if cache_key is not None:
-            c = persist_tracked(c)
-        q = queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")
-        ).withColumn("__qn", F.sqrt(dot(F.col("__qv"), F.col("__qv"))))
-        # broadcast-queries cross: the standard |Q|-small ANN scoring
-        # shape (cosine_topk_bruteforce/adc exemption in the plan audit)
-        pairs = c.crossJoin(F.broadcast(q)).filter(
-            F.col("query_id") != F.col("neighbor_id")
-        )
-        scored = pairs.withColumn(
-            "pq_cosine",
-            dot(F.col("__qv"), F.col("__rv"))
-            / (F.col("__qn") * F.col("__rn")),
-        )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("pq_cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "pq_cosine", "rank")
-    )
+def _write_codebooks(spark, books: list[list[list[float]]], path: str) -> None:
+    """``path/codebooks``: (subspace, pos, cvec, n2) — S·C model
+    rows, including the squared norms the LUT denominator needs."""
+    rows = [
+        (s, p + 1, [float(x) for x in cv], float(sum(x * x for x in cv)))
+        for s, book in enumerate(books)
+        for p, cv in enumerate(book)
+    ]
+    spark.createDataFrame(
+        rows, "subspace int, pos int, cvec array<double>, n2 double"
+    ).write.mode("overwrite").parquet(f"{path}/codebooks")
+
+
+def _read_codebooks(spark, path: str) -> list[list[list[float]]]:
+    """The stored books — a model-sized collect (S·C rows)."""
+    by_s: dict[int, dict[int, list[float]]] = {}
+    for r in spark.read.parquet(f"{path}/codebooks").collect():
+        by_s.setdefault(r["subspace"], {})[r["pos"]] = list(r["cvec"])
+    return [[by_s[s][p] for p in sorted(by_s[s])] for s in sorted(by_s)]
+
+
+def _write_codes(
+    batch: DataFrame,
+    id_col: str,
+    vec_col: str,
+    books: list[list[list[float]]],
+    path: str,
+    mode: str,
+    cents: list[tuple[int, list[float]]] | None = None,
+) -> None:
+    """Encode ``batch`` and write it to ``path/codes`` — partitioned
+    by ``cell`` when ``cents`` assigns cells (IVF×PQ)."""
+    writer = _coded(batch, id_col, vec_col, books, cents).write.mode(mode)
+    if cents is not None:
+        writer = writer.partitionBy("cell")
+    writer.parquet(f"{path}/codes")
 
 
 def pq_index_save(
@@ -510,24 +626,12 @@ def pq_index_save(
     Returns the trained books (callers may keep encoding new
     batches with them — append-stable: codes depend only on the
     model, not on other rows)."""
-    spark = corpus.sparkSession
     books = pq_train(
         corpus, id_col, vec_col, dim, subspaces=subspaces, codes=codes,
         train_sample_mod=train_sample_mod,
     )
-    cb_rows = [
-        (s, p + 1, [float(x) for x in cv],
-         float(sum(x * x for x in cv)))
-        for s, book in enumerate(books)
-        for p, cv in enumerate(book)
-    ]
-    spark.createDataFrame(
-        cb_rows,
-        "subspace int, pos int, cvec array<double>, n2 double",
-    ).write.mode("overwrite").parquet(f"{path}/codebooks")
-    pq_encode(corpus, id_col, vec_col, books).withColumnRenamed(
-        id_col, "neighbor_id"
-    ).write.mode("overwrite").parquet(f"{path}/codes")
+    _write_codebooks(corpus.sparkSession, books, path)
+    _write_codes(corpus, id_col, vec_col, books, path, "overwrite")
     return books
 
 
@@ -543,10 +647,8 @@ def pq_index_append(
     batch duplicates its rows; a production ingest routes this write
     through the exactly-once batch-id-fenced sink
     (io/sinks.py::idempotent append)."""
-    books, _ = pq_index_load(batch.sparkSession, path)
-    pq_encode(batch, id_col, vec_col, books).withColumnRenamed(
-        id_col, "neighbor_id"
-    ).write.mode("append").parquet(f"{path}/codes")
+    books = _read_codebooks(batch.sparkSession, path)
+    _write_codes(batch, id_col, vec_col, books, path, "append")
 
 
 def pq_index_load(
@@ -555,14 +657,7 @@ def pq_index_load(
     """Load a stored PQ index: (books, codes DataFrame). The
     codebook read is a model-sized collect (S·C rows); the coded
     corpus stays a lazy scan."""
-    cb = spark.read.parquet(f"{path}/codebooks").collect()
-    by_s: dict[int, dict[int, list[float]]] = {}
-    for r in cb:
-        by_s.setdefault(r["subspace"], {})[r["pos"]] = list(r["cvec"])
-    books = [
-        [by_s[s][p] for p in sorted(by_s[s])] for s in sorted(by_s)
-    ]
-    return books, spark.read.parquet(f"{path}/codes")
+    return _read_codebooks(spark, path), spark.read.parquet(f"{path}/codes")
 
 
 def pq_topk_from_index(
@@ -577,51 +672,9 @@ def pq_topk_from_index(
     path never touches raw corpus vectors, only the 8-byte codes +
     the S·C model). Same output contract as :func:`pq_topk`."""
     books, enc = pq_index_load(spark, path)
-    subspaces = len(books)
-    d = len(books[0][0])
-    c = _attach_model(enc, "codes", books).select(
-        "neighbor_id", "codes", _lut_norm(subspaces).alias("__rn")
-    )
-    q = (
-        _attach_model(
-            queries.select(
-                F.col(id_col).alias("query_id"),
-                F.col(vec_col).alias("__qv"),
-            ),
-            "__qv",
-            books,
-        )
-        .withColumn("__lut", _lut_col("__qv", subspaces, d))
-        .withColumn(
-            "__qn",
-            F.sqrt(
-                F.aggregate(
-                    F.transform(
-                        F.col("__qv"),
-                        lambda x: x.cast("double") * x.cast("double"),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, z: acc + z,
-                )
-            ),
-        )
-        .select("query_id", "__lut", "__qn")
-    )
-    pairs = c.crossJoin(F.broadcast(q)).filter(
-        F.col("query_id") != F.col("neighbor_id")
-    )
-    scored = pairs.withColumn(
-        "pq_cosine",
-        _lut_score(subspaces) / (F.col("__qn") * F.col("__rn")),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("pq_cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "pq_cosine", "rank")
-    )
+    c = _corpus_side(enc, books, "lut")
+    q = _query_side(queries, id_col, vec_col, books, "lut")
+    return _search(q, c, len(books), "lut", k)
 
 
 def pq_topk_oracle_sql(
@@ -766,7 +819,8 @@ def ivfpq_topk(
     one cell-keyed equi-join), scoring from :func:`pq_topk`
     (codeword reconstruction with the decimal/double kernels, or
     the production LUT path — S lookups per candidate, no
-    reconstruction; train-once ``cache_key`` memoizes both the
+    reconstruction, the LUT built once per query before its probe
+    cells fan out; train-once ``cache_key`` memoizes both the
     coarse centroids and the codebooks, and persists the coded
     inverted index via the steady-state registry).
 
@@ -776,147 +830,28 @@ def ivfpq_topk(
     tests/test_pq.py. Output: query_id, neighbor_id, pq_cosine,
     rank.
     """
-    from top_produce_etl_spark.operators.clustering import (
-        kmeans_fit,
-        with_nearest_cell,
-        with_probe_cells,
-    )
-    from top_produce_etl_spark.operators.similarity import dot_fn
-
     cents = _cached(
         ("ivf", cache_key, n_cells) if cache_key else None,
         lambda: kmeans_fit(corpus, id_col, vec_col, k=n_cells, iters=1),
     )
-    books = _cached(
-        ("pq", cache_key, dim, subspaces, codes) if cache_key else None,
-        lambda: pq_train(
-            corpus, id_col, vec_col, dim, subspaces=subspaces, codes=codes
+    books = _trained_books(
+        corpus, id_col, vec_col, dim, subspaces, codes, cache_key
+    )
+    # the cell-keyed PQ-coded inverted index = the stored artifact
+    inv = _memo_persisted(
+        "ivfpq-inv", scoring, cache_key, corpus,
+        (dim, subspaces, codes, n_cells),
+        lambda: _corpus_side(
+            _coded(corpus, id_col, vec_col, books, cents),
+            books,
+            scoring,
+            keep=("cell",),
         ),
     )
-    def _inv():
-        enc = pq_encode(corpus, id_col, vec_col, books, keep_vec=True)
-        made = with_nearest_cell(
-            enc.withColumnRenamed(id_col, "neighbor_id"),
-            vec_col,
-            cents,
-            out="cell",
-        ).drop(vec_col)
-        return _attach_model(made, "codes", books)
-
-    app_id = corpus.sparkSession.sparkContext.applicationId
-    if scoring == "lut":
-        d = dim // subspaces
-        # cell-keyed PQ-coded inverted index = the stored artifact;
-        # persist via the steady-state registry when keyed (see
-        # pq_topk)
-        inv = _cached(
-            ("ivfpq-inv", cache_key, app_id, dim, subspaces, codes,
-             n_cells)
-            if cache_key
-            else None,
-            lambda: _inv().select(
-                "neighbor_id", "cell", "codes",
-                _lut_norm(subspaces).alias("__rn"),
-            ),
-            app_id=app_id,
-        )
-        if cache_key is not None:
-            inv = persist_tracked(inv)
-        probes = (
-            with_probe_cells(
-                _attach_model(
-                    queries.select(
-                        F.col(id_col).alias("query_id"),
-                        F.col(vec_col).alias("__qv"),
-                    ),
-                    "__qv",
-                    books,
-                ),
-                "__qv",
-                cents,
-                n_probe,
-                out="__cells",
-            )
-            .withColumn("cell", F.explode("__cells"))
-            .withColumn("__lut", _lut_col("__qv", subspaces, d))
-            .withColumn(
-                "__qn",
-                F.sqrt(
-                    F.aggregate(
-                        F.transform(
-                            F.col("__qv"),
-                            lambda x: x.cast("double") * x.cast("double"),
-                        ),
-                        F.lit(0.0),
-                        lambda acc, z: acc + z,
-                    )
-                ),
-            )
-            .select("query_id", "cell", "__lut", "__qn")
-        )
-        scored = (
-            probes.join(inv, "cell")
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-            .withColumn(
-                "pq_cosine",
-                _lut_score(subspaces) / (F.col("__qn") * F.col("__rn")),
-            )
-        )
-    else:
-        dot = dot_fn(scoring)
-        recon = F.flatten(
-            F.array(*[
-                F.element_at(
-                    F.element_at(F.col("__pq_vecs"), s + 1),
-                    F.element_at(F.col("codes"), s + 1),
-                )
-                for s in range(subspaces)
-            ])
-        )
-        inv = _cached(
-            ("ivfpq-inv-recon", cache_key, app_id, dim, subspaces,
-             codes, n_cells, scoring)
-            if cache_key
-            else None,
-            lambda: _inv()
-            .withColumn("__rv", recon)
-            .withColumn("__rn", F.sqrt(dot(F.col("__rv"), F.col("__rv"))))
-            .select("neighbor_id", "cell", "__rv", "__rn"),
-            app_id=app_id,
-        )
-        if cache_key is not None:
-            inv = persist_tracked(inv)
-        probes = (
-            with_probe_cells(
-                queries.select(
-                    F.col(id_col).alias("query_id"),
-                    F.col(vec_col).alias("__qv"),
-                ),
-                "__qv",
-                cents,
-                n_probe,
-                out="__cells",
-            )
-            .withColumn("cell", F.explode("__cells"))
-            .withColumn("__qn", F.sqrt(dot(F.col("__qv"), F.col("__qv"))))
-        )
-        scored = (
-            probes.join(inv, "cell")
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-            .withColumn(
-                "pq_cosine",
-                dot(F.col("__qv"), F.col("__rv"))
-                / (F.col("__qn") * F.col("__rn")),
-            )
-        )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("pq_cosine").desc(), F.col("neighbor_id").asc()
+    q = _query_side(
+        queries, id_col, vec_col, books, scoring, cells=(cents, n_probe)
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "pq_cosine", "rank")
-    )
+    return _search(q, inv, subspaces, scoring, k, probed=True)
 
 
 def ivfpq_index_save(
@@ -953,22 +888,11 @@ def ivfpq_index_save(
     and the PQ codebooks) with the :func:`pq_train` xxhash64 key —
     model quality needs O(100·C) points, not the corpus; the full
     corpus is always encoded and assigned."""
-    from top_produce_etl_spark.operators.clustering import (
-        kmeans_fit,
-        with_nearest_cell,
-    )
-
     spark = corpus.sparkSession
-    train_df = corpus
-    if train_sample_mod is not None:
-        train_df = corpus.filter(
-            F.pmod(
-                F.xxhash64(F.col(id_col), F.lit(17)),
-                F.lit(train_sample_mod),
-            )
-            == 0
-        )
-    cents = kmeans_fit(train_df, id_col, vec_col, k=n_cells, iters=1)
+    cents = kmeans_fit(
+        _train_sample(corpus, id_col, train_sample_mod),
+        id_col, vec_col, k=n_cells, iters=1,
+    )
     books = pq_train(
         corpus, id_col, vec_col, dim, subspaces=subspaces, codes=codes,
         train_sample_mod=train_sample_mod,
@@ -977,29 +901,8 @@ def ivfpq_index_save(
         [(cid, [float(x) for x in cv]) for cid, cv in cents],
         "cell int, cvec array<double>",
     ).write.mode("overwrite").parquet(f"{path}/centroids")
-    cb_rows = [
-        (s, p + 1, [float(x) for x in cv],
-         float(sum(x * x for x in cv)))
-        for s, book in enumerate(books)
-        for p, cv in enumerate(book)
-    ]
-    spark.createDataFrame(
-        cb_rows,
-        "subspace int, pos int, cvec array<double>, n2 double",
-    ).write.mode("overwrite").parquet(f"{path}/codebooks")
-    enc = pq_encode(corpus, id_col, vec_col, books, keep_vec=True)
-    (
-        with_nearest_cell(
-            enc.withColumnRenamed(id_col, "neighbor_id"),
-            vec_col,
-            cents,
-            out="cell",
-        )
-        .select("neighbor_id", "codes", "cell")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(f"{path}/codes")
-    )
+    _write_codebooks(spark, books, path)
+    _write_codes(corpus, id_col, vec_col, books, path, "overwrite", cents)
 
 
 def ivfpq_index_load(
@@ -1015,14 +918,8 @@ def ivfpq_index_load(
         for r in spark.read.parquet(f"{path}/centroids").collect()
     ]
     cents.sort()
-    cb = spark.read.parquet(f"{path}/codebooks").collect()
-    by_s: dict[int, dict[int, list[float]]] = {}
-    for r in cb:
-        by_s.setdefault(r["subspace"], {})[r["pos"]] = list(r["cvec"])
-    books = [
-        [by_s[s][p] for p in sorted(by_s[s])] for s in sorted(by_s)
-    ]
-    return cents, books, spark.read.parquet(f"{path}/codes")
+    books, enc = pq_index_load(spark, path)
+    return cents, books, enc
 
 
 def ivfpq_topk_from_index(
@@ -1040,43 +937,9 @@ def ivfpq_topk_from_index(
     over 8-byte codes, and the only driver-side state is the probe
     CELL SET (|Q|·n_probe ints). Same output contract as
     :func:`ivfpq_topk`."""
-    from top_produce_etl_spark.operators.clustering import (
-        with_probe_cells,
-    )
-
     cents, books, enc = ivfpq_index_load(spark, path)
-    subspaces = len(books)
-    d = len(books[0][0])
-    q = (
-        with_probe_cells(
-            _attach_model(
-                queries.select(
-                    F.col(id_col).alias("query_id"),
-                    F.col(vec_col).alias("__qv"),
-                ),
-                "__qv",
-                books,
-            ),
-            "__qv",
-            cents,
-            n_probe,
-            out="__cells",
-        )
-        .withColumn("__lut", _lut_col("__qv", subspaces, d))
-        .withColumn(
-            "__qn",
-            F.sqrt(
-                F.aggregate(
-                    F.transform(
-                        F.col("__qv"),
-                        lambda x: x.cast("double") * x.cast("double"),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, z: acc + z,
-                )
-            ),
-        )
-        .select("query_id", "__cells", "__lut", "__qn")
+    q = _query_side(
+        queries, id_col, vec_col, books, "lut", cells=(cents, n_probe)
     )
     # the probe cell set: |Q|·n_probe ints — the one collect, model-
     # sized by construction; pushed into the scan as a partition
@@ -1089,30 +952,11 @@ def ivfpq_topk_from_index(
             .collect()
         }
     )
-    inv = _attach_model(
-        enc.filter(F.col("cell").isin(probe_cells)), "codes", books
-    ).select(
-        "neighbor_id", "cell", "codes", _lut_norm(subspaces).alias("__rn")
+    inv = _corpus_side(
+        enc.filter(F.col("cell").isin(probe_cells)), books, "lut",
+        keep=("cell",),
     )
-    probes = q.withColumn("cell", F.explode("__cells")).select(
-        "query_id", "cell", "__lut", "__qn"
-    )
-    scored = (
-        probes.join(inv, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "pq_cosine",
-            _lut_score(subspaces) / (F.col("__qn") * F.col("__rn")),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("pq_cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "pq_cosine", "rank")
-    )
+    return _search(q, inv, len(books), "lut", k, probed=True)
 
 
 def ivfpq_index_append(
@@ -1126,21 +970,5 @@ def ivfpq_index_append(
     are stable). Same retry-idempotence caveat as
     :func:`pq_index_append`: route production re-runs through the
     batch-id-fenced sink."""
-    from top_produce_etl_spark.operators.clustering import (
-        with_nearest_cell,
-    )
-
     cents, books, _ = ivfpq_index_load(batch.sparkSession, path)
-    enc = pq_encode(batch, id_col, vec_col, books, keep_vec=True)
-    (
-        with_nearest_cell(
-            enc.withColumnRenamed(id_col, "neighbor_id"),
-            vec_col,
-            cents,
-            out="cell",
-        )
-        .select("neighbor_id", "codes", "cell")
-        .write.mode("append")
-        .partitionBy("cell")
-        .parquet(f"{path}/codes")
-    )
+    _write_codes(batch, id_col, vec_col, books, path, "append", cents)

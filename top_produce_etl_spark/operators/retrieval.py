@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from top_produce_etl_spark.operators._cache import persist_tracked
 from top_produce_etl_spark.operators.joins import maybe_broadcast
+from top_produce_etl_spark.operators.topn import top_n_window
 from pyspark.sql.window import Window
 
 # Classic Robertson/Sparck-Jones defaults.
@@ -224,14 +225,9 @@ def tfidf_top_terms(
             * SCORE_SCALE
         ).cast("bigint"),
     )
-    w = Window.partitionBy(id_col).orderBy(
-        F.desc("tfidf_scaled"), F.asc("term")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= top_k)
-        .select(F.col(id_col), "term", "tfidf_scaled", "rank")
-    )
+    return top_n_window(
+        scored, id_col, "tfidf_scaled", top_k, tiebreak="term"
+    ).select(F.col(id_col), "term", "tfidf_scaled", "rank")
 
 
 def tfidf_oracle_sql(

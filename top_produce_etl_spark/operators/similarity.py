@@ -18,10 +18,11 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from top_produce_etl_spark.operators._cache import persist_tracked
+from top_produce_etl_spark.operators.topn import top_n_window
 
 
 def _dec_dot(a: Column, b: Column) -> Column:
@@ -114,14 +115,9 @@ def cosine_topk_bruteforce(
         dot(F.col("__qv"), F.col("__cv"))
         / (F.col("__qn") * F.col("__cn")),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return top_n_window(
+        scored, "query_id", "cosine", k, tiebreak="neighbor_id"
+    ).select("query_id", "neighbor_id", "cosine", "rank")
 
 
 def _hyperplane_sign(vec_col: Column, plane_idx: int, dim: int) -> Column:
@@ -246,14 +242,9 @@ def cosine_topk_lsh(
         dot(F.col("__query_id_v"), F.col("__neighbor_id_v"))
         / (F.col("__query_id_n") * F.col("__neighbor_id_n")),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return top_n_window(
+        scored, "query_id", "cosine", k, tiebreak="neighbor_id"
+    ).select("query_id", "neighbor_id", "cosine", "rank")
 
 
 def cosine_neardup_pairs(
@@ -393,14 +384,9 @@ def cosine_topk_quantized(
         _int_dot(F.col("__qv"), F.col("__cv")).cast("double")
         / (F.col("__qn") * F.col("__cn")),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("qcosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "qcosine", "rank")
-    )
+    return top_n_window(
+        scored, "query_id", "qcosine", k, tiebreak="neighbor_id"
+    ).select("query_id", "neighbor_id", "qcosine", "rank")
 
 
 def cosine_topk_adc(
@@ -441,14 +427,9 @@ def cosine_topk_adc(
         _dec_dot(F.col("__qv"), F.col("__cv"))
         / (F.col("__qn") * F.col("__cn")),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "adc_cosine", "rank")
-    )
+    return top_n_window(
+        scored, "query_id", "adc_cosine", k, tiebreak="neighbor_id"
+    ).select("query_id", "neighbor_id", "adc_cosine", "rank")
 
 
 def _ord(v):
@@ -1061,11 +1042,6 @@ def rerank_exact(
             / (F.col("__qn") * F.col("__cn")),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return top_n_window(
+        scored, "query_id", "cosine", k, tiebreak="neighbor_id"
+    ).select("query_id", "neighbor_id", "cosine", "rank")

@@ -23,6 +23,7 @@ from top_produce_etl_spark.functions.portable_hash import (
     composite_hash_col,
     composite_hash_sql,
 )
+from top_produce_etl_spark.operators.topn import top_n_window
 
 BUCKETS = 10_000
 
@@ -199,16 +200,9 @@ def weighted_reservoir(
 
     kept = fan_out(df.filter(w.isNotNull() & (w > 0))).withColumn("__r", r)
     if group_cols:
-        from pyspark.sql import Window
-
-        win = Window.partitionBy(*group_cols).orderBy(
-            F.col("__r").desc(), F.col(key_col).asc()
-        )
-        out = (
-            kept.withColumn("__rn", F.row_number().over(win))
-            .filter(F.col("__rn") <= n)
-            .drop("__rn")
-        )
+        out = top_n_window(
+            kept, group_cols, "__r", n, tiebreak=key_col, rank_col="__rn"
+        ).drop("__rn")
     else:
         out = kept.orderBy(F.col("__r").desc(), F.col(key_col).asc()).limit(n)
     return out.drop("__r")

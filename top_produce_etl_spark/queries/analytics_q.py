@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from top_produce_etl_spark.functions.numeric import revenue_expr, revenue_sum
 from top_produce_etl_spark.io.sources import load_table
 from top_produce_etl_spark.operators.joins import maybe_broadcast
+from top_produce_etl_spark.operators.topn import top_n_window
 from top_produce_etl_spark.queries import query
 from top_produce_etl_spark.queries.relational import REV_DEC
 
@@ -1796,8 +1797,6 @@ def trending_brands_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     merchandising/radar dashboard runs: rollup shuffle + partitioned
     windows + TakeOrderedAndProject, nothing data-sized on one
     task."""
-    from pyspark.sql.window import Window
-
     from top_produce_etl_spark.operators.joins import maybe_broadcast
     from top_produce_etl_spark.operators.stats import trailing_ewma
 
@@ -1817,10 +1816,8 @@ def trending_brands_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     sm = trailing_ewma(
         daily, ["p_brand"], ["day"], "qty", alpha=0.3, span=7
     )
-    w = Window.partitionBy("p_brand").orderBy(F.col("day").desc())
     return (
-        sm.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
+        top_n_window(sm, "p_brand", "day", 1, rank_col="__rn")
         .select("p_brand", F.col("day").alias("as_of"), "ewma_micro")
         .orderBy(F.col("ewma_micro").desc(), "p_brand")
         .limit(10)

@@ -28,6 +28,7 @@ from top_produce_etl_spark.operators.kmv import (
     kmv_sketch,
     kmv_sketch_oracle_sql,
 )
+from top_produce_etl_spark.operators.topn import top_n_window
 from top_produce_etl_spark.queries import query
 
 # user-day key: "<user_id>@<yyyy-mm-dd>" — both engines render
@@ -406,15 +407,10 @@ def kmv_rollup_month_exactness(
     )
     # merge: k smallest distinct hashes per type across the days —
     # the grouped twin of kmv_union (WindowGroupLimit, sketch-sized)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("event_type").orderBy(F.col("h").asc())
-    merged = (
-        daily.select("event_type", "h").distinct()
-        .withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= 64)
-        .select("event_type", "h")
-    )
+    merged = top_n_window(
+        daily.select("event_type", "h").distinct(),
+        "event_type", "h", 64, ascending=True, rank_col="__rn",
+    ).select("event_type", "h")
     mest = kmv_estimate(merged, ["event_type"], out="merged_est")
     direct = kmv_sketch(ev, ["event_type"], "CAST(user_id AS STRING)")
     dest = kmv_estimate(direct, ["event_type"], out="direct_est")

@@ -21,6 +21,7 @@ from top_produce_etl_spark.operators.retrieval import (
     tfidf_oracle_sql,
     tfidf_top_terms,
 )
+from top_produce_etl_spark.operators.topn import top_n_window
 from top_produce_etl_spark.queries import query
 
 
@@ -1077,8 +1078,6 @@ def corpus_datasheet(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined back on the hash key, one per-source agg, one
     |sources×langs|-row ranking window — nothing quadratic, nothing
     driver-sized."""
-    from pyspark.sql.window import Window
-
     from top_produce_etl_spark.functions.text import quality_score, tokens
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1092,16 +1091,10 @@ def corpus_datasheet(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     hcnt = sig.groupBy("h").agg(F.count(F.lit(1)).alias("__n"))
     flagged = sig.join(hcnt, "h").withColumn("is_dup", F.col("__n") > 1)
-    w = Window.partitionBy("source").orderBy(
-        F.col("__lc").desc(), F.col("lang").asc()
-    )
-    top_lang = (
-        sig.groupBy("source", "lang")
-        .agg(F.count(F.lit(1)).alias("__lc"))
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select("source", F.col("lang").alias("top_lang"))
-    )
+    top_lang = top_n_window(
+        sig.groupBy("source", "lang").agg(F.count(F.lit(1)).alias("__lc")),
+        "source", "__lc", 1, tiebreak="lang", rank_col="__rn",
+    ).select("source", F.col("lang").alias("top_lang"))
     per_source = flagged.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("toks").alias("total_tokens"),

@@ -52,6 +52,7 @@ from pyspark.sql import functions as F
 from top_produce_etl_spark.functions.numeric import dec_sum
 from top_produce_etl_spark.io.sources import load_table, normalize_event_time
 from top_produce_etl_spark.operators.eventtime import (
+    check_interval,
     session_window_agg,
     tumbling_window_agg,
 )
@@ -366,6 +367,7 @@ def purchase_click_attribution(
     stream-stream join would be rejected in append mode. Both sides
     here are filters of one source stream (a supported self-join).
     """
+    lookback = check_interval(lookback, "lookback")
     clicks = (
         events.filter(F.col("event_type") == "click")
         .select(
@@ -412,7 +414,9 @@ def purchase_click_attribution_stream(
     """:func:`purchase_click_attribution` as a stream-stream join,
     append-mode memory sink. The same body over the static events
     table returns the identical row set — asserted in
-    tests/test_streaming.py."""
+    tests/test_streaming.py. ``lookback`` is validated before the
+    source is read."""
+    lookback = check_interval(lookback, "lookback")
     events = stream_events(spark, sf_dir)
     return _run_available_now(
         purchase_click_attribution(events, lookback, watermark),
@@ -571,6 +575,7 @@ def purchase_click_outer_attribution_stream(
     which is why the run matches the batch left join exactly
     (parity: ext ``stream_outer_attribution_parity``).
     """
+    lookback = check_interval(lookback, "lookback")
     events = stream_events(spark, sf_dir)
     clicks = (
         events.filter(F.col("event_type") == "click")
