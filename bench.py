@@ -2274,7 +2274,6 @@ def main() -> None:
 
     from top_produce_etl_spark.functions.numeric import revenue_sum
     from top_produce_etl_spark.io.sources import load_table
-    from top_produce_etl_spark.operators.joins import maybe_broadcast
     from top_produce_etl_spark.operators.topn import top_n_window
     from top_produce_etl_spark.queries.relational import flagship_df
 
@@ -2314,10 +2313,10 @@ def main() -> None:
     t0 = time.monotonic()
     rev10 = (
         li10.join(od10, li10.l_orderkey == od10.o_orderkey)
-        .join(maybe_broadcast(customer), od10.o_custkey == customer.c_custkey)
+        .join(customer, od10.o_custkey == customer.c_custkey)
         .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
         .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-        .join(maybe_broadcast(part), li10.l_partkey == part.p_partkey)
+        .join(part, li10.l_partkey == part.p_partkey)
         .groupBy("r_name", "p_name")
         .agg(revenue_sum("revenue"))
     )

@@ -31,7 +31,7 @@ OP_KEYS = {
     "with_column": ({"expr", "name"}, set()),
     "rename": ({"from", "to"}, set()),
     "drop": ({"cols"}, set()),
-    "join": ({"on", "table"}, {"broadcast", "how"}),
+    "join": ({"on", "table"}, {"how"}),
     "group_agg": ({"aggs"}, {"by"}),
     "topn": ({"group_by", "metric", "n"}, {"tiebreak"}),
     "distinct": (set(), set()),

@@ -51,24 +51,6 @@ def test_flagship_no_oversized_forced_broadcast(spark, sf_dir):
     assert broadcast_hint_audit(df) == []
 
 
-def test_maybe_broadcast_declines_oversized_input(spark):
-    """maybe_broadcast must NOT hint a frame whose size estimate
-    exceeds the threshold — it returns the input unchanged so the
-    planner/AQE picks the strategy."""
-    from pyspark.sql import functions as F
-
-    from top_produce_etl_spark.operators.joins import maybe_broadcast
-    from top_produce_etl_spark.plans.audit import broadcast_hint_audit
-
-    big = spark.range(3_000_000)    # 8 B/row ⇒ ~24 MB estimate > 10 MB default
-    small = spark.range(1_000)      # ~8 KB — safely under
-    assert maybe_broadcast(big) is big
-    assert maybe_broadcast(small) is not small  # hinted copy
-    # and a small hinted build side never trips the audit
-    joined = spark.range(500_000).join(maybe_broadcast(small), "id")
-    assert broadcast_hint_audit(joined) == []
-
-
 def test_audit_flags_forced_oversized_broadcast(spark):
     """A raw F.broadcast on an above-threshold build side is exactly
     the 100 TB OOM pattern — broadcast_hint_audit must flag it and
@@ -88,24 +70,32 @@ def test_audit_flags_forced_oversized_broadcast(spark):
         assert_scalable(bad)
 
 
-def test_maybe_broadcast_defers_to_session_threshold(spark):
-    """The hint helper reads spark.sql.autoBroadcastJoinThreshold at
-    call time: lowering the knob makes the same frame too big to
-    hint; -1 disables hinting entirely (AQE-only strategy choice)."""
-    from top_produce_etl_spark.operators.joins import maybe_broadcast
-
-    frame = spark.range(10_000)  # ~80 KB estimate
+def test_flagship_dims_follow_session_threshold(spark, sf_dir):
+    """Only nation/region carry a hint; customer/part are broadcast by
+    the planner's own threshold. At the default threshold all four
+    dims broadcast; with ``autoBroadcastJoinThreshold=-1`` exactly the
+    two hinted joins stay BroadcastHashJoin."""
     key = "spark.sql.autoBroadcastJoinThreshold"
     orig = spark.conf.get(key)
     try:
-        spark.conf.set(key, "1kb")
-        assert maybe_broadcast(frame) is frame
+        p = plan(get_all_queries()["flagship_top3_region"](spark, sf_dir))
+        assert p.count("BroadcastHashJoin") >= 4, p
         spark.conf.set(key, "-1")
-        assert maybe_broadcast(frame) is frame
-        spark.conf.set(key, "10MB")
-        assert maybe_broadcast(frame) is not frame
+        p = simple_plan(get_all_queries()["flagship_top3_region"](spark, sf_dir))
+        assert p.count("BroadcastHashJoin") == 2, p
     finally:
         spark.conf.set(key, orig)
+
+
+def test_no_size_gated_hint_helper():
+    """Broadcast choice for data-scaled sides belongs to the planner:
+    the engine and bench carry no helper that re-derives it."""
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    files = [root / "bench.py", *(root / "top_produce_etl_spark").rglob("*.py")]
+    hits = [str(f) for f in files if "maybe_broadcast" in f.read_text()]
+    assert hits == []
 
 
 def test_proj_filter_cast_pushdown_and_pruning(spark, sf_dir):

@@ -141,6 +141,25 @@ def test_attribution_joins_reject_unsafe_lookback_before_any_job(
     assert list(jobs) == []
 
 
+def test_stream_events_builds_with_at_most_one_job(spark, sf_dir):
+    """Building the events stream reads the fixture's raw schema once;
+    it loads no static twin, so at most one Spark job runs before any
+    stream starts."""
+    from top_produce_etl_spark.streaming.jobs import stream_events
+
+    sc = spark.sparkContext
+    sc.setJobGroup("stream-events-build", "build the events stream")
+    try:
+        sdf = stream_events(spark, sf_dir)
+        jobs = sc.statusTracker().getJobIdsForGroup("stream-events-build")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sdf.isStreaming
+    assert sdf.columns == load_table(spark, sf_dir, "events").columns
+    assert len(jobs) <= 1, list(jobs)
+
+
 def test_availablenow_checkpoint_is_incremental(spark, tmp_path):
     """The production incremental-batch pattern: a checkpointed
     availableNow stream processes the backlog once; a second run

@@ -78,11 +78,10 @@ def pair_rules(
     nb = items.select(
         F.col("item").alias("item_b"), F.col("n_item").alias("__nbk")
     )
-    from top_produce_etl_spark.operators.joins import maybe_broadcast
 
     joined = (
-        pairs.join(maybe_broadcast(na), "item_a")
-        .join(maybe_broadcast(nb), "item_b")
+        pairs.join(na, "item_a")
+        .join(nb, "item_b")
         .withColumn("__k", F.pmod(F.col("n_pairs"), F.lit(1)).cast("int"))
         .join(total, "__k")
     )

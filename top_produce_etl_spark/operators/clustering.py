@@ -415,7 +415,10 @@ def ivf_topk(
         # DETERMINISTIC id-keyed sample (k-means quality needs only
         # enough points per cell, ~O(100·k), not the corpus), then
         # assign the FULL corpus. Deterministic mod keeps the model
-        # — and therefore results — reproducible run-to-run.
+        # — and therefore results — reproducible run-to-run. The
+        # xxhash64 key of pq.py::_train_sample fits a worse cell model
+        # here: 0.70 recall vs the 0.8 gate of
+        # test_ivf_sample_fit_keeps_recall (sf0.001, mod 2, n_probe 6).
         fit_corpus = corpus.filter(
             F.pmod(F.col(id_col), F.lit(fit_sample_mod)) == 0
         )

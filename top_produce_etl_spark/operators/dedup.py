@@ -717,11 +717,9 @@ def survivors_by(
     Plan shape: the |members|-row component relation (small — only
     docs that appear in a pair) joins the corpus to fetch the metric,
     one per-group window picks the winner, and the loser set
-    anti-joins the corpus (size-gated broadcast — grows with the
-    duplicate count, not the corpus).
+    anti-joins the corpus (broadcast by the planner while it fits its
+    threshold — grows with the duplicate count, not the corpus).
     """
-    from top_produce_etl_spark.operators.joins import maybe_broadcast
-
     members = components.select(
         F.col("id").alias(id_col), F.col("rep_id")
     )
@@ -746,7 +744,7 @@ def survivors_by(
             .filter(F.col("__rn") > 1)
             .select(id_col)
         )
-    return docs.join(maybe_broadcast(losers), id_col, "left_anti")
+    return docs.join(losers, id_col, "left_anti")
 
 
 def duplicate_spans(
@@ -864,14 +862,13 @@ def contaminated_spans(
 
     Scale shape: the REF shingle vocabulary (distinct — an eval/test
     set, typically orders of magnitude smaller than the corpus) is
-    the join's build side through the size-gated broadcast helper;
-    the corpus-sized position table streams past it map-side when it
-    fits, and falls back to a shuffle join (AQE skew-safe) when it
+    the join's build side; the planner broadcasts it under its size
+    threshold, so the corpus-sized position table streams past it
+    map-side when it fits, and falls back to a shuffle join (AQE skew-safe) when it
     doesn't. One per-document window after that, as in
     :func:`duplicate_spans`.
     """
     from top_produce_etl_spark.functions.text import word_shingles
-    from top_produce_etl_spark.operators.joins import maybe_broadcast
 
     ref_sh = (
         ref.select(
@@ -884,9 +881,7 @@ def contaminated_spans(
         .distinct()
     )
     toked = _shingle_positions(df, id_col, text_col, k)
-    return _span_islands(
-        toked.join(maybe_broadcast(ref_sh), "__sh"), id_col, k
-    )
+    return _span_islands(toked.join(ref_sh, "__sh"), id_col, k)
 
 
 def strip_duplicate_spans(

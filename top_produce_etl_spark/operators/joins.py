@@ -1,23 +1,20 @@
 """Join operators beyond plain ``df.join``.
 
 Spark picks broadcast-hash / shuffled-hash / sort-merge itself (AQE
-can switch at runtime); these helpers encode the cases where the
-author knows more than the optimizer:
+can switch at runtime). A side that GROWS with the data
+(customer/supplier/part…) is joined unhinted: the planner broadcasts
+it while its size estimate is under
+``spark.sql.autoBroadcastJoinThreshold`` and falls back to a shuffle
+join above it, whereas a bare ``F.broadcast`` hint overrides the
+threshold unconditionally — at 100 TB that OOMs the executors.
+These helpers encode the cases where the author knows more than the
+optimizer:
 
 - ``broadcast_dim_join``: explicit broadcast hint for FIXED-
   cardinality dimension tables (region=5 rows, nation=25 — bounded
   regardless of data scale). At 100 TB the fact side never shuffles
   for a broadcast join — this is the difference between a map-side
   join and a full-table exchange.
-- ``maybe_broadcast``: size-gated hint for anything that GROWS with
-  the data (customer/supplier/part…). A bare ``F.broadcast`` hint
-  overrides Spark's size threshold unconditionally — at 100 TB that
-  OOMs the executors instead of falling back to a shuffle join.
-  This helper applies the hint only when Catalyst's size estimate is
-  under the session broadcast threshold; above it the frame is
-  returned unhinted and the planner/AQE picks the strategy (AQE
-  still converts to broadcast at runtime when the build side turns
-  out small).
 - ``range_join``: equi-key + interval predicate. The equi key keeps
   it a hash/sort-merge join (NOT a cartesian product); the range
   predicate is evaluated post-match.
@@ -41,70 +38,10 @@ def broadcast_dim_join(
     """Join a fact table to a small dimension with a broadcast hint.
 
     Only for dims whose cardinality is bounded independent of data
-    scale (region/nation, a k-row model, a one-row stats frame). For
-    SF-scaled inputs use :func:`maybe_broadcast` instead.
+    scale (region/nation, a k-row model, a one-row stats frame). Join
+    SF-scaled inputs unhinted and let the planner's threshold decide.
     """
     return fact.join(F.broadcast(dim), on=on, how=how)
-
-
-def _parse_size_bytes(v: str | int) -> int:
-    """Parse a Spark size conf value (``10485760``, ``"10MB"``,
-    ``"512k"``, ``"-1"``) to bytes."""
-    s = str(v).strip().lower()
-    if s.endswith("b"):
-        s = s[:-1]
-    mult = 1
-    for suffix, m in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30), ("t", 1 << 40)):
-        if s.endswith(suffix):
-            mult, s = m, s[:-1]
-            break
-    return int(float(s) * mult)
-
-
-def estimated_size_bytes(df: DataFrame) -> int | None:
-    """Catalyst's size estimate for ``df`` (optimized-plan stats —
-    file bytes for parquet relations, no job run). ``None`` when the
-    session type doesn't expose the query execution (Spark Connect)."""
-    try:
-        # py4j converts the scala BigInt to a Python int
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        return None
-
-
-def broadcast_threshold_bytes(df: DataFrame) -> int:
-    """The session's ``spark.sql.autoBroadcastJoinThreshold`` in
-    bytes (-1 → 0: hints disabled)."""
-    try:
-        raw = df.sparkSession.conf.get(
-            "spark.sql.autoBroadcastJoinThreshold", "10MB"
-        )
-        return max(0, _parse_size_bytes(raw))
-    except Exception:
-        return 10 << 20
-
-
-def maybe_broadcast(df: DataFrame, max_bytes: int | None = None) -> DataFrame:
-    """Size-gated broadcast hint for relations that grow with the data.
-
-    Hints ``df`` for broadcast ONLY when Catalyst's size estimate is
-    known and at most ``max_bytes`` (default: the session's
-    ``spark.sql.autoBroadcastJoinThreshold``). Otherwise returns
-    ``df`` unchanged so the planner/AQE chooses the join strategy —
-    the scale-safe behavior: a forced hint on an SF-scaled table
-    ignores the threshold and OOMs at 100 TB, while an unhinted plan
-    degrades to a shuffle join. Below the threshold the hint is
-    belt-and-braces (the planner would auto-broadcast anyway); its
-    value is pinning the map-side plan when stats are present.
-    """
-    if max_bytes is None:
-        max_bytes = broadcast_threshold_bytes(df)
-    if max_bytes <= 0:
-        return df
-    size = estimated_size_bytes(df)
-    if size is not None and 0 < size <= max_bytes:
-        return F.broadcast(df)
-    return df
 
 
 def semi_join(left: DataFrame, right: DataFrame, on: str | list[str]) -> DataFrame:

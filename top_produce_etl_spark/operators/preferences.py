@@ -219,8 +219,6 @@ def with_rating_gap(
     Shape: two joins of the (usually model-sized) rating relation
     against the pair stream — broadcast when small, plain hash joins
     otherwise; the pair relation never collects."""
-    from top_produce_etl_spark.operators.joins import maybe_broadcast
-
     rw = ratings.select(
         F.col(item_col).alias(winner_col),
         F.col(rating_col).alias("r_winner_micro"),
@@ -230,8 +228,8 @@ def with_rating_gap(
         F.col(rating_col).alias("r_loser_micro"),
     )
     return (
-        pairs.join(maybe_broadcast(rw), winner_col, "left")
-        .join(maybe_broadcast(rl), loser_col, "left")
+        pairs.join(rw, winner_col, "left")
+        .join(rl, loser_col, "left")
         .withColumn(
             "gap_micro",
             F.col("r_winner_micro") - F.col("r_loser_micro"),

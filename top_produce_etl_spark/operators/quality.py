@@ -25,7 +25,6 @@ from typing import Any
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from top_produce_etl_spark.operators.joins import maybe_broadcast
 
 
 def _violation(check: dict[str, Any]) -> Column:
@@ -127,7 +126,7 @@ def quality_report(df: DataFrame, checks: list[dict[str, Any]]) -> DataFrame:
             df.select(F.col(c["col"]))
             .filter(F.col(c["col"]).isNotNull())
             .join(
-                maybe_broadcast(c["ref"].select(F.col(c["ref_col"]).alias(c["col"]))),
+                c["ref"].select(F.col(c["ref_col"]).alias(c["col"])),
                 c["col"],
                 "left_anti",
             )

@@ -35,7 +35,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from top_produce_etl_spark.operators._cache import persist_tracked
-from top_produce_etl_spark.operators.joins import maybe_broadcast
 from top_produce_etl_spark.operators.topn import top_n_window
 from pyspark.sql.window import Window
 
@@ -211,7 +210,7 @@ def tfidf_top_terms(
         "__k", F.pmod(F.col("n_docs"), F.lit(1)).cast("int")
     )
     dfreq_n = dfreq.join(F.broadcast(n_docs), "__k").drop("__k")
-    scored = tf.join(maybe_broadcast(dfreq_n), "term").withColumn(
+    scored = tf.join(dfreq_n, "term").withColumn(
         "tfidf_scaled",
         F.round(
             F.col("tfreq").cast("double")
@@ -320,7 +319,7 @@ def unigram_surprisal(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     def L(c):  # micro-nat fixed-point log
         return F.round(F.log(c.cast("double")) * INFO_SCALE).cast("bigint")
 
-    scored = tf.join(maybe_broadcast(ct_t), "term").withColumn(
+    scored = tf.join(ct_t, "term").withColumn(
         "__contrib", F.col("tfreq") * (L(F.col("ttotal")) - L(F.col("ctotal")))
     )
     return (
@@ -384,7 +383,8 @@ def bigram_cond_surprisal(
     contribution is a non-negative integer).
 
     Scale: ONE (doc, bigram) shuffle; corpus bigram and prefix
-    tables are vocab-sized and join back size-gated — the big side
+    tables are vocab-sized and broadcast back under the planner's
+    threshold — the big side
     never re-shuffles (tfidf/unigram house shape). First tokens have
     no context and are skipped; single-token docs emit nothing.
 
@@ -432,8 +432,8 @@ def bigram_cond_surprisal(
         return F.round(F.log(c.cast("double")) * INFO_SCALE).cast("bigint")
 
     scored = (
-        tf.join(maybe_broadcast(cb), "bigram")
-        .join(maybe_broadcast(cp), "prefix")
+        tf.join(cb, "bigram")
+        .join(cp, "prefix")
         .withColumn(
             "__contrib",
             F.col("bfreq") * (L(F.col("cpf")) - L(F.col("cbg"))),

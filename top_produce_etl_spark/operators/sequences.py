@@ -121,8 +121,6 @@ def audience_overlap(
 
     Output: (group_a, group_b, n_a, n_b, n_both, jaccard_micro).
     """
-    from top_produce_etl_spark.operators.joins import maybe_broadcast
-
     # gm feeds THREE consumers (sizes + both self-join sides);
     # unpersisted, the scan→project→distinct tower re-executes per
     # consumer (guide §2.4). The caller's pipeline_session releases
@@ -144,9 +142,7 @@ def audience_overlap(
     )
     na = sizes.select(F.col("grp").alias("group_a"), F.col("n").alias("n_a"))
     nb = sizes.select(F.col("grp").alias("group_b"), F.col("n").alias("n_b"))
-    out = both.join(maybe_broadcast(na), "group_a").join(
-        maybe_broadcast(nb), "group_b"
-    )
+    out = both.join(na, "group_a").join(nb, "group_b")
     union = F.col("n_a") + F.col("n_b") - F.col("n_both")
     return out.select(
         "group_a",

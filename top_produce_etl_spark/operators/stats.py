@@ -376,20 +376,17 @@ def loo_target_encode(
     Singleton categories encode NULL (no peers to average).
 
     ONE category-keyed exact-decimal agg, stats broadcast back
-    (|categories| rows, size-gated) — the fact table never shuffles.
+    (|categories| rows, under the planner's threshold) — the fact
+    table never shuffles.
     The division happens per row in a fixed double tree over exact
     sums, emitted at 1e6 fixed point: deterministic at any
     parallelism, same contract as :func:`grouped_trend`.
     """
-    from top_produce_etl_spark.operators.joins import maybe_broadcast
-
     stats = df.groupBy(F.col(cat_col).alias("__cat")).agg(
         F.count(F.lit(1)).alias("__n"),
         F.sum(dec(target_col)).alias("__s"),
     )
-    joined = df.join(
-        maybe_broadcast(stats), df[cat_col] == F.col("__cat")
-    )
+    joined = df.join(stats, df[cat_col] == F.col("__cat"))
     y = dec(target_col).cast("double")
     loo = F.when(
         F.col("__n") > 1,
@@ -571,14 +568,13 @@ def trimmed_mean(
         raise ValueError("trimmed_mean requires >= 1 group key")
     if not (0.0 <= lo < hi <= 1.0):
         raise ValueError(f"need 0 <= lo < hi <= 1, got {lo}, {hi}")
-    from top_produce_etl_spark.operators.joins import maybe_broadcast
 
     v = F.col(value_col).cast("double")
     edges = df.groupBy(*keys).agg(
         F.round(F.expr(f"percentile(CAST({value_col} AS DOUBLE), {lo!r})"), 6).alias("__lo"),
         F.round(F.expr(f"percentile(CAST({value_col} AS DOUBLE), {hi!r})"), 6).alias("__hi"),
     )
-    joined = df.join(maybe_broadcast(edges), keys)
+    joined = df.join(edges, keys)
     inside = (v >= F.col("__lo")) & (v <= F.col("__hi"))
     agg = joined.groupBy(*keys).agg(
         F.count(F.lit(1)).alias("n"),

@@ -260,7 +260,7 @@ def strip_boilerplate(
     Scale shape: one narrow explode (doc → chunks with position),
     ONE chunk-keyed hash agg for document frequency (map-side
     partials; distinct-doc count per chunk), one join of chunks
-    against the flagged-chunk relation (size-gated broadcast — the
+    against the flagged-chunk relation (broadcast by the planner — the
     boilerplate set is small by construction at sane ``min_df``),
     and ONE doc-keyed reassembly agg whose in-group state is a
     single document's chunk list — bounded by document length, never
@@ -272,8 +272,6 @@ def strip_boilerplate(
 
     Output: (id, cleaned_text, n_chunks, n_removed).
     """
-    from top_produce_etl_spark.operators.joins import maybe_broadcast
-
     if chunk_tokens < 1:
         raise ValueError(f"chunk_tokens must be >= 1, got {chunk_tokens}")
     if min_df < 2:
@@ -300,7 +298,7 @@ def strip_boilerplate(
         .filter(F.col("__df") >= min_df)
         .select("chunk", F.lit(True).alias("__boiler"))
     )
-    flagged = chunks.join(maybe_broadcast(boiler), "chunk", "left").select(
+    flagged = chunks.join(boiler, "chunk", "left").select(
         "id",
         "pos",
         "chunk",
@@ -734,8 +732,6 @@ def score_with_frozen_lm(
     Shape: one (doc, term) tf shuffle + a broadcast of the |vocab|
     LM — the big side never re-shuffles.
     """
-    from top_produce_etl_spark.operators.joins import maybe_broadcast
-
     toks = docs.select(
         F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("term")
     )
@@ -753,7 +749,7 @@ def score_with_frozen_lm(
     tf_t = tf.withColumn(
         "__k", F.pmod(F.col("tfreq"), F.lit(1)).cast("int")
     ).join(F.broadcast(total), "__k").drop("__k")
-    scored = tf_t.join(maybe_broadcast(lm_df), "term", "left").withColumn(
+    scored = tf_t.join(lm_df, "term", "left").withColumn(
         "__contrib",
         F.col("tfreq")
         * (

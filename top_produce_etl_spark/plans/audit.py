@@ -111,6 +111,32 @@ def plan_audit(df: DataFrame) -> dict[str, Any]:
     }
 
 
+def _parse_size_bytes(v: str | int) -> int:
+    """Parse a Spark size conf value (``10485760``, ``"10MB"``,
+    ``"512k"``, ``"-1"``) to bytes."""
+    s = str(v).strip().lower()
+    if s.endswith("b"):
+        s = s[:-1]
+    mult = 1
+    for suffix, m in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30), ("t", 1 << 40)):
+        if s.endswith(suffix):
+            mult, s = m, s[:-1]
+            break
+    return int(float(s) * mult)
+
+
+def broadcast_threshold_bytes(df: DataFrame) -> int:
+    """The session's ``spark.sql.autoBroadcastJoinThreshold`` in
+    bytes (-1 → 0: broadcast joins disabled)."""
+    try:
+        raw = df.sparkSession.conf.get(
+            "spark.sql.autoBroadcastJoinThreshold", "10MB"
+        )
+        return max(0, _parse_size_bytes(raw))
+    except Exception:
+        return 10 << 20
+
+
 def broadcast_hint_audit(
     df: DataFrame, max_bytes: int | None = None
 ) -> list[str]:
@@ -129,8 +155,6 @@ def broadcast_hint_audit(
     session types without py4j plan access (Spark Connect) returns []
     — the rule is advisory there.
     """
-    from top_produce_etl_spark.operators.joins import broadcast_threshold_bytes
-
     if max_bytes is None:
         max_bytes = broadcast_threshold_bytes(df)
     if max_bytes <= 0:
@@ -151,8 +175,8 @@ def broadcast_hint_audit(
             problems.append(
                 f"forced broadcast hint on {side_name} side of a join: "
                 f"estimated {size} bytes > threshold {max_bytes} — "
-                "use operators.joins.maybe_broadcast (size-gated) or no "
-                "hint (AQE) for inputs that grow with the data"
+                "hint only fixed-cardinality sides; join inputs that grow "
+                "with the data unhinted (the planner's threshold decides)"
             )
 
     def walk(node):

@@ -35,7 +35,6 @@ from top_produce_etl_spark.operators._cache import (  # noqa: F401
     persist_tracked,
     pipeline_session,
 )
-from top_produce_etl_spark.operators.joins import maybe_broadcast
 from top_produce_etl_spark.operators.topn import top_n_window
 
 
@@ -300,15 +299,9 @@ def _keep_ids(
 # Adapters: ops that do more than forward their keys to one operator
 # ---------------------------------------------------------------------------
 
-def _join(df, table, on, how="inner", broadcast=False, *, resolve):
-    right = resolve(table)
-    if broadcast:
-        # size-gated: the config asserts intent, the engine still
-        # refuses to force-broadcast something that no longer fits
-        # under the session threshold
-        right = maybe_broadcast(right)
+def _join(df, table, on, how="inner", *, resolve):
     cond = F.expr(on) if isinstance(on, str) and " " in on else on
-    return df.join(right, on=cond, how=how)
+    return df.join(resolve(table), on=cond, how=how)
 
 
 def _union(df, table, allow_missing=False, *, resolve):

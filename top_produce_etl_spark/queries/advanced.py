@@ -33,7 +33,6 @@ from top_produce_etl_spark.functions.numeric import (
     units_sum_over,
 )
 from top_produce_etl_spark.io.sources import load_table
-from top_produce_etl_spark.operators.joins import maybe_broadcast
 from top_produce_etl_spark.operators.topn import top_n_agg
 from top_produce_etl_spark.queries import query
 from top_produce_etl_spark.queries.relational import FLAGSHIP_SQL, REV_DEC
@@ -55,10 +54,10 @@ def topn_agg_top3_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     revenue = (
         lineitem
         .join(orders, lineitem.l_orderkey == orders.o_orderkey)
-        .join(maybe_broadcast(customer), orders.o_custkey == customer.c_custkey)
+        .join(customer, orders.o_custkey == customer.c_custkey)
         .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
         .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-        .join(maybe_broadcast(part), lineitem.l_partkey == part.p_partkey)
+        .join(part, lineitem.l_partkey == part.p_partkey)
         .groupBy("r_name", "p_name")
         .agg(revenue_sum("revenue"))
     )

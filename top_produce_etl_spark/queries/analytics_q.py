@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 
 from top_produce_etl_spark.functions.numeric import revenue_expr, revenue_sum
 from top_produce_etl_spark.io.sources import load_table
-from top_produce_etl_spark.operators.joins import maybe_broadcast
 from top_produce_etl_spark.operators.topn import top_n_window
 from top_produce_etl_spark.queries import query
 from top_produce_etl_spark.queries.relational import REV_DEC
@@ -186,7 +185,7 @@ def segment_price_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
     j = orders.join(
-        maybe_broadcast(customer.select("c_custkey", "c_mktsegment")),
+        customer.select("c_custkey", "c_mktsegment"),
         orders.o_custkey == F.col("c_custkey"),
     )
     return iqr_outlier_rows(
@@ -380,8 +379,8 @@ def trade_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = (
         lineitem
         .join(orders, lineitem.l_orderkey == orders.o_orderkey)
-        .join(maybe_broadcast(customer), orders.o_custkey == customer.c_custkey)
-        .join(maybe_broadcast(supplier), lineitem.l_suppkey == supplier.s_suppkey)
+        .join(customer, orders.o_custkey == customer.c_custkey)
+        .join(supplier, lineitem.l_suppkey == supplier.s_suppkey)
         .join(F.broadcast(n1), supplier.s_nationkey == F.col("s_nk"))
         .join(F.broadcast(n2), customer.c_nationkey == F.col("c_nk"))
         .select("src_nation", "dst_nation", revenue_expr().alias("w"))
@@ -419,8 +418,8 @@ def trade_pagerank_dangling(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = (
         lineitem
         .join(orders, lineitem.l_orderkey == orders.o_orderkey)
-        .join(maybe_broadcast(customer), orders.o_custkey == customer.c_custkey)
-        .join(maybe_broadcast(supplier), lineitem.l_suppkey == supplier.s_suppkey)
+        .join(customer, orders.o_custkey == customer.c_custkey)
+        .join(supplier, lineitem.l_suppkey == supplier.s_suppkey)
         .join(F.broadcast(n1), supplier.s_nationkey == F.col("s_nk"))
         .join(F.broadcast(n2), customer.c_nationkey == F.col("c_nk"))
         .select("src_nation", "dst_nation", revenue_expr().alias("w"))
@@ -468,8 +467,8 @@ def trade_ppr_asia(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = (
         lineitem
         .join(orders, lineitem.l_orderkey == orders.o_orderkey)
-        .join(maybe_broadcast(customer), orders.o_custkey == customer.c_custkey)
-        .join(maybe_broadcast(supplier), lineitem.l_suppkey == supplier.s_suppkey)
+        .join(customer, orders.o_custkey == customer.c_custkey)
+        .join(supplier, lineitem.l_suppkey == supplier.s_suppkey)
         .join(F.broadcast(n1), supplier.s_nationkey == F.col("s_nk"))
         .join(F.broadcast(n2), customer.c_nationkey == F.col("c_nk"))
         .select("src_nation", "dst_nation", revenue_expr().alias("w"))
@@ -1573,7 +1572,7 @@ def gini_revenue_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
     j = orders.join(
-        maybe_broadcast(customer),
+        customer,
         orders["o_custkey"] == customer["c_custkey"],
     ).select("c_mktsegment", "o_totalprice", "o_orderkey")
     return gini_by_group(
@@ -1797,13 +1796,12 @@ def trending_brands_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     merchandising/radar dashboard runs: rollup shuffle + partitioned
     windows + TakeOrderedAndProject, nothing data-sized on one
     task."""
-    from top_produce_etl_spark.operators.joins import maybe_broadcast
     from top_produce_etl_spark.operators.stats import trailing_ewma
 
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
     daily = (
-        li.join(maybe_broadcast(part), li.l_partkey == part.p_partkey)
+        li.join(part, li.l_partkey == part.p_partkey)
         .groupBy(
             "p_brand", F.col("l_shipdate").cast("date").alias("day")
         )

@@ -203,11 +203,10 @@ def dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the query a training-data pipeline actually materializes;
     the pair/component queries above are its building blocks. The
     loser set is |duplicates|-sized — usually small, but it grows
-    with the corpus, so the anti-join build side is size-gated
-    (hint only under the broadcast threshold; above it the planner
-    falls back to a shuffle anti-join instead of OOMing)."""
+    with the corpus, so the anti-join build side carries no hint
+    (the planner broadcasts it under its threshold and falls back to
+    a shuffle anti-join above it instead of OOMing)."""
     from top_produce_etl_spark.operators.dedup import connected_components
-    from top_produce_etl_spark.operators.joins import maybe_broadcast
 
     docs = load_table(spark, sf_dir, "documents")
     pairs = jaccard_pairs(docs, "doc_id", "text", k=5, threshold=0.5)
@@ -215,7 +214,7 @@ def dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     losers = comp.filter(F.col("id") != F.col("rep_id")).select(
         F.col("id").alias("doc_id")
     )
-    return docs.join(maybe_broadcast(losers), "doc_id", "left_anti").select(
+    return docs.join(losers, "doc_id", "left_anti").select(
         "doc_id", "lang", "n_chars"
     )
 
@@ -348,7 +347,6 @@ def shingle_novelty_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     back (TF-IDF shape), per-doc re-aggregate. Integer counts →
     fixed double → 1e6 fixed point."""
     from top_produce_etl_spark.operators.dedup import shingle_table
-    from top_produce_etl_spark.operators.joins import maybe_broadcast
 
     sh = shingle_table(
         load_table(spark, sf_dir, "documents"), "doc_id", "text", k=5
@@ -356,7 +354,7 @@ def shingle_novelty_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("d"))
     novel = F.sum(F.when(F.col("d") == 1, 1).otherwise(0))
     return (
-        sh.join(maybe_broadcast(dfreq), "shingle")
+        sh.join(dfreq, "shingle")
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_shingles"),
@@ -783,7 +781,6 @@ def masked_decontamination_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
         contaminated_spans,
         mask_spans,
     )
-    from top_produce_etl_spark.operators.joins import maybe_broadcast
     from top_produce_etl_spark.operators.splits import assign_split
 
     docs = assign_split(
@@ -822,7 +819,7 @@ def masked_decontamination_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("masked_tokens").alias("metric"),
         F.coalesce(F.sum("span_len"), F.lit(0)).cast("long").alias("value"),
     )
-    m4 = masked_sh.join(maybe_broadcast(ref_sh), "sh").agg(
+    m4 = masked_sh.join(ref_sh, "sh").agg(
         F.lit("residual_overlap_pairs").alias("metric"),
         F.count(F.lit(1)).alias("value"),
     )
@@ -929,7 +926,6 @@ def clean_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         connected_components,
         strip_duplicate_spans,
     )
-    from top_produce_etl_spark.operators.joins import maybe_broadcast
 
     from top_produce_etl_spark.io.sources import fan_out
 
@@ -950,7 +946,7 @@ def clean_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # by shingle/doc and the strip is row-local — placement cannot
     # change output.
     surv = persist_tracked(
-        fan_out(docs).join(maybe_broadcast(losers), "doc_id", "left_anti")
+        fan_out(docs).join(losers, "doc_id", "left_anti")
     )
     return strip_duplicate_spans(surv, "doc_id", "text", k=8, min_docs=2)
 

@@ -34,7 +34,6 @@ from top_produce_etl_spark.functions.text import (
     quality_score,
 )
 from top_produce_etl_spark.io.sources import load_table
-from top_produce_etl_spark.operators.joins import maybe_broadcast
 from top_produce_etl_spark.operators.retrieval import bm25_oracle_sql, bm25_scores
 from top_produce_etl_spark.queries import _ORACLES, query
 
@@ -841,7 +840,7 @@ def training_data_ops_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("test_id"), "shingle"
     )
     contamination = (
-        train.join(maybe_broadcast(test), "shingle")
+        train.join(test, "shingle")
         .groupBy("train_id", "test_id")
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .filter(F.col("n_shared") >= CONTAM_MIN_SHARED)

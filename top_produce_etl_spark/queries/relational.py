@@ -10,10 +10,10 @@ aggregate → ranking window → ordered output in one plan.
 Scale notes on the flagship plan shape:
 - fixed-cardinality dims (region=5, nation=25) joined with an
   explicit ``broadcast()`` hint — the fact table never shuffles for
-  them at any scale; SF-scaled dims (customer, part) go through the
-  size-gated ``maybe_broadcast`` (hinted while they fit under the
-  session broadcast threshold, left to the planner/AQE when they
-  don't — a forced hint would OOM at 100 TB);
+  them at any scale; SF-scaled dims (customer, part) are joined
+  unhinted, so the planner broadcasts them while they fit under the
+  session broadcast threshold and shuffles them when they don't — a
+  forced hint would OOM at 100 TB;
 - the only unavoidable exchange is the lineitem→orders equi-join
   (both sides large at real scale) and the group-by on
   (region, part): Catalyst does partial (map-side) aggregation
@@ -35,7 +35,6 @@ from top_produce_etl_spark.functions.numeric import (
     units_sum,
 )
 from top_produce_etl_spark.io.sources import load_table
-from top_produce_etl_spark.operators.joins import maybe_broadcast
 from top_produce_etl_spark.operators.topn import top_n_window
 from top_produce_etl_spark.queries import query
 
@@ -81,10 +80,10 @@ def flagship_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     revenue = (
         lineitem
         .join(orders, lineitem.l_orderkey == orders.o_orderkey)
-        .join(maybe_broadcast(customer), orders.o_custkey == customer.c_custkey)
+        .join(customer, orders.o_custkey == customer.c_custkey)
         .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
         .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-        .join(maybe_broadcast(part), lineitem.l_partkey == part.p_partkey)
+        .join(part, lineitem.l_partkey == part.p_partkey)
         .groupBy("r_name", "p_name")
         # long-units fast path: bit-identical to the decimal-sum
         # oracle, ~1.6x cheaper (functions/numeric.py rationale)

@@ -326,10 +326,9 @@ def split_decontamination_check_q(spark: SparkSession, sf_dir: str) -> DataFrame
     ``residual`` is the same pair set anti-joined against the
     removal list (provably empty — the query computes it rather
     than asserts it). The small TEST shingle side and the
-    contaminated-id set ride size-gated broadcasts; no all-pairs
+    contaminated-id set ride planner-chosen broadcasts; no all-pairs
     joins anywhere.
     """
-    from top_produce_etl_spark.operators.joins import maybe_broadcast
     from top_produce_etl_spark.operators.splits import assign_split
 
     docs = assign_split(
@@ -356,14 +355,10 @@ def split_decontamination_check_q(spark: SparkSession, sf_dir: str) -> DataFrame
         F.col("doc_id").alias("test_id"), "shingle"
     )
     overlap = persist_tracked(
-        train_sh.join(maybe_broadcast(test_sh), "shingle").select(
-            "train_id", "test_id"
-        )
+        train_sh.join(test_sh, "shingle").select("train_id", "test_id")
     )
     contaminated = overlap.select("train_id").distinct()
-    residual = overlap.join(
-        maybe_broadcast(contaminated), "train_id", "left_anti"
-    )
+    residual = overlap.join(contaminated, "train_id", "left_anti")
 
     def metric(name: str, df: DataFrame) -> DataFrame:
         return df.agg(F.count(F.lit(1)).alias("value")).select(

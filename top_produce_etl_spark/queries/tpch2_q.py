@@ -20,7 +20,6 @@ from top_produce_etl_spark.functions.numeric import (
     units_sum,
 )
 from top_produce_etl_spark.io.sources import load_table
-from top_produce_etl_spark.operators.joins import maybe_broadcast
 from top_produce_etl_spark.queries import query
 from top_produce_etl_spark.queries.relational import REV_DEC
 
@@ -63,8 +62,8 @@ def q9_profit_by_nation_year(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_quantity", 0
     ) * F.lit(10000)
     return (
-        li.join(maybe_broadcast(part), li.l_partkey == part.p_partkey)
-        .join(maybe_broadcast(supp), li.l_suppkey == supp.s_suppkey)
+        li.join(part, li.l_partkey == part.p_partkey)
+        .join(supp, li.l_suppkey == supp.s_suppkey)
         .join(F.broadcast(nation), supp.s_nationkey == nation.n_nationkey)
         .join(orders, li.l_orderkey == orders.o_orderkey)
         .groupBy(
@@ -143,7 +142,7 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load_table(spark, sf_dir, "part").filter(
         (F.col("p_brand") == "Brand#23") & (F.col("p_size") < 15)
     )
-    joined = li.join(maybe_broadcast(part), li.l_partkey == part.p_partkey).select(
+    joined = li.join(part, li.l_partkey == part.p_partkey).select(
         "l_partkey", "l_quantity", "l_extendedprice"
     )
     w = Window.partitionBy("l_partkey")
@@ -219,7 +218,7 @@ def q21_late_sole_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("n_supp") >= 2)
             & (F.col("n_late") == 1)
         )
-        .join(maybe_broadcast(supp), per_supp.l_suppkey == supp.s_suppkey)
+        .join(supp, per_supp.l_suppkey == supp.s_suppkey)
         .groupBy("s_name")
         .agg(F.count(F.lit(1)).alias("numwait"))
         .orderBy(F.desc("numwait"), F.asc("s_name"))

@@ -22,10 +22,11 @@ Scale notes: every aggregate here pre-reduces map-side; the only
 wide shuffles are the (part,supp)-keyed aggregates whose key space
 is |relationships|, not |lineitem|. Scalar totals ride 1-row
 broadcasts; dimension joins use fixed-cardinality hints
-(nation/region) or size-gated ``maybe_broadcast`` (part/supplier
-slices). No correlated per-row subqueries survive into the plan —
-each is decorrelated into an aggregate + join, which is exactly how
-Catalyst plans the real TPC-H q2/q11/q20.
+(nation/region) or none (part/supplier slices: the planner's
+broadcast threshold decides). No correlated per-row subqueries
+survive into the plan — each is decorrelated into an aggregate +
+join, which is exactly how Catalyst plans the real TPC-H
+q2/q11/q20.
 """
 
 from __future__ import annotations
@@ -35,7 +36,6 @@ from pyspark.sql import functions as F
 
 from top_produce_etl_spark.functions.numeric import dec
 from top_produce_etl_spark.io.sources import load_table
-from top_produce_etl_spark.operators.joins import maybe_broadcast
 from top_produce_etl_spark.queries import query
 
 
@@ -89,8 +89,8 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (offers.offer == F.col("min_offer")),
     ).select("l_partkey", "l_suppkey", "offer")
     return (
-        best.join(maybe_broadcast(part), best.l_partkey == part.p_partkey)
-        .join(maybe_broadcast(supplier), best.l_suppkey == supplier.s_suppkey)
+        best.join(part, best.l_partkey == part.p_partkey)
+        .join(supplier, best.l_suppkey == supplier.s_suppkey)
         .join(F.broadcast(nation), supplier.s_nationkey == nation.n_nationkey)
         .join(
             F.broadcast(region.filter(F.col("r_name") == "EUROPE")),
@@ -139,7 +139,7 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_name") == "NATION_3"
     )
     pv = (
-        li.join(maybe_broadcast(supplier), li.l_suppkey == supplier.s_suppkey)
+        li.join(supplier, li.l_suppkey == supplier.s_suppkey)
         .join(F.broadcast(nation), supplier.s_nationkey == nation.n_nationkey)
         .groupBy("l_partkey")
         .agg(F.sum(dec("l_extendedprice") * dec("l_quantity")).alias("val"))
@@ -193,8 +193,8 @@ def q16_supplier_relationship(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("s_suppkey").alias("l_suppkey"))
     )
     return (
-        li.join(maybe_broadcast(flagged), "l_suppkey", "left_anti")
-        .join(maybe_broadcast(part), li.l_partkey == part.p_partkey)
+        li.join(flagged, "l_suppkey", "left_anti")
+        .join(part, li.l_partkey == part.p_partkey)
         .groupBy("p_brand", "p_size")
         .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
         .orderBy(
@@ -244,7 +244,7 @@ def q20_dominant_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = load_table(spark, sf_dir, "nation")
 
     sq = (
-        li.join(maybe_broadcast(part), li.l_partkey == part.p_partkey)
+        li.join(part, li.l_partkey == part.p_partkey)
         .groupBy("l_suppkey", "l_partkey")
         .agg(F.sum(dec("l_quantity")).alias("qty"))
     )
@@ -257,7 +257,7 @@ def q20_dominant_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         supplier.join(
-            maybe_broadcast(dominant),
+            dominant,
             supplier.s_suppkey == dominant.l_suppkey,
             "left_semi",
         )

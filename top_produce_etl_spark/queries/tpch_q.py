@@ -23,7 +23,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from top_produce_etl_spark.io.sources import load_table
-from top_produce_etl_spark.operators.joins import maybe_broadcast
 from top_produce_etl_spark.queries import query
 from top_produce_etl_spark.queries.relational import REV_DEC
 
@@ -109,9 +108,9 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             lineitem.l_orderkey == orders.o_orderkey,
         )
-        .join(maybe_broadcast(customer), orders.o_custkey == customer.c_custkey)
+        .join(customer, orders.o_custkey == customer.c_custkey)
         .join(
-            maybe_broadcast(supplier),
+            supplier,
             (lineitem.l_suppkey == supplier.s_suppkey)
             & (customer.c_nationkey == supplier.s_nationkey),
         )
@@ -290,7 +289,7 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("l_shipdate") >= "1996-01-01")
             & (F.col("l_shipdate") < "1996-04-01")
         )
-        .join(maybe_broadcast(part), lineitem.l_partkey == part.p_partkey)
+        .join(part, lineitem.l_partkey == part.p_partkey)
         .agg(
             (F.lit(100.0) * promo / total).cast("double").alias("promo_pct"),
             promo.alias("promo_revenue"),
@@ -341,8 +340,8 @@ def q7_trade_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("l_shipdate") < "1998-01-01")
         )
         .join(orders, lineitem.l_orderkey == orders.o_orderkey)
-        .join(maybe_broadcast(customer), orders.o_custkey == customer.c_custkey)
-        .join(maybe_broadcast(supplier), lineitem.l_suppkey == supplier.s_suppkey)
+        .join(customer, orders.o_custkey == customer.c_custkey)
+        .join(supplier, lineitem.l_suppkey == supplier.s_suppkey)
         .join(F.broadcast(ns), F.col("s_nationkey") == F.col("ns_key"))
         .join(F.broadcast(nc), F.col("c_nationkey") == F.col("nc_key"))
         .filter(F.col("supp_nation") != F.col("cust_nation"))
@@ -394,7 +393,7 @@ def q18_large_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         orders.join(
-            maybe_broadcast(big_orders),
+            big_orders,
             orders.o_orderkey == big_orders.l_orderkey,
             "left_semi",
         )
@@ -448,7 +447,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         rev.crossJoin(F.broadcast(mx))
         .filter(F.col("total_revenue") == F.col("__mx"))
-        .join(maybe_broadcast(supplier), F.col("supplier_no") == supplier.s_suppkey)
+        .join(supplier, F.col("supplier_no") == supplier.s_suppkey)
         .select("s_suppkey", "s_name", "total_revenue")
     )
 
@@ -546,7 +545,7 @@ def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         | ((b == "Brand#3") & s.between(1, 35) & q.between(20, 30))
     )
     return (
-        lineitem.join(maybe_broadcast(part), lineitem.l_partkey == part.p_partkey)
+        lineitem.join(part, lineitem.l_partkey == part.p_partkey)
         .filter(cond)
         .agg(
             revenue_sum("revenue"),
@@ -605,13 +604,13 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     vol_u = revenue_units()
     flat = (
         lineitem.join(orders, lineitem.l_orderkey == orders.o_orderkey)
-        .join(maybe_broadcast(customer), orders.o_custkey == customer.c_custkey)
+        .join(customer, orders.o_custkey == customer.c_custkey)
         .join(F.broadcast(nc), F.col("c_nationkey") == F.col("nc_key"))
         .join(
             F.broadcast(region.filter(F.col("r_name") == "ASIA")),
             F.col("nc_region") == F.col("r_regionkey"),
         )
-        .join(maybe_broadcast(supplier), lineitem.l_suppkey == supplier.s_suppkey)
+        .join(supplier, lineitem.l_suppkey == supplier.s_suppkey)
         .join(F.broadcast(ns), F.col("s_nationkey") == F.col("ns_key"))
     )
     return (

@@ -56,7 +56,6 @@ from top_produce_etl_spark.operators.eventtime import (
     session_window_agg,
     tumbling_window_agg,
 )
-from top_produce_etl_spark.operators.joins import maybe_broadcast
 from pyspark.sql.types import (
     LongType,
     StructField,
@@ -101,10 +100,9 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     same event-time normalization as the batch loader — so the
     stream's ``ts`` is always LTZ TIMESTAMP (``withWatermark``
     rejects TIMESTAMP_NTZ) and batch-parity tests compare
-    same-typed results."""
-    static = load_table(spark, sf_dir, "events")  # normalized batch twin
-    sdf = normalize_event_time(_read_fixture_stream(spark, sf_dir, "events"))
-    return sdf.select(*[F.col(c) for c in static.columns])
+    same-typed results. The normalization keeps the raw column order,
+    which is the batch loader's order too."""
+    return normalize_event_time(_read_fixture_stream(spark, sf_dir, "events"))
 
 
 def _windowed_counts(
@@ -165,9 +163,7 @@ def enriched_segment_counts(
     cust = load_table(events.sparkSession, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
-    enriched = events.join(
-        maybe_broadcast(cust), events.user_id == cust.c_custkey
-    )
+    enriched = events.join(cust, events.user_id == cust.c_custkey)
     return tumbling_window_agg(
         enriched.withWatermark("ts", watermark),
         "ts",
@@ -352,9 +348,11 @@ def purchase_click_attribution(
     events: DataFrame,
     lookback: str = "1 hour",
     watermark: str = "2 hours",
+    how: str = "inner",
 ) -> DataFrame:
     """Each purchase matched to the same user's clicks in the
-    preceding ``lookback`` window (ad-attribution shape). Batch over
+    preceding ``lookback`` window (ad-attribution shape); ``how`` is
+    the join type (``"leftOuter"`` keeps unmatched purchases). Batch over
     ``load_table`` events; a watermarked STREAM-STREAM inner join
     over :func:`stream_events`
     (:func:`purchase_click_attribution_stream`).
@@ -394,6 +392,7 @@ def purchase_click_attribution(
             AND click_ts >= purchase_ts - INTERVAL {lookback}
             AND click_ts < purchase_ts"""
         ),
+        how,
     ).select(
         F.col("p_user_id").alias("user_id"),
         "purchase_id",
@@ -576,33 +575,8 @@ def purchase_click_outer_attribution_stream(
     (parity: ext ``stream_outer_attribution_parity``).
     """
     lookback = check_interval(lookback, "lookback")
-    events = stream_events(spark, sf_dir)
-    clicks = (
-        events.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", watermark)
-    )
-    purchases = (
-        events.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("user_id"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", watermark)
-    )
-    joined = purchases.join(
-        clicks,
-        F.expr(
-            f"""user_id = c_user
-            AND click_ts >= purchase_ts - INTERVAL {lookback}
-            AND click_ts < purchase_ts"""
-        ),
-        "leftOuter",
+    joined = purchase_click_attribution(
+        stream_events(spark, sf_dir), lookback, watermark, how="leftOuter"
     ).select("user_id", "purchase_id", "purchase_ts", "click_id")
     return _run_available_now(joined, sink_table, "append")
 
