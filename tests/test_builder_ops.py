@@ -205,7 +205,7 @@ def test_builder_import_loads_no_operator_module():
     allowed = {package} | {
         f"{package}.{m}"
         for m in ("config", "session", "io", "io.sinks", "io.sources",
-                  "operators", "operators._cache", "operators.joins",
-                  "operators.topn", "plans", "plans.builder")
+                  "operators", "operators._cache", "operators.topn",
+                  "plans", "plans.builder")
     }
     assert set(loaded) <= allowed

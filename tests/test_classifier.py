@@ -194,3 +194,34 @@ def test_training_oracle_bit_exact_with_empty_tokens(spark):
         )
     )
     assert model == duck
+
+
+def test_one_gd_core_for_hashed_linear_models():
+    """The quality classifier and langid share ONE integer-GD core:
+    across both modules there is one training loop, one persisted
+    feature relation and one langid argmax — a second copy of any of
+    them is a second model implementation to keep bit-exact."""
+    import ast
+    from pathlib import Path
+
+    import top_produce_etl_spark.operators as ops
+
+    loops = persists = argmaxes = 0
+    for name in ("classifier.py", "langid.py"):
+        tree = ast.parse((Path(ops.__file__).parent / name).read_text())
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.For)
+                and isinstance(node.target, ast.Name)
+                and node.target.id == "_"
+                and ast.unparse(node.iter) == "range(iters)"
+            ):
+                loops += 1
+            elif isinstance(node, ast.Call):
+                fn = node.func
+                fn_name = fn.attr if isinstance(fn, ast.Attribute) else (
+                    fn.id if isinstance(fn, ast.Name) else None
+                )
+                persists += fn_name == "persist_tracked"
+                argmaxes += fn_name == "array_min"
+    assert (loops, persists, argmaxes) == (1, 1, 1)

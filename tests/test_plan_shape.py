@@ -30,9 +30,9 @@ def simple_plan(df) -> str:
 
 def test_flagship_broadcasts_all_dims(spark, sf_dir):
     """Star join: at test SF all four dims broadcast (nation/region
-    by fixed-cardinality hint, customer/part via the size-gated
-    ``maybe_broadcast`` — they fit under the threshold here). The
-    only shuffle-bearing join allowed is lineitem⨝orders."""
+    by fixed-cardinality hint, customer/part by the planner's own
+    size threshold — they fit under it here). The only
+    shuffle-bearing join allowed is lineitem⨝orders."""
     p = plan(get_all_queries()["flagship_top3_region"](spark, sf_dir))
     assert p.count("BroadcastHashJoin") >= 4, p
     assert "CartesianProduct" not in p

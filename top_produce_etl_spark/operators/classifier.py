@@ -19,16 +19,25 @@ across engines, partition counts, and row orders. Same link shape,
 same monotonicity, same [0,1] range; the gradient uses the
 prediction error exactly as logistic regression does.
 
+This module also holds the ONE integer-GD core of every hashed linear
+model in the package: :func:`_hashed_counts` builds the (doc, bucket,
+count) feature relation from any token-array column, and
+:func:`_train_heads` trains K quasi-logistic heads over it in one
+loop. The quality classifier is its one-head case over space tokens;
+the language identifier (operators/langid.py) is its |langs|-head
+case over character n-grams.
+
 Scale design (the 100 TB lens):
-- The (doc, bucket, count) feature relation is built ONCE (one
-  tokenize + one hash-agg) and persisted via the house ``_cache``
-  registry — every GD iteration re-reads it instead of re-deriving
-  the corpus scan (the unigram-surprisal lesson from round 8).
-- Each iteration is: one broadcast join against the (B+1)-row weight
-  relation, one per-doc sum, one per-bucket sum — shuffle width is
-  |docs| once and |buckets| once; NO corpus-sized state ever sits on
-  the driver. The per-iteration collect is the weight vector itself
-  (B+1 rows — model-sized, the k-means/kcenter precedent).
+- The per-doc feature arrays are built ONCE (one tokenize + one
+  hash-agg) and persisted via the house ``_cache`` registry — every
+  GD iteration re-reads them instead of re-deriving the corpus scan
+  (the unigram-surprisal lesson from round 8).
+- Each iteration is one scan of that relation (every head's z and
+  error computed map-side from literal weight arrays) and one
+  |buckets|-wide shuffle for the gradients; NO corpus-sized state
+  ever sits on the driver. The per-iteration collect is the weight
+  vector itself (B+1 rows per head — model-sized, the k-means/kcenter
+  precedent).
 - Buckets use the engine-portable polynomial hash so training is
   oracle-checkable; a production run swaps in xxhash64 (the
   countmin/kmv/dsir fast-twin convention) with the same plan.
@@ -40,7 +49,7 @@ this family is part of the §2.12 beyond-reference surface.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from top_produce_etl_spark.functions.portable_hash import (
@@ -53,25 +62,27 @@ MICRO = 1_000_000
 BIAS_BUCKET = -1
 
 
-def _features(
+def _hashed_counts(
     docs: DataFrame,
     id_col: str,
-    text_col: str,
+    toks: Column,
     n_buckets: int,
     hash_mode: str = "portable",
 ) -> DataFrame:
-    """(id, bucket, c) hashed term counts + one bias row per doc.
-    ``hash_mode="xxhash64"`` is the production bucket hash (one JVM
-    intrinsic per token — the countmin/kmv/dsir fast-twin
-    convention); "portable" is the polynomial hash the DuckDB
-    training oracle can replay."""
+    """(id, bucket, c) hashed counts of the token-array column ``toks``
+    + one bias row per doc — the feature relation of every hashed
+    linear model here (space tokens for the quality classifier,
+    character n-grams for langid). ``hash_mode="xxhash64"`` is the
+    production bucket hash (one JVM intrinsic per token — the
+    countmin/kmv/dsir fast-twin convention); "portable" is the
+    polynomial hash the DuckDB training oracles can replay."""
     # Drop empty tokens (doubled/leading/trailing spaces): Spark would
     # hash '' to bucket 0 while DuckDB's list_sum over an empty range
     # is NULL, silently diverging the bit-exact training oracle on
     # such corpora (round-10 ADVICE fix — filtered on BOTH engines).
-    toks = docs.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.split(F.col(text_col), " ")).alias("tok"),
+    # A char n-gram (n >= 1) is never empty, so langid is unaffected.
+    exploded = docs.select(
+        F.col(id_col).alias("id"), F.explode(toks).alias("tok")
     ).where(F.col("tok") != "")
     if hash_mode == "xxhash64":
         bucket = (
@@ -84,7 +95,7 @@ def _features(
     else:
         raise ValueError(f"unknown hash_mode {hash_mode!r}")
     counts = (
-        toks.select("id", bucket.alias("bucket"))
+        exploded.select("id", bucket.alias("bucket"))
         .groupBy("id", "bucket")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     )
@@ -106,6 +117,105 @@ def _sigma_micro_expr(z_col: str) -> str:
     )
 
 
+def _train_heads(
+    docs: DataFrame,
+    id_col: str,
+    counts: DataFrame,
+    label: Column,
+    targets: list[Column],
+    n_buckets: int,
+    iters: int,
+    lr: tuple[int, int],
+    feats_out: list | None = None,
+) -> list[dict[int, int]]:
+    """The integer-GD core shared by every hashed linear model: trains
+    ``len(targets)`` quasi-logistic heads over the (id, bucket, c)
+    relation ``counts`` in ONE loop and returns one driver-side
+    ``{bucket: w_micro}`` per head. ``label`` is a named per-doc
+    column over ``docs`` persisted beside the feature arrays;
+    ``targets[h]`` is head h's bigint target in micro-units over that
+    column. ``lr`` is a RATIONAL learning rate (num, den) so the
+    weight update stays integer:
+
+        w ← w − (num · Σ_d err_micro_d · x_db) div (den · N)
+
+    Integer sums are exact and commutative, so the trained weights
+    are independent of partitioning — the property that makes the
+    unrolled DuckDB training oracles bit-identical.
+
+    ``feats_out``: pass a list to receive the PERSISTED per-doc
+    relation (id, fx: array<struct<bucket,c>>, label)."""
+    if iters < 1:
+        raise ValueError("iters must be >= 1")
+    lr_num, lr_den = lr
+    # Persisted ONCE as per-doc feature ARRAYS with the label inline:
+    # each iteration then scans this relation exactly once, computes
+    # z and the error map-side from a literal weight array, and pays a
+    # single |buckets|-wide shuffle for the gradient — the minimal
+    # per-iteration plan (an earlier (doc,bucket)-rows formulation
+    # paid an id-keyed join per iteration; at the 5k-doc bench
+    # fixture that was ~2x this loop's wall).
+    feats = persist_tracked(
+        counts.groupBy("id")
+        .agg(F.collect_list(F.struct("bucket", "c")).alias("fx"))
+        .join(docs.select(F.col(id_col).alias("id"), label), "id")
+    )
+    if feats_out is not None:
+        feats_out.append(feats)
+    n_docs = docs.count()
+    heads = range(len(targets))
+    # w_micro per head, driver-side
+    w = [{b: 0 for b in range(-1, n_buckets)} for _ in heads]
+    for _ in range(iters):
+        per_doc = feats
+        for h in heads:
+            # weights enter as a LITERAL ARRAY folded into the
+            # expression tree — no broadcast relation, no extra job
+            # per iteration. Array, not map (guide §1.2 "per-task
+            # work"): the z fold is an interpreted higher-order
+            # lambda, and element_at on a literal map LINEAR-SCANS all
+            # |buckets|+1 keys per feature element, while
+            # element_at(array, bucket+2) is an O(1) index (buckets
+            # are -1..n_buckets-1 by construction, so the 1-based
+            # offset is bucket+2; measured in OPTIMIZATION_r11.md).
+            # Same integer weights, bit-identical training.
+            w_arr = F.array(
+                *[F.lit(w[h][b]) for b in range(-1, n_buckets)]
+            )
+            z = F.aggregate(
+                F.col("fx"),
+                F.lit(0).cast("bigint"),
+                lambda acc, s: acc
+                + s.getField("c")
+                * F.element_at(w_arr, s.getField("bucket") + 2),
+            )
+            per_doc = per_doc.withColumn(f"__z{h}", z).withColumn(
+                f"__e{h}",
+                F.expr(_sigma_micro_expr(f"__z{h}")) - targets[h],
+            )
+        grad = (
+            per_doc.select(
+                F.explode("fx").alias("s"),
+                *[F.col(f"__e{h}") for h in heads],
+            )
+            .groupBy(F.col("s.bucket").alias("bucket"))
+            .agg(
+                *[
+                    F.sum(F.col("s.c") * F.col(f"__e{h}")).alias(f"g{h}")
+                    for h in heads
+                ]
+            )
+            .collect()
+        )
+        step_den = lr_den * n_docs
+        for row in grad:  # |buckets|+1 rows x heads — model-sized
+            for h in heads:
+                step_num = lr_num * row[f"g{h}"]
+                q = abs(step_num) // step_den  # truncate toward zero
+                w[h][row["bucket"]] -= q if step_num >= 0 else -q
+    return w
+
+
 def train_quasi_logreg(
     docs: DataFrame,
     id_col: str,
@@ -118,84 +228,20 @@ def train_quasi_logreg(
 ) -> DataFrame:
     """Train the hashed-feature quasi-logistic classifier; returns
     the model relation (bucket, w_micro) with ``bucket = -1`` the
-    bias. ``label_col`` must be 0/1. ``lr`` is a RATIONAL learning
-    rate (num, den) so the weight update stays integer:
-
-        w ← w − (num · Σ_d err_micro_d · x_db) div (den · N)
-
-    Determinism: integer sums are exact and commutative, so the
-    trained weights are independent of partitioning — the property
-    that makes the DuckDB training oracle
-    (:func:`train_quasi_logreg_oracle_sql`) bit-identical."""
-    spark = docs.sparkSession
-    if iters < 1:
-        raise ValueError("iters must be >= 1")
-    lr_num, lr_den = lr
-    # Persisted ONCE as per-doc feature ARRAYS with the label inline:
-    # each iteration then scans this relation exactly once, computes
-    # z and the error map-side from a literal weight map, and pays a
-    # single |buckets|-wide shuffle for the gradient — the minimal
-    # per-iteration plan (an earlier (doc,bucket)-rows formulation
-    # paid an id-keyed join per iteration; at the 5k-doc bench
-    # fixture that was ~2x this loop's wall).
-    feats = persist_tracked(
-        _features(docs, id_col, text_col, n_buckets, hash_mode)
-        .groupBy("id")
-        .agg(F.collect_list(F.struct("bucket", "c")).alias("fx"))
-        .join(
-            docs.select(
-                F.col(id_col).alias("id"),
-                (F.col(label_col).cast("bigint") * MICRO).alias(
-                    "y_micro"
-                ),
-            ),
-            "id",
-        )
+    bias. ``label_col`` must be 0/1. The one-head case of
+    :func:`_train_heads` (target ``label · 1e6``; ``lr`` the rational
+    learning rate (num, den)), so the model is bit-identical to
+    :func:`train_quasi_logreg_oracle_sql`'s."""
+    counts = _hashed_counts(
+        docs, id_col, F.split(F.col(text_col), " "), n_buckets, hash_mode
     )
-    n_docs = docs.count()
-    w = {b: 0 for b in range(-1, n_buckets)}  # w_micro, driver-side
-    for _ in range(iters):
-        # weights enter as a LITERAL ARRAY folded into the expression
-        # tree — no broadcast relation, no extra job per iteration.
-        # Array, not map (guide §1.2 "per-task work"): the z fold is
-        # an interpreted higher-order lambda, and element_at on a
-        # literal map LINEAR-SCANS all |buckets|+1 keys per feature
-        # element, while element_at(array, bucket+2) is an O(1)
-        # index (buckets are -1..n_buckets-1 by construction, so
-        # the 1-based offset is bucket+2). Same integer weights,
-        # bit-identical training.
-        w_arr = F.array(
-            *[F.lit(w[b]) for b in range(-1, n_buckets)]
-        )
-        z = F.aggregate(
-            F.col("fx"),
-            F.lit(0).cast("bigint"),
-            lambda acc, s: acc
-            + s.getField("c")
-            * F.element_at(w_arr, s.getField("bucket") + 2),
-        )
-        per_doc = feats.withColumn("z_micro", z).withColumn(
-            "err_micro",
-            F.expr(_sigma_micro_expr("z_micro")) - F.col("y_micro"),
-        )
-        grad = (
-            per_doc.select(
-                F.explode("fx").alias("s"), "err_micro"
-            )
-            .groupBy(F.col("s.bucket").alias("bucket"))
-            .agg(
-                F.sum(F.col("s.c") * F.col("err_micro")).alias("g")
-            )
-            .collect()
-        )
-        for row in grad:  # |buckets|+1 rows — model-sized
-            step_num = lr_num * row["g"]
-            step_den = lr_den * n_docs
-            q = abs(step_num) // step_den  # truncate toward zero
-            w[row["bucket"]] -= q if step_num >= 0 else -q
-    return spark.createDataFrame(
-        [(b, wm) for b, wm in sorted(w.items())],
-        "bucket int, w_micro bigint",
+    y_micro = (F.col(label_col).cast("bigint") * MICRO).alias("y_micro")
+    (w,) = _train_heads(
+        docs, id_col, counts, y_micro, [F.col("y_micro")], n_buckets,
+        iters, lr,
+    )
+    return docs.sparkSession.createDataFrame(
+        sorted(w.items()), "bucket int, w_micro bigint"
     )
 
 
@@ -212,7 +258,9 @@ def score_quasi_logreg(
     pred = 1 iff score_micro >= 500000. One broadcast join + one
     per-doc sum — scan-speed inference, the shape a 100 TB quality
     sweep needs."""
-    feats = _features(docs, id_col, text_col, n_buckets, hash_mode)
+    feats = _hashed_counts(
+        docs, id_col, F.split(F.col(text_col), " "), n_buckets, hash_mode
+    )
     z = (
         feats.join(F.broadcast(model), "bucket")
         .groupBy("id")

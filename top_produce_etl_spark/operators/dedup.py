@@ -151,6 +151,38 @@ def shingle_table(
     return sh
 
 
+def _pair_overlaps(
+    df: DataFrame, id_col: str, text_col: str, k: int, max_df: int | None
+) -> DataFrame:
+    """(a_id, b_id, common, na, nb) for every doc pair a<b sharing a
+    k-word shingle: the common-shingle count and both set sizes — the
+    core :func:`jaccard_pairs` and :func:`containment_pairs` score.
+    The exploded shingle table is persisted (it feeds sizes and both
+    self-join sides) before ``max_df`` drops stop shingles."""
+    sh = persist_tracked(
+        shingle_sets(df, id_col, text_col, k).select(
+            F.col(id_col), F.explode("sset").alias("shingle")
+        )
+    )
+    if max_df is not None:
+        sh = _drop_stop_shingles(sh, max_df)
+    # sizes over SURVIVING shingles (consistent under max_df); the
+    # groupBy ships ≤ |docs|·partitions partially-combined rows.
+    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
+
+    a = sh.select(F.col(id_col).alias("a_id"), "shingle")
+    b = sh.select(F.col(id_col).alias("b_id"), "shingle")
+    common = (
+        a.join(b, "shingle")
+        .filter(F.col("a_id") < F.col("b_id"))
+        .groupBy("a_id", "b_id")
+        .agg(F.count(F.lit(1)).alias("common"))
+    )
+    na = sizes.select(F.col(id_col).alias("a_id"), F.col("n").alias("na"))
+    nb = sizes.select(F.col(id_col).alias("b_id"), F.col("n").alias("nb"))
+    return common.join(na, "a_id").join(nb, "b_id")
+
+
 def jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -174,30 +206,8 @@ def jaccard_pairs(
     partitions for the self-join. With persist the join input stays
     round-robin-partitioned, so the shuffle spreads hot shingles'
     rows and AQE skew-join handling stays available."""
-    sh = persist_tracked(
-        shingle_sets(df, id_col, text_col, k).select(
-            F.col(id_col), F.explode("sset").alias("shingle")
-        )
-    )
-    if max_df is not None:
-        sh = _drop_stop_shingles(sh, max_df)
-    # sizes over SURVIVING shingles (consistent under max_df); the
-    # groupBy ships ≤ |docs|·partitions partially-combined rows.
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
-
-    a = sh.select(F.col(id_col).alias("a_id"), "shingle")
-    b = sh.select(F.col(id_col).alias("b_id"), "shingle")
-    common = (
-        a.join(b, "shingle")
-        .filter(F.col("a_id") < F.col("b_id"))
-        .groupBy("a_id", "b_id")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    na = sizes.select(F.col(id_col).alias("a_id"), F.col("n").alias("na"))
-    nb = sizes.select(F.col(id_col).alias("b_id"), F.col("n").alias("nb"))
     return (
-        common.join(na, "a_id")
-        .join(nb, "b_id")
+        _pair_overlaps(df, id_col, text_col, k, max_df)
         .withColumn(
             "jaccard",
             F.col("common").cast("double")
@@ -1050,26 +1060,7 @@ def containment_pairs(
     directions afterward (a |pairs|-row map, not a second join).
     Output: (src_id, dst_id, containment) for src != dst.
     """
-    sh = persist_tracked(
-        shingle_sets(df, id_col, text_col, k).select(
-            F.col(id_col), F.explode("sset").alias("shingle")
-        )
-    )
-    if max_df is not None:
-        sh = _drop_stop_shingles(sh, max_df)
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
-
-    a = sh.select(F.col(id_col).alias("a_id"), "shingle")
-    b = sh.select(F.col(id_col).alias("b_id"), "shingle")
-    common = (
-        a.join(b, "shingle")
-        .filter(F.col("a_id") < F.col("b_id"))
-        .groupBy("a_id", "b_id")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    na = sizes.select(F.col(id_col).alias("a_id"), F.col("n").alias("na"))
-    nb = sizes.select(F.col(id_col).alias("b_id"), F.col("n").alias("nb"))
-    sized = common.join(na, "a_id").join(nb, "b_id")
+    sized = _pair_overlaps(df, id_col, text_col, k, max_df)
     fwd = sized.select(
         F.col("a_id").alias("src_id"),
         F.col("b_id").alias("dst_id"),

@@ -34,7 +34,7 @@ fully oracle-checked.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from top_produce_etl_spark.functions.portable_hash import (
@@ -52,6 +52,19 @@ def _L(col):  # micro-nat fixed-point log (same contract as retrieval.py)
     return F.round(F.log(col.cast("double")) * INFO_SCALE).cast("bigint")
 
 
+def _tok_bucket(buckets: int, hasher: str) -> Column:
+    """The bucket of the exploded ``__tok`` column: "portable" (oracle
+    path) or "xxhash64" (production path — one fused JVM intrinsic
+    per token; a different but equally valid bucketing, so scores
+    shift slightly while the selection signal is preserved —
+    parity-tested)."""
+    if hasher == "xxhash64":
+        return F.pmod(F.xxhash64("__tok"), F.lit(buckets))
+    if hasher == "portable":
+        return composite_hash_col("__tok") % buckets
+    raise ValueError(f"unknown hasher: {hasher!r}")
+
+
 def _doc_buckets(
     docs: DataFrame, id_col: str, text_col: str, buckets: int,
     hasher: str = "portable",
@@ -64,20 +77,12 @@ def _doc_buckets(
     DuckDB silently yields NULL), so the only cross-engine-safe
     contract is to drop them symmetrically.
 
-    ``hasher``: "portable" (oracle path) or "xxhash64" (production
-    path — one fused JVM intrinsic per token; a different but
-    equally valid bucketing, so scores shift slightly while the
-    selection signal is preserved — parity-tested)."""
+    ``hasher``: see :func:`_tok_bucket`."""
+    bucket = _tok_bucket(buckets, hasher)
     tok = docs.select(
         F.col(id_col),
         F.explode(F.split(F.col(text_col), " ")).alias("__tok"),
     ).where(F.col("__tok") != "")
-    if hasher == "xxhash64":
-        bucket = F.pmod(F.xxhash64("__tok"), F.lit(buckets))
-    elif hasher == "portable":
-        bucket = composite_hash_col("__tok") % buckets
-    else:
-        raise ValueError(f"unknown hasher: {hasher!r}")
     return tok.select(F.col(id_col), bucket.alias("bucket"))
 
 
@@ -100,12 +105,7 @@ def bucket_log_ratios(
     join back to the corpus on doc id (that would be a second
     data-sized shuffle purely to re-attach a predicate the scan
     already evaluates)."""
-    if hasher == "xxhash64":
-        bucket = F.pmod(F.xxhash64("__tok"), F.lit(buckets))
-    elif hasher == "portable":
-        bucket = composite_hash_col("__tok") % buckets
-    else:
-        raise ValueError(f"unknown hasher: {hasher!r}")
+    bucket = _tok_bucket(buckets, hasher)
     tb = (
         docs.select(
             F.expr(target_pred).alias("__is_tgt"),

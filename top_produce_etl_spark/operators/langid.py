@@ -5,18 +5,15 @@ as a given fixture column; CCNet-style curation needs the engine to
 PRODUCE it. This module trains a hashed char-n-gram one-vs-rest
 quasi-logistic language classifier entirely inside the engine —
 the fastText-langid shape (char n-grams → hashed buckets → linear
-heads) on the round-9 integer-exact trainer mechanics
-(operators/classifier.py): micro-unit int64 weights, rational
-learning rate with truncated division, fast integer sigmoid — so
-the trained model is independent of partitioning and the DuckDB
-oracle (iterations unrolled as MATERIALIZED CTEs) hash-matches it
-bit for bit.
-
-Multi-head training in ONE loop: all |langs| binary heads share the
-persisted per-doc feature arrays; each iteration computes every
-head's z map-side from literal weight maps and pays a single
-|buckets|-wide shuffle producing |langs| gradient columns — K heads
-at ~the per-iteration cost of one (the r9 loop's plan, widened).
+heads). It is the |langs|-head case of the shared integer-GD core in
+operators/classifier.py (:func:`_hashed_counts` over char n-grams,
+:func:`_train_heads` with one head per language): micro-unit int64
+weights, rational learning rate with truncated division, fast
+integer sigmoid — so the trained model is independent of
+partitioning and the DuckDB oracle (iterations unrolled as
+MATERIALIZED CTEs) hash-matches it bit for bit. All heads share the
+persisted per-doc feature arrays and one |buckets|-wide gradient
+shuffle per iteration — K heads at ~the per-iteration cost of one.
 Scoring is pure column expressions over one broadcast-model join +
 one per-doc aggregate: scan-speed, the shape a 100 TB language
 sweep needs; argmax is deterministic (z desc, then lang asc).
@@ -33,19 +30,19 @@ confusion matrix has real diagonal structure for the probe gate.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from top_produce_etl_spark.functions.portable_hash import (
     portable_hash_spark_sql,
     portable_hash_sql,
 )
-from top_produce_etl_spark.operators._cache import persist_tracked
 from top_produce_etl_spark.operators.classifier import (
     BIAS_BUCKET,
     MICRO,
     _duck_sigma,
-    _sigma_micro_expr,
+    _hashed_counts,
+    _train_heads,
 )
 
 # Per-language lexicons for the synthetic corpus: high-frequency
@@ -151,10 +148,10 @@ def _char_features(
     hash_mode: str = "portable",
 ) -> DataFrame:
     """(id, bucket, c) hashed char-n-gram counts + one bias row per
-    doc — the classifier _features contract with character n-grams
-    instead of space tokens. Texts shorter than ``n`` contribute only
-    their bias row (the sequence guard: Spark's sequence(1, 0) is
-    DESCENDING, not empty)."""
+    doc — the shared :func:`_hashed_counts` builder over character
+    n-grams instead of space tokens. Texts shorter than ``n``
+    contribute only their bias row (the sequence guard: Spark's
+    sequence(1, 0) is DESCENDING, not empty)."""
     t = F.col(text_col)
     grams = F.when(
         F.length(t) >= n,
@@ -163,30 +160,7 @@ def _char_features(
             lambda i: t.substr(i, F.lit(n)),
         ),
     ).otherwise(F.array().cast("array<string>"))
-    toks = docs.select(
-        F.col(id_col).alias("id"), F.explode(grams).alias("tok")
-    )
-    if hash_mode == "xxhash64":
-        bucket = (
-            F.pmod(F.xxhash64(F.col("tok")), F.lit(n_buckets))
-        ).cast("int")
-    elif hash_mode == "portable":
-        bucket = (
-            F.expr(portable_hash_spark_sql("tok")) % F.lit(n_buckets)
-        ).cast("int")
-    else:
-        raise ValueError(f"unknown hash_mode {hash_mode!r}")
-    counts = (
-        toks.select("id", bucket.alias("bucket"))
-        .groupBy("id", "bucket")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-    )
-    bias = docs.select(
-        F.col(id_col).alias("id"),
-        F.lit(BIAS_BUCKET).cast("int").alias("bucket"),
-        F.lit(1).cast("bigint").alias("c"),
-    )
-    return counts.unionByName(bias)
+    return _hashed_counts(docs, id_col, grams, n_buckets, hash_mode)
 
 
 def _feats_cte_sql(
@@ -235,97 +209,61 @@ def train_langid(
     until the caller's ``pipeline_session`` exits, so a plan that
     reads it must be materialized inside that scope.
 
-    Per iteration: ONE scan of the persisted per-doc feature arrays
-    (every head's z and error computed map-side from literal weight
-    maps), ONE |buckets|-wide shuffle whose aggregate carries |langs|
-    gradient columns, one model-sized collect. Integer arithmetic
-    end to end — the trained weights hash-match
-    :func:`train_langid_oracle_sql` bit for bit."""
-    spark = docs.sparkSession
-    if iters < 1:
-        raise ValueError("iters must be >= 1")
+    The |langs|-head case of :func:`_train_heads` (head li's target
+    is 1e6 iff the doc's language is langs[li]): per iteration ONE
+    scan of the persisted per-doc feature arrays, ONE |buckets|-wide
+    shuffle whose aggregate carries |langs| gradient columns, one
+    model-sized collect. Integer arithmetic end to end — the trained
+    weights hash-match :func:`train_langid_oracle_sql` bit for bit."""
     if len(set(langs)) != len(langs):
         raise ValueError("duplicate langs")
-    lr_num, lr_den = lr
     lang_idx = F.array(*[F.lit(s) for s in langs])
-    feats = persist_tracked(
-        _char_features(docs, id_col, text_col, n, n_buckets, hash_mode)
-        .groupBy("id")
-        .agg(F.collect_list(F.struct("bucket", "c")).alias("fx"))
-        .join(
-            docs.select(
-                F.col(id_col).alias("id"),
-                (F.array_position(lang_idx, F.col(lang_col)) - 1)
-                .cast("int")
-                .alias("y_idx"),
-            ),
-            "id",
-        )
+    y_idx = (
+        (F.array_position(lang_idx, F.col(lang_col)) - 1)
+        .cast("int")
+        .alias("y_idx")
     )
-    if feats_out is not None:
-        feats_out.append(feats)
-    n_docs = docs.count()
-    w = {
-        (li, b): 0
+    targets = [
+        F.when(F.col("y_idx") == li, F.lit(MICRO))
+        .otherwise(F.lit(0))
+        .cast("bigint")
         for li in range(len(langs))
-        for b in range(-1, n_buckets)
-    }
-    for _ in range(iters):
-        per_doc = feats
-        for li in range(len(langs)):
-            # literal ARRAY, not map: element_at on a literal map
-            # linear-scans all |buckets|+1 keys per feature element
-            # inside the interpreted fold; the array index is O(1)
-            # (buckets -1..n_buckets-1 → 1-based offset bucket+2).
-            # Same integer weights — training stays bit-identical
-            # to the unrolled DuckDB oracle (guide §1.2 per-task
-            # work; measured in OPTIMIZATION_r11.md).
-            w_arr = F.array(
-                *[F.lit(w[(li, b)]) for b in range(-1, n_buckets)]
-            )
-            z = F.aggregate(
-                F.col("fx"),
-                F.lit(0).cast("bigint"),
-                lambda acc, s: acc
-                + s.getField("c")
-                * F.element_at(w_arr, s.getField("bucket") + 2),
-            )
-            per_doc = per_doc.withColumn(f"__z{li}", z).withColumn(
-                f"__e{li}",
-                F.expr(_sigma_micro_expr(f"__z{li}"))
-                - F.when(F.col("y_idx") == li, F.lit(MICRO))
-                .otherwise(F.lit(0))
-                .cast("bigint"),
-            )
-        grad = (
-            per_doc.select(
-                F.explode("fx").alias("s"),
-                *[F.col(f"__e{li}") for li in range(len(langs))],
-            )
-            .groupBy(F.col("s.bucket").alias("bucket"))
-            .agg(
-                *[
-                    F.sum(F.col("s.c") * F.col(f"__e{li}")).alias(
-                        f"g{li}"
-                    )
-                    for li in range(len(langs))
-                ]
-            )
-            .collect()
-        )
-        for row in grad:  # |buckets|+1 rows x |langs| — model-sized
-            for li in range(len(langs)):
-                step_num = lr_num * row[f"g{li}"]
-                step_den = lr_den * n_docs
-                q = abs(step_num) // step_den
-                w[(li, row["bucket"])] -= q if step_num >= 0 else -q
-    return spark.createDataFrame(
+    ]
+    w = _train_heads(
+        docs, id_col,
+        _char_features(docs, id_col, text_col, n, n_buckets, hash_mode),
+        y_idx, targets, n_buckets, iters, lr, feats_out,
+    )
+    return docs.sparkSession.createDataFrame(
         [
-            (langs[li], b, wm)
-            for (li, b), wm in sorted(w.items())
+            (lang, b, wm)
+            for lang, wh in zip(langs, w)
+            for b, wm in sorted(wh.items())
         ],
         "lang string, bucket int, w_micro bigint",
     )
+
+
+def _argmax_lang(langs: tuple[str, ...]) -> list[Column]:
+    """(pred_lang, z_micro) over the per-head ``__z_{lang}`` columns:
+    array_min over (−z, lang) structs — deterministic (highest z,
+    ties to the lexicographically first language), a pure column
+    expression, no second shuffle."""
+    best = F.array_min(
+        F.array(
+            *[
+                F.struct(
+                    (-F.col(f"__z_{s}")).alias("nz"),
+                    F.lit(s).alias("lang"),
+                )
+                for s in langs
+            ]
+        )
+    )
+    return [
+        best.getField("lang").alias("pred_lang"),
+        (-best.getField("nz")).alias("z_micro"),
+    ]
 
 
 def score_langid(
@@ -341,9 +279,7 @@ def score_langid(
 ) -> DataFrame:
     """(id, pred_lang, z_micro): every head scored in ONE broadcast
     join + ONE per-doc aggregate with |langs| conditional sums;
-    argmax via array_min over (−z, lang) structs — deterministic
-    (highest z, ties to the lexicographically first language), pure
-    column expressions, no second shuffle.
+    argmax by :func:`_argmax_lang`.
 
     ``feats``: optional precomputed (id, bucket, c) feature relation
     for the SAME docs/n/n_buckets/hash_mode — e.g. the trainer's
@@ -370,22 +306,7 @@ def score_langid(
             ]
         )
     )
-    best = F.array_min(
-        F.array(
-            *[
-                F.struct(
-                    (-F.col(f"__z_{s}")).alias("nz"),
-                    F.lit(s).alias("lang"),
-                )
-                for s in langs
-            ]
-        )
-    )
-    return zs.select(
-        "id",
-        best.getField("lang").alias("pred_lang"),
-        (-best.getField("nz")).alias("z_micro"),
-    )
+    return zs.select("id", *_argmax_lang(langs))
 
 
 def train_langid_oracle_sql(
@@ -554,22 +475,8 @@ def score_langid_expr(
         *[F.col(c) for c in extra_cols],
         *zs,
     )
-    best = F.array_min(
-        F.array(
-            *[
-                F.struct(
-                    (-F.col(f"__z_{s}")).alias("nz"),
-                    F.lit(s).alias("lang"),
-                )
-                for s in langs
-            ]
-        )
-    )
     return scored.select(
-        "id",
-        *[F.col(c) for c in extra_cols],
-        best.getField("lang").alias("pred_lang"),
-        (-best.getField("nz")).alias("z_micro"),
+        "id", *[F.col(c) for c in extra_cols], *_argmax_lang(langs)
     )
 
 
